@@ -1,0 +1,3 @@
+"""Benchmark of the extraction engine: seeded workloads, end-to-end and
+per-layer metrics. Run ``python3 perfbench/run.py --help`` from the
+repository root."""
