@@ -1,15 +1,18 @@
-"""The extraction operator: Arrow-batched mapInPandas over span documents.
+"""The extraction operator: one Arrow-batched mapInArrow over span documents.
 
 This is the Spark face of the per-document pure function (SURVEY.md §3
 "Spark lifecycle"): scan (doc_id, spans) → native doc_bytes pre-pass →
-salted, size-aware repartition → mapInPandas(extract_batch) → extracted
-rows (doc_id, spans_out, meta, metrics, doc_bytes, error).
+salted repartition → mapInArrow(extract_batch_rows) → extracted rows
+(doc_id, spans_out, meta, metrics, doc_bytes, error, elapsed_ms).
 
 Design notes for 100 TB scale:
 - the only shuffle is the explicit skew repartition; extraction itself is
   map-only and the metrics rollup is a partial-agg hash aggregate;
-- all per-doc work happens JVM→Arrow→pandas batch-wise, never per-row
-  Python (input_hint requirement);
+- all per-doc work happens JVM→Arrow→Python batch-wise, never per-row
+  Python UDF calls (input_hint requirement);
+- ``extract_batch_rows`` is the one per-document loop: the plain
+  extraction and ``render.extract_and_render`` both reach it through the
+  same Arrow adapter;
 - failures never kill the job: per-doc try/except emits an error row and
   the error count is a first-class metric;
 - docs above MAX_DOC_BYTES are refused before parsing (skew.py).
@@ -19,13 +22,12 @@ from __future__ import annotations
 
 import sys
 import time
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..readability.extract import ReadabilityOptions
-from ..schemas import EXTRACTED_SCHEMA
+from ..schemas import EXTRACTED_AND_RENDERED_SCHEMA, EXTRACTED_SCHEMA
 from ..plans.skew import MAX_DOC_BYTES, skew_partitioned, with_doc_bytes
 
 __all__ = ["extract_documents", "extract_batch_rows", "metrics_rollup"]
@@ -33,33 +35,6 @@ __all__ = ["extract_documents", "extract_batch_rows", "metrics_rollup"]
 # deep DOM recursion (walkers + html.parser) needs headroom beyond the
 # 1000-frame default; bumped once per executor worker
 _RECURSION_LIMIT = 20000
-
-
-def _row_for_error(doc_id: str, doc_bytes: int, error: str) -> dict:
-    return {
-        "doc_id": doc_id,
-        "spans_out": [],
-        "meta": {
-            "title": "",
-            "byline": "",
-            "page_type": "error",
-            "node_count": 0,
-        },
-        "metrics": {
-            "candidate_count": 0,
-            "pruned_nodes": 0,
-            "prune_ratio": 0.0,
-            "top_score": 0.0,
-            "link_density": 0.0,
-            "is_probably_content": False,
-        },
-        "doc_bytes": doc_bytes,
-        "error": error,
-        "elapsed_ms": 0.0,
-    }
-
-
-_EMPTY_RENDER = {"html": "", "markdown": "", "text": "", "metadata_json": ""}
 
 
 def extract_batch_rows(
@@ -70,12 +45,16 @@ def extract_batch_rows(
     max_doc_bytes: int = MAX_DOC_BYTES,
     render: bool = False,
 ) -> list[dict]:
-    """Extract one Arrow batch; pure Python, testable without Spark.
+    """Extract one batch of documents; pure Python, testable without Spark.
 
+    Every document yields exactly one row. The size cap is checked first
+    (over-cap docs are never reassembled), then malformed spans (a null
+    array, null span entries or null offsets), then any exception from
+    extraction — each becomes an error row with ``page_type='error'``.
     ``render=True`` additionally produces the CLI sink formats (html /
     markdown / text / metadata_json) from the SAME parsed article, so a
-    pipeline wanting extraction + renderings pays the parse+score UDF
-    once instead of twice (render.extract_and_render wraps this)."""
+    pipeline wanting extraction + renderings pays the parse+score once
+    (render.extract_and_render); error rows carry empty renderings."""
     # imported lazily so the module imports fast on the driver
     from ..readability.instrumented import extract_with_metrics
     from ..spans import element_to_spans, spans_to_html
@@ -86,297 +65,109 @@ def extract_batch_rows(
     if sys.getrecursionlimit() < _RECURSION_LIMIT:
         sys.setrecursionlimit(_RECURSION_LIMIT)
 
-    def error_row(doc_id, doc_bytes, msg):
-        row = _row_for_error(doc_id, doc_bytes, msg)
-        if render:
-            row.update(_EMPTY_RENDER)
-        return row
-
     opts = options or ReadabilityOptions(forced_page_type="")
     out: list[dict] = []
     for doc_id, spans, doc_bytes in zip(doc_ids, spans_lists, doc_bytes_list):
-        doc_bytes = int(doc_bytes) if doc_bytes is not None else 0
-        if spans is None or any(
+        t0 = time.perf_counter()
+        doc_bytes = int(doc_bytes or 0)
+        row = {
+            "doc_id": doc_id,
+            "spans_out": [],
+            "meta": {"title": "", "byline": "", "page_type": "error",
+                     "node_count": 0},
+            "metrics": {
+                "candidate_count": 0, "pruned_nodes": 0,
+                "prune_ratio": 0.0, "top_score": 0.0,
+                "link_density": 0.0, "is_probably_content": False,
+            },
+            "doc_bytes": doc_bytes,
+            "error": None,
+        }
+        if render:
+            row.update(html="", markdown="", text="", metadata_json="")
+        if doc_bytes > max_doc_bytes:
+            row["error"] = f"doc_bytes {doc_bytes} > cap {max_doc_bytes}"
+        elif spans is None or any(
             s is None or s.get("offset") is None for s in spans
         ):
-            out.append(error_row(doc_id, doc_bytes, "null spans"))
-            continue
-        if doc_bytes > max_doc_bytes:
-            out.append(
-                error_row(
-                    doc_id, doc_bytes, f"doc_bytes {doc_bytes} > cap {max_doc_bytes}"
-                )
-            )
-            continue
-        try:
-            t0 = time.perf_counter()
-            html = spans_to_html(spans)
-            article, metrics = extract_with_metrics(html, opts)
-            out.append(
-                {
-                    **(render_article(article) if render else {}),
-                    "doc_id": doc_id,
-                    "spans_out": element_to_spans(article.root),
-                    "meta": {
+            row["error"] = "null spans"
+        else:
+            try:
+                article, m = extract_with_metrics(spans_to_html(spans), opts)
+                # built in full before update: a failing render leaves the
+                # error-row defaults untouched
+                row.update(
+                    spans_out=element_to_spans(article.root),
+                    meta={
                         "title": article.title,
                         "byline": article.byline,
                         "page_type": article.page_type,
                         "node_count": article.node_count,
                     },
-                    "metrics": {
-                        "candidate_count": metrics.candidate_count,
-                        "pruned_nodes": metrics.pruned_nodes,
-                        "prune_ratio": metrics.prune_ratio,
-                        "top_score": metrics.top_score,
-                        "link_density": metrics.link_density,
-                        "is_probably_content": metrics.is_probably_content,
+                    metrics={
+                        "candidate_count": m.candidate_count,
+                        "pruned_nodes": m.pruned_nodes,
+                        "prune_ratio": m.prune_ratio,
+                        "top_score": m.top_score,
+                        "link_density": m.link_density,
+                        "is_probably_content": m.is_probably_content,
                     },
-                    "doc_bytes": doc_bytes,
-                    "error": None,
-                    "elapsed_ms": round((time.perf_counter() - t0) * 1000, 3),
-                }
-            )
-        except Exception as exc:  # noqa: BLE001 — never kill the job
-            out.append(
-                error_row(doc_id, doc_bytes, f"{type(exc).__name__}: {exc}")
-            )
+                    **(render_article(article) if render else {}),
+                )
+            except Exception as exc:  # noqa: BLE001 — never kill the job
+                row["error"] = f"{type(exc).__name__}: {exc}"
+        row["elapsed_ms"] = round((time.perf_counter() - t0) * 1000, 3)
+        out.append(row)
     return out
 
 
-def _make_batch_fn(options: Optional[ReadabilityOptions], max_doc_bytes: int):
-    def extract_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+def _arrow_batches(
+    options: Optional[ReadabilityOptions],
+    max_doc_bytes: int,
+    render: bool = False,
+):
+    """The mapInArrow adapter: (doc_id, spans, doc_bytes) record batches
+    in, one ``extract_batch_rows`` call per batch, its rows out."""
+
+    def run(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        out_schema = to_arrow_schema(
+            EXTRACTED_AND_RENDERED_SCHEMA if render else EXTRACTED_SCHEMA
+        )
+        for batch in batches:
             rows = extract_batch_rows(
-                pdf["doc_id"].tolist(),
-                pdf["spans"].tolist(),
-                pdf["doc_bytes"].tolist(),
+                batch.column("doc_id").to_pylist(),
+                batch.column("spans").to_pylist(),
+                batch.column("doc_bytes").to_pylist(),
                 options,
                 max_doc_bytes,
+                render,
             )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "spans_out",
-                    "meta",
-                    "metrics",
-                    "doc_bytes",
-                    "error",
-                    "elapsed_ms",
-                ],
-            )
+            yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
 
-    return extract_batches
+    return run
 
 
-# ---------------------------------------------------------------------------
-# Arrow fast path: decode spans straight from the Arrow child arrays and
-# emit spans_out as flat arrays + offsets. The pandas path materializes one
-# Python dict per span on both sides of the UDF — for a 5 MiB document with
-# thousands of spans that conversion cost ~6× the extraction itself
-# (measured: identity mapInPandas on 29 giant docs = 16.5 s; the whole
-# extraction via mapInArrow = a third of the mapInPandas wall time).
-# ---------------------------------------------------------------------------
-
-def _arrow_out_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("doc_id", pa.string()),
-            (
-                "spans_out",
-                pa.list_(
-                    pa.struct(
-                        [
-                            ("kind", pa.string()),
-                            ("text", pa.string()),
-                            ("media_ref", pa.string()),
-                            ("order", pa.int32()),
-                        ]
-                    )
-                ),
-            ),
-            (
-                "meta",
-                pa.struct(
-                    [
-                        ("title", pa.string()),
-                        ("byline", pa.string()),
-                        ("page_type", pa.string()),
-                        ("node_count", pa.int32()),
-                    ]
-                ),
-            ),
-            (
-                "metrics",
-                pa.struct(
-                    [
-                        ("candidate_count", pa.int32()),
-                        ("pruned_nodes", pa.int32()),
-                        ("prune_ratio", pa.float64()),
-                        ("top_score", pa.float64()),
-                        ("link_density", pa.float64()),
-                        ("is_probably_content", pa.bool_()),
-                    ]
-                ),
-            ),
-            ("doc_bytes", pa.int64()),
-            ("error", pa.string()),
-            ("elapsed_ms", pa.float64()),
-        ]
+def _map_documents(
+    df: DataFrame,
+    options: Optional[ReadabilityOptions],
+    num_partitions: Optional[int],
+    max_doc_bytes: int,
+    repartition: bool = True,
+    render: bool = False,
+) -> DataFrame:
+    """The plan of extract_documents and render.extract_and_render:
+    doc_bytes pre-pass → salted repartition → one mapInArrow."""
+    df = with_doc_bytes(df)
+    if repartition:
+        num = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+        df = skew_partitioned(df, num)
+    return df.select("doc_id", "spans", "doc_bytes").mapInArrow(
+        _arrow_batches(options, max_doc_bytes, render),
+        EXTRACTED_AND_RENDERED_SCHEMA if render else EXTRACTED_SCHEMA,
     )
-
-
-def _make_arrow_fn(options: Optional[ReadabilityOptions], max_doc_bytes: int):
-    def extract_batches(batches):
-        import pyarrow as pa
-
-        from ..readability.instrumented import extract_with_metrics
-        from ..spans import element_to_spans, media_placeholder
-
-        if sys.getrecursionlimit() < _RECURSION_LIMIT:
-            sys.setrecursionlimit(_RECURSION_LIMIT)
-        opts = options or ReadabilityOptions(forced_page_type="")
-        out_schema = _arrow_out_schema()
-        span_struct = out_schema.field("spans_out").type.value_type
-
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            byte_sizes = batch.column("doc_bytes").to_pylist()
-            htmls = None
-            if "html" in batch.schema.names:
-                # native-reassembly path: the JVM already sorted and
-                # concatenated the spans — one string per doc
-                htmls = batch.column("html").to_pylist()
-            else:
-                lst = batch.column("spans")
-                if lst.offset != 0:  # defensive: sliced arrays, rare
-                    lst = pa.concat_arrays([lst])
-                offsets = lst.offsets.to_pylist()
-                valids = lst.is_valid().to_pylist()
-                vals = lst.values
-                kinds = vals.field("kind").to_pylist()
-                texts = vals.field("text").to_pylist()
-                refs = vals.field("media_ref").to_pylist()
-                offs = vals.field("offset").to_pylist()
-                # struct-level validity: field() ignores it, so a null
-                # span struct whose child offset slot happens to hold a
-                # non-null value (possible in parquet from non-Spark
-                # writers) would otherwise bypass the null-spans check
-                struct_valids = vals.is_valid().to_pylist()
-
-            n = len(doc_ids)
-            metas, metricses, errors, elapsed = [], [], [], []
-            flat_kind: list = []
-            flat_text: list = []
-            flat_ref: list = []
-            flat_order: list = []
-            out_offsets = [0]
-
-            for i in range(n):
-                doc_bytes = int(byte_sizes[i] or 0)
-                t0 = time.perf_counter()
-                err = None
-                spans_out: list = []
-                meta = {"title": "", "byline": "", "page_type": "error",
-                        "node_count": 0}
-                metrics = {
-                    "candidate_count": 0, "pruned_nodes": 0,
-                    "prune_ratio": 0.0, "top_score": 0.0,
-                    "link_density": 0.0, "is_probably_content": False,
-                }
-                if doc_bytes > max_doc_bytes:
-                    # checked first: the native path nulls over-cap html
-                    # without reassembling, and the cap message must win
-                    err = f"doc_bytes {doc_bytes} > cap {max_doc_bytes}"
-                elif (
-                    (htmls[i] is None)
-                    if htmls is not None
-                    else (
-                        not valids[i]
-                        # malformed entries: null span structs or null
-                        # offsets → error row, matching the other paths
-                        or any(
-                            offs[j] is None or not struct_valids[j]
-                            for j in range(offsets[i], offsets[i + 1])
-                        )
-                    )
-                ):
-                    err = "null spans"
-                else:
-                    try:
-                        if htmls is not None:
-                            html = htmls[i]
-                        else:
-                            s, e = offsets[i], offsets[i + 1]
-                            order = sorted(range(s, e), key=lambda j: offs[j])
-                            html = "".join(
-                                media_placeholder(refs[j] or "", texts[j] or "")
-                                if kinds[j] == "media"
-                                else (texts[j] or "")
-                                for j in order
-                            )
-                        article, m = extract_with_metrics(html, opts)
-                        spans_out = element_to_spans(article.root)
-                        meta = {
-                            "title": article.title,
-                            "byline": article.byline,
-                            "page_type": article.page_type,
-                            "node_count": article.node_count,
-                        }
-                        metrics = {
-                            "candidate_count": m.candidate_count,
-                            "pruned_nodes": m.pruned_nodes,
-                            "prune_ratio": m.prune_ratio,
-                            "top_score": m.top_score,
-                            "link_density": m.link_density,
-                            "is_probably_content": m.is_probably_content,
-                        }
-                    except Exception as exc:  # noqa: BLE001 — never kill the job
-                        err = f"{type(exc).__name__}: {exc}"
-                        spans_out = []
-                for s_out in spans_out:
-                    flat_kind.append(s_out["kind"])
-                    flat_text.append(s_out["text"])
-                    flat_ref.append(s_out["media_ref"])
-                    flat_order.append(s_out["order"])
-                out_offsets.append(len(flat_kind))
-                metas.append(meta)
-                metricses.append(metrics)
-                errors.append(err)
-                elapsed.append(round((time.perf_counter() - t0) * 1000, 3))
-
-            spans_out_arr = pa.ListArray.from_arrays(
-                pa.array(out_offsets, pa.int32()),
-                pa.StructArray.from_arrays(
-                    [
-                        pa.array(flat_kind, pa.string()),
-                        pa.array(flat_text, pa.string()),
-                        pa.array(flat_ref, pa.string()),
-                        pa.array(flat_order, pa.int32()),
-                    ],
-                    fields=list(span_struct),
-                ),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(doc_ids, pa.string()),
-                    spans_out_arr,
-                    pa.array(metas, out_schema.field("meta").type),
-                    pa.array(metricses, out_schema.field("metrics").type),
-                    pa.array(
-                        [int(b or 0) for b in byte_sizes], pa.int64()
-                    ),
-                    pa.array(errors, pa.string()),
-                    pa.array(elapsed, pa.float64()),
-                ],
-                schema=out_schema,
-            )
-
-    return extract_batches
 
 
 def extract_documents(
@@ -385,50 +176,15 @@ def extract_documents(
     num_partitions: Optional[int] = None,
     max_doc_bytes: int = MAX_DOC_BYTES,
     repartition: bool = True,
-    use_arrow: bool = True,
-    native_reassembly: bool = False,
 ) -> DataFrame:
     """documents(doc_id, spans) → extracted(doc_id, spans_out, meta, metrics,
     doc_bytes, error, elapsed_ms).
 
     ``repartition=False`` keeps the input partitioning (useful when the
-    caller already co-partitioned, e.g. the checkpointed per-partition loop).
-    ``native_reassembly=True`` sorts + concatenates the spans into the html
-    string JVM-side (plans/skew.with_reassembled_html, value-identical to
-    spans_to_html) so Arrow transfers one string per doc instead of the
-    span structs. Measured and left OFF by default: Spark's higher-order
-    functions are interpreted (never codegen'd), and the JVM expression +
-    single-large-string transfer benched ~1.5x slower end-to-end than
-    letting the Python side rebuild from the flat Arrow child arrays
-    (13.7s vs 9.2s on the 48k bench corpus). Note: under the native path
-    ``elapsed_ms`` excludes reassembly (it happened JVM-side), so elapsed
-    values are not comparable across modes. ``use_arrow=False`` selects
-    the pandas-dict reference path (slower; kept for A/B — all paths are
-    parity-tested)."""
-    if native_reassembly and not use_arrow:
-        raise ValueError(
-            "native_reassembly requires the arrow path (use_arrow=True)"
-        )
-    df = with_doc_bytes(df)
-    if repartition:
-        num = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        df = skew_partitioned(df, num)
-    if native_reassembly:
-        from ..plans.skew import with_reassembled_html
-
-        # max_doc_bytes passed through: over-cap docs are NULLed without
-        # being reassembled (the cap exists to avoid exactly that work)
-        narrowed = with_reassembled_html(
-            df, max_doc_bytes=max_doc_bytes
-        ).select("doc_id", "html", "doc_bytes")
-    else:
-        narrowed = df.select("doc_id", "spans", "doc_bytes")
-    if use_arrow:
-        return narrowed.mapInArrow(
-            _make_arrow_fn(options, max_doc_bytes), EXTRACTED_SCHEMA
-        )
-    return narrowed.mapInPandas(
-        _make_batch_fn(options, max_doc_bytes), EXTRACTED_SCHEMA
+    caller already co-partitioned, e.g. the checkpointed per-partition
+    loop, or a stream)."""
+    return _map_documents(
+        df, options, num_partitions, max_doc_bytes, repartition
     )
 
 

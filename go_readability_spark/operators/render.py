@@ -4,41 +4,28 @@ The reference CLI (cmd/readability/main.go:17-84) emits the extracted
 article as clean HTML (``--format html``, format.go:76-139), Markdown
 (``--format markdown``, markdown.go:536-551) or a metadata JSON map
 (``--metadata``, main.go:52-64). This operator produces the same four
-renderings as columns over the documents table — one Arrow-batched pass,
-reusing the extraction lifecycle.
+renderings as columns next to the extraction output — the same
+Arrow-batched pass as extract_documents, rendering from the article it
+already parsed.
 """
 
 from __future__ import annotations
 
 import json
-import sys
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StringType, StructField, StructType
 
-from ..plans.skew import MAX_DOC_BYTES, skew_partitioned, with_doc_bytes
+from ..plans.skew import MAX_DOC_BYTES
 from ..readability.extract import ReadabilityOptions
+from ..schemas import EXTRACTED_AND_RENDERED_SCHEMA
+from .extract import _map_documents
 
 __all__ = [
-    "render_documents",
     "extract_and_render",
-    "RENDERED_SCHEMA",
     "EXTRACTED_AND_RENDERED_SCHEMA",
     "render_article",
 ]
-
-RENDERED_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), nullable=False),
-        StructField("html", StringType()),
-        StructField("markdown", StringType()),
-        StructField("text", StringType()),
-        StructField("metadata_json", StringType()),
-        StructField("error", StringType()),
-    ]
-)
 
 
 def render_article(article) -> dict:
@@ -61,77 +48,6 @@ def render_article(article) -> dict:
     }
 
 
-def _render_batches(options: Optional[ReadabilityOptions], max_doc_bytes: int):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..readability.instrumented import extract_with_metrics
-        from ..spans import spans_to_html
-
-        if sys.getrecursionlimit() < 20000:
-            sys.setrecursionlimit(20000)
-        opts = options or ReadabilityOptions(forced_page_type="")
-        for pdf in batches:
-            rows = []
-            for doc_id, spans, doc_bytes in zip(
-                pdf["doc_id"], pdf["spans"], pdf["doc_bytes"]
-            ):
-                row = {
-                    "doc_id": doc_id,
-                    "html": "",
-                    "markdown": "",
-                    "text": "",
-                    "metadata_json": "",
-                    "error": None,
-                }
-                try:
-                    if spans is None:
-                        raise ValueError("null spans")
-                    if int(doc_bytes or 0) > max_doc_bytes:
-                        raise ValueError(f"doc_bytes {doc_bytes} > cap")
-                    article, _ = extract_with_metrics(
-                        spans_to_html(spans), opts
-                    )
-                    row.update(render_article(article))
-                except Exception as exc:  # noqa: BLE001
-                    row["error"] = f"{type(exc).__name__}: {exc}"
-                rows.append(row)
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RENDERED_SCHEMA.fields]
-            )
-
-    return run
-
-
-def render_documents(
-    df: DataFrame,
-    options: Optional[ReadabilityOptions] = None,
-    num_partitions: Optional[int] = None,
-    max_doc_bytes: int = MAX_DOC_BYTES,
-) -> DataFrame:
-    """documents(doc_id, spans) → (doc_id, html, markdown, text,
-    metadata_json, error)."""
-    df = with_doc_bytes(df)
-    num = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    df = skew_partitioned(df, num)
-    return df.select("doc_id", "spans", "doc_bytes").mapInPandas(
-        _render_batches(options, max_doc_bytes), RENDERED_SCHEMA
-    )
-
-
-def _extracted_and_rendered_schema():
-    from ..schemas import EXTRACTED_SCHEMA
-
-    render_fields = [
-        StructField("html", StringType()),
-        StructField("markdown", StringType()),
-        StructField("text", StringType()),
-        StructField("metadata_json", StringType()),
-    ]
-    return StructType(list(EXTRACTED_SCHEMA.fields) + render_fields)
-
-
-EXTRACTED_AND_RENDERED_SCHEMA = _extracted_and_rendered_schema()
-
-
 def extract_and_render(
     df: DataFrame,
     options: Optional[ReadabilityOptions] = None,
@@ -140,31 +56,8 @@ def extract_and_render(
 ) -> DataFrame:
     """Extraction + CLI sink renderings in ONE UDF pass.
 
-    ``extract_documents(...)`` followed by ``render_documents(...)``
-    parses and scores every document twice; this variant renders from
-    the same parsed article inside the extraction batch loop
-    (extract.extract_batch_rows(render=True)), so pipelines that
-    materialize both the span output and the rendered formats pay the
-    readability core once. Output = EXTRACTED_SCHEMA columns + (html,
+    Renders from the same parsed article inside the extraction batch loop
+    (extract.extract_batch_rows(render=True)), so the readability core
+    runs once per document. Output = EXTRACTED_SCHEMA columns + (html,
     markdown, text, metadata_json); error rows carry empty renderings."""
-    from .extract import extract_batch_rows
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in EXTRACTED_AND_RENDERED_SCHEMA.fields]
-        for pdf in batches:
-            rows = extract_batch_rows(
-                pdf["doc_id"].tolist(),
-                pdf["spans"].tolist(),
-                pdf["doc_bytes"].tolist(),
-                options,
-                max_doc_bytes,
-                render=True,
-            )
-            yield pd.DataFrame(rows, columns=cols)
-
-    df = with_doc_bytes(df)
-    num = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    df = skew_partitioned(df, num)
-    return df.select("doc_id", "spans", "doc_bytes").mapInPandas(
-        run, EXTRACTED_AND_RENDERED_SCHEMA
-    )
+    return _map_documents(df, options, num_partitions, max_doc_bytes, render=True)

@@ -292,6 +292,9 @@ def _read_output(spark: SparkSession, out_dir: str) -> DataFrame:
         # with a cleaned output dir): return an empty result, not a crash
         from ..schemas import EXTRACTED_SCHEMA
 
-        schema = EXTRACTED_SCHEMA.add("part", LongType())
+        # a new StructType: StructType.add would mutate the shared schema
+        schema = StructType(
+            EXTRACTED_SCHEMA.fields + [StructField("part", LongType())]
+        )
         return spark.createDataFrame([], schema)
     return spark.read.parquet(out_dir)

@@ -25,8 +25,9 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     - ``arrow_max_records=256``: an Arrow batch of average (~10 KiB) docs is
-      a few MiB; giant docs are additionally isolated by skew_partitioned()
-      so a batch never aggregates many multi-MiB documents (SURVEY.md §4.2).
+      a few MiB; skew_partitioned() hash-spreads giant docs across all
+      partitions so a batch never aggregates many multi-MiB documents
+      (SURVEY.md §4.2).
     - AQE coalesces the small shuffles of metrics rollups; the extraction
       stage itself is map-side only (no shuffle after the repartition).
     """

@@ -7,12 +7,12 @@ The north rule requires explicit handling of giant-document skew. Strategy
    expressions only** (``aggregate(transform(...))``), no Python, so the
    pre-pass is whole-stage-codegen'd and costs one scan column.
 2. ``with_size_bucket`` — small / medium / giant buckets.
-3. ``skew_partitioned`` — giants are *split off* and hash-spread by an
-   explicit salt (``pmod(xxhash64(doc_id), N)``) so that no partition — and
-   therefore no Arrow batch — aggregates many multi-MiB documents, while
-   ordinary docs are uniformly salted across the target partition count.
-   At 1000 executors the same code holds: partition counts derive from the
-   cluster's parallelism, never from data-dependent collect()s.
+3. ``skew_partitioned`` — one scan, one shuffle: every doc is hash-spread
+   by an explicit full-width salt (``xxhash64(doc_id)``), so giants land
+   about n_giants/N per partition and no partition — and therefore no
+   Arrow batch — aggregates many multi-MiB documents. At 1000 executors
+   the same code holds: partition counts derive from the cluster's
+   parallelism, never from data-dependent collect()s.
 
 Docs above ``MAX_DOC_BYTES`` are not parsed at all — the extraction UDF
 emits an error row (never kills the job; the count surfaces in metrics).
@@ -31,7 +31,7 @@ __all__ = [
     "skew_partitioned",
 ]
 
-# >1 MiB of source HTML = "giant": isolated into its own salt-space
+# >1 MiB of source HTML = "giant" (size_bucket 2)
 GIANT_DOC_BYTES = 1 * 1024 * 1024
 # per-doc hard cutoff: above this the UDF emits an error row without parsing
 MAX_DOC_BYTES = 64 * 1024 * 1024
@@ -39,11 +39,11 @@ MAX_DOC_BYTES = 64 * 1024 * 1024
 # Counts ALL span payload bytes (text of every span + media_ref): the
 # reassembled document includes media placeholders built from alt text
 # and refs, so a media-heavy doc with little kind='text' content must
-# still trip the size cap and the giant isolation — scoping to
+# still trip the size cap and the giant bucket — scoping to
 # kind='text' only let such docs bypass both.
 # coalesce: a NULL spans array must yield doc_bytes 0, not NULL — a NULL
-# doc_bytes would otherwise drop out of the partitioner's filters
-# instead of producing an error row.
+# doc_bytes would fall through with_size_bucket's comparisons into the
+# giant bucket.
 _DOC_BYTES_EXPR = (
     "coalesce(aggregate(transform({col}, "
     "s -> coalesce(octet_length(s.text), 0) "
@@ -84,13 +84,11 @@ def _esc_sql(expr: str) -> str:
     return out
 
 
-# malformed arrays (null elements / null offsets) also yield NULL so the
-# UDF emits an error row, matching the decode path's behavior (which hits
-# a TypeError and emits an error row; the error text differs)
+# malformed arrays (null elements / null offsets) yield NULL, the cases
+# extraction turns into "null spans" error rows
 _REASSEMBLE_EXPR = (
     "CASE WHEN {col} IS NULL "
     "OR exists({col}, s -> s IS NULL OR s.offset IS NULL) "
-    "{cap_clause}"
     "THEN NULL ELSE "
     "concat_ws('', transform("
     "array_sort({col}, (a, b) -> CASE WHEN a.offset < b.offset THEN -1 "
@@ -102,25 +100,12 @@ _REASSEMBLE_EXPR = (
 )
 
 
-def with_reassembled_html(
-    df: DataFrame,
-    spans_col: str = "spans",
-    max_doc_bytes: int | None = None,
-) -> DataFrame:
+def with_reassembled_html(df: DataFrame, spans_col: str = "spans") -> DataFrame:
     """Add ``html`` — the document reassembled from its spans entirely in
     the JVM (sort by offset, media → escaped ``<x-media/>`` placeholder,
     concat). Value-identical to spans.spans_to_html for well-formed spans
-    (parity-tested); malformed spans (null entries/offsets) yield NULL so
-    the UDF emits an error row on both paths. ``max_doc_bytes`` skips
-    reassembly for over-cap docs entirely (the UDF's cap check runs
-    before its null check, so they still get the cap error message)."""
-    cap_clause = (
-        f"OR doc_bytes > {int(max_doc_bytes)} " if max_doc_bytes else ""
-    )
-    return df.withColumn(
-        "html",
-        F.expr(_REASSEMBLE_EXPR.format(col=spans_col, cap_clause=cap_clause)),
-    )
+    (parity-tested); malformed spans (null entries/offsets) yield NULL."""
+    return df.withColumn("html", F.expr(_REASSEMBLE_EXPR.format(col=spans_col)))
 
 
 def with_size_bucket(
@@ -138,40 +123,15 @@ def with_size_bucket(
     )
 
 
-def skew_partitioned(
-    df: DataFrame,
-    num_partitions: int,
-    giant_bytes: int = GIANT_DOC_BYTES,
-    giant_fanout: int = 4,
-    isolate_giants: bool = False,
-) -> DataFrame:
+def skew_partitioned(df: DataFrame, num_partitions: int) -> DataFrame:
     """Return df repartitioned so extraction tasks are size-balanced.
 
-    Default: ONE scan, ONE shuffle — an explicit full-width
-    ``xxhash64(doc_id)`` salt hashed into ``num_partitions``. Millions of
-    distinct salt values give uniform partitions (a coarse modded salt
-    space hashed into N buckets is balls-into-bins lumpy); giants land
-    ~n_giants/num per partition and Arrow batching bounds their memory.
-
-    ``isolate_giants=True`` switches to the two-way split (giants in
-    their own ``num*giant_fanout`` partition set listed FIRST in the
-    union, so heavy tasks schedule before the small ones — LPT shape).
-    It buys a shorter stage tail when giants dominate, at the cost of
-    scanning the input twice (the union's two filters are separate
-    subplans) — measured ~neutral on the bench corpus, so the
-    single-scan plan is the default.
+    ONE scan, ONE shuffle — an explicit full-width ``xxhash64(doc_id)``
+    salt hashed into ``num_partitions``. Millions of distinct salt values
+    give uniform partitions (a coarse modded salt space hashed into N
+    buckets is balls-into-bins lumpy); giants land ~n_giants/num per
+    partition and Arrow batching bounds their memory.
     """
     df = with_doc_bytes(df)
-    if not isolate_giants:
-        salted = df.withColumn("salt", F.xxhash64(F.col("doc_id")))
-        return salted.repartition(num_partitions, F.col("salt")).drop("salt")
-    giants = df.filter(F.col("doc_bytes") >= giant_bytes).repartition(
-        max(num_partitions * giant_fanout, 1), F.col("doc_id")
-    )
-    normals = (
-        df.filter(F.col("doc_bytes") < giant_bytes)
-        .withColumn("salt", F.xxhash64(F.col("doc_id")))
-        .repartition(num_partitions, F.col("salt"))
-        .drop("salt")
-    )
-    return giants.unionByName(normals)
+    salted = df.withColumn("salt", F.xxhash64(F.col("doc_id")))
+    return salted.repartition(num_partitions, F.col("salt")).drop("salt")

@@ -25,6 +25,7 @@ __all__ = [
     "META_TYPE",
     "METRICS_TYPE",
     "EXTRACTED_SCHEMA",
+    "EXTRACTED_AND_RENDERED_SCHEMA",
 ]
 
 SPAN_IN_TYPE = StructType(
@@ -85,5 +86,14 @@ EXTRACTED_SCHEMA = StructType(
         StructField("error", StringType()),
         # per-doc UDF wall time — straggler/skew diagnosis at the row level
         StructField("elapsed_ms", DoubleType()),
+    ]
+)
+
+# extraction + the CLI sink renderings (operators/render.extract_and_render)
+EXTRACTED_AND_RENDERED_SCHEMA = StructType(
+    EXTRACTED_SCHEMA.fields
+    + [
+        StructField(name, StringType())
+        for name in ("html", "markdown", "text", "metadata_json")
     ]
 )

@@ -1,7 +1,7 @@
 """Streaming extraction over a landing zone of span documents.
 
 ``readStream`` (file source, same DOCUMENTS_SCHEMA parquet) →
-the SAME mapInArrow extraction operator (mapInArrow/mapInPandas are
+the SAME mapInArrow extraction operator (mapInArrow is
 streaming-compatible: per-micro-batch, stateless) → parquet sink with a
 Structured Streaming checkpoint. The checkpoint gives exactly-once file
 processing and idempotent restart — the streaming analog of the batch

@@ -10,6 +10,9 @@ pyspark = pytest.importorskip("pyspark")
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from go_readability_spark.operators.extract import extract_documents  # noqa: E402
+from go_readability_spark.operators.render import extract_and_render  # noqa: E402
+
 SF = "/root/testdata/sf0.01"
 
 
@@ -134,3 +137,38 @@ class TestStarJoinPlan:
         assert "hashpartitioning(n_name" in plan
         # region filter pushed into the dimension scan
         assert "r_name" in plan and "PushedFilters: [IsNotNull(r_name)" in plan
+
+
+def _node_names(df) -> list[str]:
+    """Physical node names of ``df``'s plan, through adaptive wrappers."""
+    names, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        names.append(node.nodeName())
+        seq = node.children()
+        todo.extend(seq.apply(i) for i in range(seq.length()))
+    return names
+
+
+class TestExtractionPlan:
+    """One loop, one plan: extraction and extraction + rendering each scan
+    once, shuffle once (the salted repartition) and cross into Python
+    through exactly one mapInArrow."""
+
+    @pytest.mark.parametrize(
+        "op", [extract_documents, extract_and_render], ids=lambda f: f.__name__
+    )
+    def test_one_scan_one_exchange_one_map_in_arrow(self, spark, tmp_path, op):
+        from go_readability_spark.sources.tables import corpus_df
+
+        path = str(tmp_path / "docs")
+        corpus_df(spark, 4).write.parquet(path)
+        names = _node_names(op(spark.read.parquet(path), num_partitions=2))
+        assert sum(n.startswith("Scan parquet") for n in names) == 1, names
+        assert names.count("Exchange") == 1, names
+        assert names.count("MapInArrow") == 1, names
+        assert not any("MapInPandas" in n for n in names), names

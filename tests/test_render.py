@@ -111,48 +111,47 @@ class TestCli:
 
 @pytest.mark.usefixtures("spark")
 class TestRenderSpark:
-    def test_render_documents(self, spark):
-        from go_readability_spark.operators.render import render_documents
-        from go_readability_spark.sources.tables import corpus_df
-
-        out = render_documents(corpus_df(spark, 10), num_partitions=2)
-        rows = {r["doc_id"]: r for r in out.collect()}
-        assert len(rows) == 10
-        assert all(r["error"] is None for r in rows.values())
-        # spot-check one doc against the pure pipeline
-        doc_id = "syn-article-000000"
-        art = extract(spans_to_html(generate_doc(doc_id)))
-        got = rows[doc_id]
-        assert json.loads(got["metadata_json"])["nodeCount"] == art.node_count
-        assert got["markdown"] == render_article(art)["markdown"]
-
     def test_extract_and_render_single_pass_parity(self, spark):
-        """Combined op == extract_documents ⨝ render_documents, one UDF."""
+        """Combined op == extract_documents + render_article, one UDF."""
         from go_readability_spark.operators.extract import extract_documents
-        from go_readability_spark.operators.render import (
-            extract_and_render,
-            render_documents,
-        )
+        from go_readability_spark.operators.render import extract_and_render
         from go_readability_spark.sources.tables import corpus_df
 
         docs = corpus_df(spark, 12)
         combined = {r["doc_id"]: r for r in extract_and_render(docs, num_partitions=2).collect()}
         extracted = {r["doc_id"]: r for r in extract_documents(docs, num_partitions=2).collect()}
-        rendered = {r["doc_id"]: r for r in render_documents(docs, num_partitions=2).collect()}
-        assert set(combined) == set(extracted) == set(rendered)
+        assert len(combined) == 12 and set(combined) == set(extracted)
         for doc_id, row in combined.items():
-            e, r = extracted[doc_id], rendered[doc_id]
+            e = extracted[doc_id]
             assert row["spans_out"] == e["spans_out"]
             assert row["meta"] == e["meta"]
-            assert row["error"] == e["error"]
-            for col in ("html", "markdown", "text", "metadata_json"):
-                assert row[col] == r[col], (doc_id, col)
+            assert row["metrics"] == e["metrics"]
+            assert row["error"] is None and e["error"] is None
+        # spot-check one doc's renderings against the pure pipeline
+        doc_id = "syn-article-000000"
+        art = extract(spans_to_html(generate_doc(doc_id)))
+        got = combined[doc_id]
+        assert json.loads(got["metadata_json"])["nodeCount"] == art.node_count
+        assert got["markdown"] == render_article(art)["markdown"]
 
     def test_extract_and_render_error_rows(self, spark):
         from go_readability_spark.operators.render import extract_and_render
         from go_readability_spark.schemas import DOCUMENTS_SCHEMA
 
-        bad = spark.createDataFrame([("bad-doc", None)], DOCUMENTS_SCHEMA)
-        row = extract_and_render(bad, num_partitions=1).collect()[0]
-        assert row["error"] == "null spans"
-        assert row["html"] == "" and row["markdown"] == ""
+        big = [{"kind": "text", "text": "<p>" + "x" * 200 + "</p>",
+                "media_ref": "", "offset": 0}]
+        bad = spark.createDataFrame(
+            [("bad-doc", None), ("big-doc", big)], DOCUMENTS_SCHEMA
+        )
+        rows = {
+            r["doc_id"]: r
+            for r in extract_and_render(
+                bad, num_partitions=1, max_doc_bytes=100
+            ).collect()
+        }
+        assert rows["bad-doc"]["error"] == "null spans"
+        assert rows["big-doc"]["error"] == "doc_bytes 207 > cap 100"
+        for row in rows.values():
+            assert row["meta"]["page_type"] == "error"
+            for col in ("html", "markdown", "text", "metadata_json"):
+                assert row[col] == "", col

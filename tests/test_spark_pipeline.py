@@ -1,9 +1,10 @@
-"""Spark-level tests: mapInPandas extraction ≡ pure function per doc,
+"""Spark-level tests: mapInArrow extraction ≡ pure function per doc,
 skew pre-pass correctness, checkpoint/resume idempotency.
 
-SURVEY.md §5: "one Spark-level test that mapInPandas over the fixture table
-equals the pure function per doc" — plus plan-shape assertions that the
-scale-critical properties hold (native pre-pass, broadcast anti-join).
+SURVEY.md §5: "one Spark-level test that the Arrow-batched UDF over the
+fixture table equals the pure function per doc" — plus plan-shape
+assertions that the scale-critical properties hold (native pre-pass,
+broadcast anti-join).
 """
 
 from __future__ import annotations
@@ -114,12 +115,11 @@ class TestErrorRows:
     def test_arrow_path_null_struct_with_nonnull_children(self):
         """A null span STRUCT whose child slots hold non-null garbage
         (possible in Arrow batches from non-Spark writers) must become a
-        'null spans' error row, matching the pandas/JVM paths — struct-
-        level validity is separate from child validity and field()
-        ignores it."""
+        'null spans' error row — struct-level validity is separate from
+        child validity, and the Arrow adapter's decode must honour it."""
         import pyarrow as pa
 
-        from go_readability_spark.operators.extract import _make_arrow_fn
+        from go_readability_spark.operators.extract import _arrow_batches
 
         span_t = pa.struct(
             [
@@ -146,9 +146,10 @@ class TestErrorRows:
             [pa.array(["doc-x"]), spans, pa.array([10], type=pa.int64())],
             names=["doc_id", "spans", "doc_bytes"],
         )
-        fn = _make_arrow_fn(None, 1 << 30)
+        fn = _arrow_batches(None, 1 << 30)
         out = list(fn(iter([batch])))[0]
         assert out.column("error").to_pylist() == ["null spans"]
+        assert out.column("doc_id").to_pylist() == ["doc-x"]
 
 
 class TestSkewPlan:
@@ -266,9 +267,8 @@ if __name__ == "__main__":
 
 
 class TestNativeReassembly:
-    """JVM-side span reassembly option: value-identical to the Python
-    codec (kept off by default — measured slower; see extract_documents
-    docstring)."""
+    """JVM-side span reassembly (plans.skew.with_reassembled_html, used
+    by the streaming dedup): value-identical to the Python codec."""
 
     def test_native_equals_codec(self, spark):
         import hashlib
@@ -289,35 +289,11 @@ class TestNativeReassembly:
                 hashlib.md5(expected.encode()).hexdigest() == r["h"]
             ), r["doc_id"]
 
-    def test_native_extraction_parity(self, spark):
-        docs = corpus_df(spark, 10)
-        def key(r):
-            return (
-                r["doc_id"],
-                tuple(tuple(s) for s in r["spans_out"]),
-                tuple(r["meta"]),
-                tuple(r["metrics"]),
-                r["doc_bytes"],
-                r["error"],
-            )
-
-        a = sorted(
-            key(r)
-            for r in extract_documents(
-                docs, num_partitions=2, native_reassembly=True
-            ).collect()
-        )
-        b = sorted(
-            key(r)
-            for r in extract_documents(docs, num_partitions=2).collect()
-        )
-        assert a == b
-
 
 class TestMalformedSpans:
-    """All three extraction paths emit identical error rows for malformed
-    inputs — and the split-union partitioner must not drop rows whose
-    doc_bytes would be NULL (regression: null spans arrays vanished)."""
+    """Malformed inputs become error rows, one per input row: the doc_bytes
+    pre-pass and the salted repartition must not drop rows whose spans
+    are NULL (regression: null spans arrays vanished)."""
 
     CASES = [
         ("ok", [{"kind": "text", "text": "<p>" + "hello world, " * 60 + "</p>",
@@ -329,35 +305,37 @@ class TestMalformedSpans:
         ("null-array", None),
     ]
 
-    def test_identical_error_rows_all_paths(self, spark):
+    def test_malformed_spans_become_error_rows(self, spark):
         from go_readability_spark.schemas import DOCUMENTS_SCHEMA
 
         df = spark.createDataFrame(self.CASES, DOCUMENTS_SCHEMA)
-        results = {}
-        for name, kw in [
-            ("native", dict(native_reassembly=True)),
-            ("decode", {}),
-            ("pandas", dict(use_arrow=False)),
-        ]:
-            out = {
-                r["doc_id"]: r["error"]
-                for r in extract_documents(df, num_partitions=2, **kw).collect()
-            }
-            assert len(out) == len(self.CASES), f"{name}: rows dropped"
-            results[name] = out
-        assert results["native"] == results["decode"] == results["pandas"]
-        assert results["decode"]["ok"] is None
+        rows = extract_documents(df, num_partitions=2).collect()
+        assert len(rows) == len(self.CASES), "rows dropped"
+        out = {r["doc_id"]: r for r in rows}
+        assert out["ok"]["error"] is None
         for bad in ("null-span-entry", "null-offset", "null-array"):
-            assert results["decode"][bad] == "null spans"
+            assert out[bad]["error"] == "null spans"
+            assert out[bad]["meta"]["page_type"] == "error"
+            assert out[bad]["spans_out"] == []
 
-    def test_cap_message_wins_on_native_path(self, spark):
+    def test_cap_message_wins_over_null_spans(self, spark):
+        """The size cap is checked before the spans are looked at: an
+        over-cap doc that also has a null offset reports the cap."""
         from go_readability_spark.schemas import DOCUMENTS_SCHEMA
 
-        df = spark.createDataFrame(self.CASES[:1], DOCUMENTS_SCHEMA)
-        row = extract_documents(
-            df, num_partitions=1, native_reassembly=True, max_doc_bytes=10
-        ).collect()[0]
-        assert row["error"].startswith("doc_bytes")
+        big_bad = [{"kind": "text", "text": "<p>" + "x" * 200 + "</p>",
+                    "media_ref": "", "offset": None}]
+        df = spark.createDataFrame(
+            [self.CASES[0], ("big-null-offset", big_bad)], DOCUMENTS_SCHEMA
+        )
+        out = {
+            r["doc_id"]: r["error"]
+            for r in extract_documents(
+                df, num_partitions=1, max_doc_bytes=100
+            ).collect()
+        }
+        assert out["big-null-offset"] == "doc_bytes 207 > cap 100"
+        assert out["ok"] == "doc_bytes 787 > cap 100"
 
 
 class TestCheckpointStagingEdgeCases:
@@ -399,3 +377,19 @@ class TestCheckpointStagingEdgeCases:
         res = run_checkpointed(spark, docs, out, man, n_parts=2)
         assert res.count() == 12
         assert not os.path.exists(out + "__staging")
+
+    def test_empty_output_leaves_extracted_schema_intact(self, spark, tmp_path):
+        """The empty-result schema (extraction columns + part) must be a
+        new StructType: adding ``part`` to the shared EXTRACTED_SCHEMA in
+        place broke every later extraction in the process."""
+        from go_readability_spark.plans.checkpoint import run_checkpointed
+        from go_readability_spark.schemas import DOCUMENTS_SCHEMA, EXTRACTED_SCHEMA
+
+        empty = spark.createDataFrame([], DOCUMENTS_SCHEMA)
+        res = run_checkpointed(
+            spark, empty, str(tmp_path / "out"), str(tmp_path / "man"), n_parts=2
+        )
+        assert res.columns[-1] == "part"
+        assert len(EXTRACTED_SCHEMA.fields) == 7
+        rows = extract_documents(corpus_df(spark, 2), num_partitions=1).collect()
+        assert len(rows) == 2 and all(r["error"] is None for r in rows)
