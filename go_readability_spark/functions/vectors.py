@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import Column, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..plans.session import lazy_zip_invalidation
+
 __all__ = [
     "dot",
     "dot_sql",
@@ -124,6 +126,7 @@ def cosine_similarity_pandas(a: Column, b: Column) -> Column:
 
     @pandas_udf("double")
     def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
+        lazy_zip_invalidation()
         n = len(va)
         if n == 0:
             return pd.Series([], dtype="float64")

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine_similarity_pandas
+from ..plans.session import lazy_zip_invalidation
 from .similarity import (
     _probe_cells,
     ivf_cell_udf,
@@ -158,6 +159,7 @@ def train_codebook(
     emb = embeddings.select(id_col, vec_col)
 
     def _cell_mean(pdf: pd.DataFrame) -> pd.DataFrame:
+        lazy_zip_invalidation()
         pdf = pdf.sort_values(id_col)
         x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
         # dimension comes from the data, not the closure: every vector

@@ -45,6 +45,7 @@ from ..plans.cache import (
     persistent_rdd_ids as _persistent_rdd_ids,
     unpersist_rdd_ids as _unpersist_rdd_ids,
 )
+from ..plans.session import lazy_zip_invalidation
 
 __all__ = [
     "dedup_exact",
@@ -417,6 +418,7 @@ def embedding_near_dups_blocked(
     prefilter = threshold - 1e-6
 
     def _block_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        lazy_zip_invalidation()
         import numpy as np
         import pandas as pd
 

@@ -13,6 +13,9 @@ Design notes for 100 TB scale:
 - ``extract_batch_rows`` is the one per-document loop: the plain
   extraction and ``render.extract_and_render`` both reach it through the
   same Arrow adapter;
+- the adapter's worker-side body first calls
+  ``plans.session.lazy_zip_invalidation``, so a reused Python worker does
+  not re-read ``pyspark.zip`` at every task start;
 - failures never kill the job: per-doc try/except emits an error row and
   the error count is a first-class metric;
 - docs above MAX_DOC_BYTES are refused before parsing (skew.py).
@@ -28,6 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..readability.extract import ReadabilityOptions
 from ..schemas import EXTRACTED_AND_RENDERED_SCHEMA, EXTRACTED_SCHEMA
+from ..plans.session import lazy_zip_invalidation
 from ..plans.skew import MAX_DOC_BYTES, skew_partitioned, with_doc_bytes
 
 __all__ = ["extract_documents", "extract_batch_rows", "metrics_rollup"]
@@ -130,6 +134,7 @@ def _arrow_batches(
     in, one ``extract_batch_rows`` call per batch, its rows out."""
 
     def run(batches):
+        lazy_zip_invalidation()
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 

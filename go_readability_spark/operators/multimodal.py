@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..plans.session import lazy_zip_invalidation
+
 __all__ = [
     "media_inventory",
     "media_features",
@@ -91,6 +93,7 @@ def _decode_features(media_ref: str, stub: bool) -> list[float]:
 
 def _feature_batches(stub: bool):
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        lazy_zip_invalidation()
         for pdf in batches:
             refs = pdf["media_ref"].tolist()
             digests = [
@@ -180,6 +183,7 @@ def media_frame_samples(
         inv = inv.repartition(num_partitions, F.col("media_ref"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        lazy_zip_invalidation()
         # columnar construction like _feature_batches (commit e9d5460):
         # repeat the input columns n_frames times, tile the frame index,
         # digest once per output row — no per-row dict records

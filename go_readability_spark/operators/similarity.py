@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..functions.vectors import cosine_similarity
+from ..plans.session import lazy_zip_invalidation
 
 __all__ = [
     "ann_topk_bruteforce",
@@ -131,6 +132,7 @@ def with_lsh_bucket(
 
     @pandas_udf("int")
     def _bucket(v: pd.Series) -> pd.Series:
+        lazy_zip_invalidation()
         n = len(v)
         if n == 0:
             return pd.Series([], dtype="int32")
@@ -387,6 +389,7 @@ def ivf_cell_udf(cents):
 
     @pandas_udf("int")
     def _cell(v: pd.Series) -> pd.Series:
+        lazy_zip_invalidation()
         n = len(v)
         if n == 0:
             return pd.Series([], dtype="int32")

@@ -4,16 +4,26 @@ Local-mode mirror of the production `spark-submit --py-files` launch
 (SURVEY.md §3 Spark lifecycle). Every knob is set for the extraction
 workload: Arrow batches sized for documents (not rows of scalars), AQE on,
 shuffle partitions matched to core count at test scale.
+
+``lazy_zip_invalidation`` is the worker-side half of the runtime set-up:
+every Python UDF body calls it first.
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "giant_doc_scan", "scoped_sql_conf"]
+__all__ = [
+    "get_spark",
+    "giant_doc_scan",
+    "lazy_zip_invalidation",
+    "scoped_sql_conf",
+]
 
 
 def get_spark(
@@ -107,3 +117,48 @@ def giant_doc_scan(spark: SparkSession, batch_rows: int = 256):
     return scoped_sql_conf(
         spark, {"spark.sql.parquet.columnarReaderBatchSize": str(batch_rows)}
     )
+
+
+def lazy_zip_invalidation() -> None:
+    """Make ``importlib.invalidate_caches()`` skip zip archives whose stat
+    is unchanged. Call it first in every function that runs in a Python
+    worker; never on the driver.
+
+    PySpark calls ``importlib.invalidate_caches()`` at the start of every
+    task (``worker_util.setup_spark_files``). Before CPython 3.13, each
+    ``zipimport.zipimporter`` then re-parses its whole archive's central
+    directory, and a worker running pyspark from ``pyspark.zip`` holds one
+    importer per imported sub-package: ~115-140 ms of CPU per task before
+    any row is touched. 3.13 made this invalidation lazy; this installs
+    the same laziness on older interpreters. An archive whose
+    (mtime_ns, size, inode) matches the last read keeps its cached
+    directory; a changed, missing or unreadable archive goes to the
+    original method, so a rewritten zip is still re-read. Idempotent."""
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+
+    original = zipimport.zipimporter.invalidate_caches
+    if getattr(original, "_stat_guarded", False):
+        return
+    read_at: dict[str, tuple[int, int, int]] = {}
+
+    @functools.wraps(original)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            read_at.pop(self.archive, None)
+            return original(self)
+        key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and read_at.get(self.archive) == key:
+            self._files = files
+            return
+        # stat before the read: a rewrite racing the read changes the
+        # stat, so the next call reads again
+        original(self)
+        read_at[self.archive] = key
+
+    invalidate_caches._stat_guarded = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches

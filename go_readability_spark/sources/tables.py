@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..corpus import corpus_doc_ids, generate_doc
+from ..plans.session import lazy_zip_invalidation
 from ..schemas import DOCUMENTS_SCHEMA
 
 __all__ = ["load_table", "corpus_df", "documents_as_spans_df"]
@@ -34,6 +35,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _gen_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    lazy_zip_invalidation()
     for pdf in batches:
         rows = [
             {"doc_id": doc_id, "spans": generate_doc(doc_id)}

@@ -19,6 +19,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.extract import extract_documents
+from ..plans.session import lazy_zip_invalidation
 from ..schemas import DOCUMENTS_SCHEMA
 
 __all__ = [
@@ -210,6 +211,7 @@ def stream_sessionize(
     gap_us = gap_minutes * 60 * 1_000_000
 
     def fold(key, pdf_iter, state):
+        lazy_zip_invalidation()
         user_id = key[0]
 
         sessions: list[list[int]] = []

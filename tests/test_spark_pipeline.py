@@ -9,6 +9,10 @@ broadcast anti-join).
 
 from __future__ import annotations
 
+import importlib
+import sys
+import zipimport
+
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
@@ -27,7 +31,9 @@ from go_readability_spark.plans.checkpoint import (  # noqa: E402
     run_checkpointed,
     with_part,
 )
+from go_readability_spark.plans.session import lazy_zip_invalidation  # noqa: E402
 from go_readability_spark.plans.skew import (  # noqa: E402
+    MAX_DOC_BYTES,
     skew_partitioned,
     with_doc_bytes,
     with_size_bucket,
@@ -51,6 +57,17 @@ def extracted(spark):
     out = extract_documents(df, num_partitions=4).cache()
     out.count()
     return out
+
+
+@pytest.fixture
+def restore_zipimport(monkeypatch):
+    """Undo lazy_zip_invalidation's class patch when the test ends: only
+    Python workers are meant to carry it, never this process."""
+    monkeypatch.setattr(
+        zipimport.zipimporter,
+        "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
 
 
 def _golden(doc_id: str):
@@ -112,7 +129,9 @@ class TestErrorRows:
         assert rows[0]["error"] == "null spans"
         assert rows[1]["error"] is None
 
-    def test_arrow_path_null_struct_with_nonnull_children(self):
+    def test_arrow_path_null_struct_with_nonnull_children(
+        self, restore_zipimport
+    ):
         """A null span STRUCT whose child slots hold non-null garbage
         (possible in Arrow batches from non-Spark writers) must become a
         'null spans' error row — struct-level validity is separate from
@@ -393,3 +412,105 @@ class TestCheckpointStagingEdgeCases:
         assert len(EXTRACTED_SCHEMA.fields) == 7
         rows = extract_documents(corpus_df(spark, 2), num_partitions=1).collect()
         assert len(rows) == 2 and all(r["error"] is None for r in rows)
+
+
+@pytest.mark.usefixtures("restore_zipimport")
+class TestLazyZipInvalidation:
+    """``importlib.invalidate_caches()`` (PySpark calls it at every task
+    start) must not re-read an unchanged zip archive once
+    ``lazy_zip_invalidation`` is installed, and must still re-read a
+    rewritten one."""
+
+    PKG = "gr_lazyzip_pkg"
+
+    @staticmethod
+    def _write(archive, modules):
+        import zipfile
+
+        with zipfile.ZipFile(archive, "w") as zf:
+            for name, src in modules.items():
+                zf.writestr(name, src)
+
+    @pytest.fixture
+    def archive(self, tmp_path, monkeypatch):
+        path = str(tmp_path / "pkg.zip")
+        self._write(
+            path, {f"{self.PKG}/__init__.py": "", f"{self.PKG}/a.py": "X = 1\n"}
+        )
+        monkeypatch.syspath_prepend(path)
+        importlib.import_module(f"{self.PKG}.a")
+        yield path
+        for name in [m for m in sys.modules if m.split(".")[0] == self.PKG]:
+            del sys.modules[name]
+        for key in [k for k in sys.path_importer_cache if k.startswith(path)]:
+            del sys.path_importer_cache[key]
+        zipimport._zip_directory_cache.pop(path, None)
+
+    def _count_reads(self, monkeypatch, path):
+        reads = []
+        real = zipimport._read_directory
+
+        def counted(archive):
+            if archive == path:
+                reads.append(archive)
+            return real(archive)
+
+        monkeypatch.setattr(zipimport, "_read_directory", counted)
+        return reads
+
+    def test_unchanged_archive_is_not_reread(self, archive, monkeypatch):
+        reads = self._count_reads(monkeypatch, archive)
+        importlib.invalidate_caches()
+        if sys.version_info < (3, 13):
+            # the eager re-read this guards against: one per importer
+            # (the archive root and the package directory)
+            assert len(reads) >= 2
+        lazy_zip_invalidation()
+        importlib.invalidate_caches()  # first sight after install
+        reads.clear()
+        for _ in range(3):
+            importlib.invalidate_caches()
+        assert reads == []
+        assert importlib.import_module(f"{self.PKG}.a").X == 1
+
+    def test_rewritten_archive_is_reread(self, archive):
+        lazy_zip_invalidation()
+        importlib.invalidate_caches()
+        with pytest.raises(ModuleNotFoundError):
+            importlib.import_module(f"{self.PKG}.b")
+        self._write(
+            archive,
+            {
+                f"{self.PKG}/__init__.py": "",
+                f"{self.PKG}/a.py": "X = 1\n",
+                f"{self.PKG}/b.py": "Y = 2\n",
+            },
+        )
+        importlib.invalidate_caches()
+        assert importlib.import_module(f"{self.PKG}.b").Y == 2
+
+    @pytest.mark.skipif(sys.version_info >= (3, 13), reason="no-op on 3.13+")
+    def test_second_install_does_not_double_wrap(self):
+        original = zipimport.zipimporter.invalidate_caches
+        lazy_zip_invalidation()
+        wrapped = zipimport.zipimporter.invalidate_caches
+        lazy_zip_invalidation()
+        assert zipimport.zipimporter.invalidate_caches is wrapped
+        assert wrapped is not original and wrapped.__wrapped__ is original
+
+    def test_noop_on_python_3_13(self, monkeypatch):
+        original = zipimport.zipimporter.invalidate_caches
+        with monkeypatch.context() as m:
+            m.setattr(sys, "version_info", (3, 13, 0, "final", 0))
+            lazy_zip_invalidation()
+        assert zipimport.zipimporter.invalidate_caches is original
+
+    @pytest.mark.skipif(sys.version_info >= (3, 13), reason="no-op on 3.13+")
+    def test_arrow_adapter_installs_it(self):
+        from go_readability_spark.operators.extract import _arrow_batches
+
+        assert not getattr(
+            zipimport.zipimporter.invalidate_caches, "_stat_guarded", False
+        )
+        assert list(_arrow_batches(None, MAX_DOC_BYTES)(iter([]))) == []
+        assert zipimport.zipimporter.invalidate_caches._stat_guarded
