@@ -14,16 +14,8 @@ detail rides the earlier line and a sidecar BENCH_DETAIL.json.
 
 Env:
   SPARK_GRAFT_SF_DIR      input tables (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS        requested core budget (default 16). The
-                          session runs at min(requested, 16): the host
-                          advertises 32 logical CPUs but delivers ~16
-                          effective cores (SMT/oversubscription; see
-                          BENCH.md host-capacity control), and the
-                          measured optimum is 16 threads: 3,028 docs/s
-                          vs 2,395 at 32. Sizing executor slots to
-                          physical cores is the same call a real
-                          cluster deployment makes. The JSON records
-                          cpus_env (requested) and cpus_used per run.
+  SPARK_GRAFT_CPUS        core count, used exactly (default: get_spark's
+                          min(usable CPUs, 16))
   SPARK_GRAFT_BENCH_DOCS  synthetic corpus size (default 6000)
   SPARK_GRAFT_BENCH_SKIP_QUERIES  "1" → only the extraction benchmark
 
@@ -46,18 +38,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus_env = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
-    # The host advertises 32 logical CPUs but delivers ~16 effective
-    # cores (SMT/oversubscription — BENCH.md host-capacity control), and
-    # 16 threads measurably beat 32 (3,028 vs 2,395 docs/s). Size the
-    # session to the measured optimum, never above what was asked for;
-    # BOTH counts are recorded per-figure so driver rounds stay
-    # comparable whatever env they pass. SPARK_GRAFT_CPUS_NOCAP=1
-    # disables the cap for runs whose POINT is the thread count
-    # (tools/scaling_bench.py pairs must run at exactly the requested
-    # parallelism or the N->4N efficiency ratio is computed on a lie).
-    nocap = os.environ.get("SPARK_GRAFT_CPUS_NOCAP") == "1"
-    cpus = cpus_env if nocap else min(cpus_env, 16)
     n_bench = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "6000"))
     skip_queries = os.environ.get("SPARK_GRAFT_BENCH_SKIP_QUERIES") == "1"
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -70,8 +50,9 @@ def main() -> None:
     from go_readability_spark.queries import queries
     from go_readability_spark.sources.tables import corpus_df
 
-    spark = get_spark(app_name=f"bench-sf{sf}", cores=cpus)
+    spark = get_spark(app_name=f"bench-sf{sf}")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     # Materialize the corpus once (parquet, like the production Iceberg
     # scan) so the headline times scan → extract, not synthesis.
@@ -186,9 +167,7 @@ def main() -> None:
         "quality": quality,
         "sf": sf,
         # every figure in this JSON (headline + per-query) was measured
-        # at cpus_used executor threads; cpus_env is what the caller
-        # requested (see sizing note in main)
-        "cpus_env": cpus_env,
+        # at cpus_used executor threads
         "cpus_used": cpus,
         "extraction": {
             "walls_sec": [round(w, 2) for w in walls],

@@ -7,7 +7,7 @@ from .checkpoint import (  # noqa: F401
     resume_filter,
     run_checkpointed,
 )
-from .session import get_spark, giant_doc_scan, scoped_sql_conf  # noqa: F401
+from .session import get_spark, giant_doc_scan  # noqa: F401
 from .skew import (  # noqa: F401
     GIANT_DOC_BYTES,
     MAX_DOC_BYTES,

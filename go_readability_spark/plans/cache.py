@@ -32,9 +32,9 @@ self-join whose persist vanishes recomputes its upstream once per join
 side — the exact race the eager persist exists to prevent). Use one
 scope at a time per session; concurrent partition jobs
 (plans.checkpoint.run_checkpointed(concurrency=N)) do NOT use scopes
-for this reason — run_checkpointed owns its single persist directly
-(persist → finally-unpersist) and writes partition results straight
-out, so nothing there needs a scope.
+for this reason — run_checkpointed persists nothing (each part job
+reads its slice of the staged input and writes its results straight
+out), so nothing there needs a scope.
 """
 
 from __future__ import annotations

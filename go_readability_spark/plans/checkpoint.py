@@ -149,8 +149,8 @@ def run_checkpointed(
     (plans.giant_doc_scan), but the RETURNED DataFrame plans lazily
     under the caller's session conf — an action that re-reads the
     giant-document output from a default-conf library session should
-    wrap itself in ``giant_doc_scan`` too (job.py is immune: it sets
-    the small batch session-wide).
+    wrap itself in ``giant_doc_scan`` too, as job.py does around the
+    run and its rollup.
     """
     from ..operators.extract import extract_documents
 
@@ -222,8 +222,8 @@ def run_checkpointed(
     # The staging scan and the per-part extraction scans read giant-
     # document rows: pin the small columnar read batch for the whole
     # run (library sessions default to 4096, which fails these scans —
-    # measured ladder on plans.session.giant_doc_scan). job.py already
-    # runs 256 session-wide; the scope is a no-op there.
+    # measured ladder on plans.session.giant_doc_scan). Under job.py's
+    # own scope this one is a no-op.
     with giant_doc_scan(spark):
         if has_own_part:
             parts_src = documents

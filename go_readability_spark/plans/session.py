@@ -1,9 +1,12 @@
 """SparkSession builder with the pipeline's tuned defaults.
 
-Local-mode mirror of the production `spark-submit --py-files` launch
-(SURVEY.md §3 Spark lifecycle). Every knob is set for the extraction
-workload: Arrow batches sized for documents (not rows of scalars), AQE on,
-shuffle partitions matched to core count at test scale.
+``get_spark`` is the only SparkSession builder in the repo: the library,
+job.py (under spark-submit or launched directly), bench.py, the tools
+and the tests all get their session from it (SURVEY.md §3 Spark
+lifecycle). Its confs are set for the extraction workload: Arrow batches
+sized for documents (not rows of scalars), AQE on, shuffle partitions
+matched to core count. ``giant_doc_scan`` scopes the small parquet read
+batch that giant-document scans need.
 
 ``lazy_zip_invalidation`` is the worker-side half of the runtime set-up:
 every Python UDF body calls it first.
@@ -22,84 +25,73 @@ __all__ = [
     "get_spark",
     "giant_doc_scan",
     "lazy_zip_invalidation",
-    "scoped_sql_conf",
 ]
 
 
 def get_spark(
-    app_name: str = "go-readability-spark",
-    cores: int | None = None,
-    shuffle_partitions: int | None = None,
-    arrow_max_records: int = 256,
+    app_name: str = "go-readability-spark", cores: int | None = None
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession.
+    """Build (or fetch) a SparkSession: the one place the repo builds one.
 
-    - ``arrow_max_records=256``: an Arrow batch of average (~10 KiB) docs is
-      a few MiB; skew_partitioned() hash-spreads giant docs across all
-      partitions so a batch never aggregates many multi-MiB documents
-      (SURVEY.md §4.2).
+    Workload confs, set on every launch:
+
+    - Arrow ``maxRecordsPerBatch`` 256: an Arrow batch of average
+      (~10 KiB) docs is a few MiB; skew_partitioned() hash-spreads giant
+      docs across all partitions so a batch never aggregates many
+      multi-MiB documents (SURVEY.md §4.2).
     - AQE coalesces the small shuffles of metrics rollups; the extraction
       stage itself is map-side only (no shuffle after the repartition).
+    - Arrow for pandas conversion, and a UTC session time zone.
+
+    Local-resource confs (master, driver memory, shuffle partitions, UI
+    off, warehouse) are set only when this process was not started by
+    spark-submit (no ``PYSPARK_GATEWAY_PORT``): a builder master would
+    override the launcher's ``--master``. Under spark-submit the launcher
+    owns the resources and ``cores`` is ignored.
+
+    Cores: an explicit ``cores``, else an explicit ``SPARK_GRAFT_CPUS``,
+    is used exactly. Only the derived default is capped, at
+    min(usable CPUs, 16): the 32-CPU host delivers ~16 effective cores
+    (BENCH.md host-capacity control) and 16 threads beat 32 (3,028 vs
+    2,395 docs/s), and 32 concurrent giant-document scan tasks overwhelm
+    the column-vector buffers whatever the heap (SCALE.md §13).
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(arrow_max_records),
-        )
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/gr_warehouse"),
-        )
     )
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        cores = (
+            cores
+            or int(os.environ.get("SPARK_GRAFT_CPUS") or 0)
+            or min(len(os.sched_getaffinity(0)), 16)
+        )
+        builder = (
+            builder.master(f"local[{cores}]")
+            .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
+            # the default 1g driver heap cannot run a giant-document
+            # corpus: the 16 GB/600k checkpoint run OOMs on it (SCALE.md §13)
+            .config(
+                "spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+            )
+            .config("spark.ui.enabled", "false")
+            .config(
+                "spark.sql.warehouse.dir",
+                os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/gr_warehouse"),
+            )
+        )
     return builder.getOrCreate()
 
 
 @contextlib.contextmanager
-def scoped_sql_conf(spark: SparkSession, confs: dict):
-    """Pin runtime SQL confs for the duration of the block, restoring the
-    prior values (or unsetting) on exit.
-
-    The vectorized-reader batch size (and most scan knobs) are read at
-    *physical planning* time, i.e. when an action runs — NOT when
-    ``spark.read`` builds the lazy DataFrame. Every action whose scan
-    should see the pinned value must therefore execute INSIDE the block;
-    a DataFrame returned out of the block plans under the session
-    default.
-    """
-    prior: dict[str, str | None] = {}
-    for key in confs:
-        try:
-            prior[key] = spark.conf.get(key)
-        except Exception:  # unset conf → restore by unsetting
-            prior[key] = None
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, str(v))
-        yield spark
-    finally:
-        for key, old in prior.items():
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
-
-
-def giant_doc_scan(spark: SparkSession, batch_rows: int = 256):
-    """Scope for parquet scans over giant-document span tables.
+def giant_doc_scan(spark: SparkSession):
+    """Scope for parquet scans over giant-document span tables: pins the
+    vectorized reader to 256 rows per columnar batch, restoring the prior
+    value (or unsetting it) on exit.
 
     At the default 4,096 rows per columnar read batch, a row group dense
     with multi-MiB span documents asks the vectorized reader for >100 MB
@@ -109,14 +101,25 @@ def giant_doc_scan(spark: SparkSession, batch_rows: int = 256):
     scan: 4096 fails, 1024 OOMs the executor heap, 256 completes. The
     small batch costs ~10-15% on scan-heavy narrow-row relational
     queries, so it is scoped here rather than set session-wide
-    (round-4 VERDICT "what's wrong" #2): wrap the giant-doc *actions*
-    (see scoped_sql_conf's planning-time caveat) and let narrow tables
-    keep the default. job.py — the production extraction entry, whose
-    whole workload is giant-doc scans — sets 256 session-wide instead.
+    (round-4 VERDICT "what's wrong" #2); narrow tables keep the default.
+
+    The batch size is read at *physical planning* time, i.e. when an
+    action runs — NOT when ``spark.read`` builds the lazy DataFrame.
+    Every action whose scan should see 256 must therefore execute INSIDE
+    the block; a DataFrame returned out of it plans under the session
+    default. job.py runs all of its actions inside one block. The conf
+    is the session's, so concurrent callers on one session share it.
     """
-    return scoped_sql_conf(
-        spark, {"spark.sql.parquet.columnarReaderBatchSize": str(batch_rows)}
-    )
+    key = "spark.sql.parquet.columnarReaderBatchSize"
+    prior = spark.conf.get(key, None)  # None: not set on this session
+    spark.conf.set(key, "256")
+    try:
+        yield spark
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
 
 
 def lazy_zip_invalidation() -> None:

@@ -220,14 +220,15 @@ MARKER_TAGS = frozenset({
     "td", "th", "caption", "applet", "object", "marquee", "template",
 })
 
-# HTML integration points (WHATWG tree construction): inside these,
+# HTML integration points (WHATWG tree construction; x/net/html's
+# htmlIntegrationPoint and mathMLTextIntegrationPoint): inside these,
 # token processing resumes the HTML rules even under an open <svg>/
-# <math> — the nearest marker on the open stack decides foreignness.
-# "title" matters only under svg (in head it is never below an svg).
-_HTML_INTEGRATION_POINTS = frozenset({
-    "foreignobject", "desc", "title",
-    "mtext", "mi", "mo", "mn", "ms", "annotation-xml",
-})
+# <math>. Each counts only in its own namespace — an SVG <title> is one,
+# a MathML <title> is not — and a MathML annotation-xml only with an
+# HTML encoding attribute.
+_SVG_INTEGRATION_POINTS = frozenset({"foreignobject", "desc", "title"})
+_MATHML_INTEGRATION_POINTS = frozenset({"mi", "mo", "mn", "ms", "mtext"})
+_HTML_ENCODINGS = frozenset({"text/html", "application/xhtml+xml"})
 
 # Start tags that do NOT reconstruct active formatting elements before
 # insertion ("in body" spec: block/structure tags close <p> and insert
@@ -748,18 +749,30 @@ class _TreeBuilder(HTMLParser):
 
     def _in_foreign_content(self) -> bool:
         """True when the current node is inside foreign (SVG/MathML)
-        content proper. HTML integration points (foreignObject/desc/
-        title, and the MathML text elements) resume HTML token rules —
-        the NEAREST marker on the stack decides, so a <div/> inside
+        content proper. The tree has no namespaces, so they are replayed
+        down the open stack: <svg>/<math> opened under HTML starts its
+        namespace, and its descendants inherit it until an HTML
+        integration point (foreignObject/desc/title under svg, the
+        MathML text elements and an HTML-encoded annotation-xml under
+        math) resumes HTML rules — so a <div/> inside
         <svg><foreignObject> ignores its self-closing flag again,
         matching x/net/html."""
-        for i in range(len(self.stack) - 1, 0, -1):
-            t = self.stack[i].tag_name
-            if t in _HTML_INTEGRATION_POINTS:
-                return False
-            if t in ("svg", "math"):
-                return True
-        return False
+        ns, integration = "html", False
+        for el in self.stack[1:]:
+            t = el.tag_name
+            if ns == "html" or integration:
+                ns = t if t in ("svg", "math") else "html"
+            if ns == "svg":
+                integration = t in _SVG_INTEGRATION_POINTS
+            elif ns == "math":
+                integration = t in _MATHML_INTEGRATION_POINTS or (
+                    t == "annotation-xml"
+                    and el.attributes.get("encoding", "").lower()
+                    in _HTML_ENCODINGS
+                )
+            else:
+                integration = False
+        return ns != "html" and not integration
 
     def _foster_point(self):
         """(parent, index) immediately before the nearest open table, or

@@ -43,43 +43,14 @@ def main(argv=None) -> int:
     parser.add_argument("--mode", choices=("batch", "stream"), default="batch")
     args = parser.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
     from go_readability_spark.operators.extract import metrics_rollup
     from go_readability_spark.plans.checkpoint import run_checkpointed
+    from go_readability_spark.plans.session import get_spark, giant_doc_scan
     from go_readability_spark.readability.extract import ReadabilityOptions
 
-    # In production the session comes from spark-submit's conf; these
-    # configs fill local-run defaults — notably the Arrow batch size,
-    # which must stay small for document-sized rows (plans/session.py).
-    builder = (
-        SparkSession.builder.appName("gr-spark-extract")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        # bound the vectorized parquet read batch the same way — the
-        # 4096-row default over-reserves on giant-document tables
-        # (plans/session.py has the full story)
-        .config("spark.sql.parquet.columnarReaderBatchSize", "256")
-        # local-mode fallback only (spark-submit confs win when set):
-        # the default 1g driver heap cannot run a giant-document corpus
-        # — the 16 GB/600k checkpoint run OOMs on it (SCALE.md §13)
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    if "PYSPARK_GATEWAY_PORT" not in os.environ:
-        # direct `python job.py` launch (no spark-submit): the implicit
-        # default is local[*] = every logical CPU, and 32 concurrent
-        # giant-document scan tasks overwhelm the column-vector buffers
-        # no matter the heap (measured on the 16 GB corpus, SCALE.md
-        # §13). Cap to the measured-effective core count, same as the
-        # library sessions (plans/session.py). Under spark-submit the
-        # launcher's --master wins and this branch never runs.
-        cores = min(int(os.environ.get("SPARK_GRAFT_CPUS", "16")), 16)
-        builder = builder.master(f"local[{cores}]")
-    spark = builder.getOrCreate()
+    # Under spark-submit the launcher's master and resources stand; a
+    # direct `python job.py` gets get_spark's local defaults.
+    spark = get_spark("gr-spark-extract")
     options = ReadabilityOptions(
         char_threshold=args.char_threshold, forced_page_type=args.page_type
     )
@@ -94,15 +65,18 @@ def main(argv=None) -> int:
             return 2
         from go_readability_spark.streaming import run_extract_stream
 
-        query = run_extract_stream(
-            spark,
-            args.input,
-            args.output,
-            args.manifest,  # doubles as the streaming checkpoint dir
-            options=options,
-            available_now=True,
-        )
-        query.awaitTermination()
+        # the stream clones the session when it starts, so it keeps the
+        # small read batch until it has drained
+        with giant_doc_scan(spark):
+            query = run_extract_stream(
+                spark,
+                args.input,
+                args.output,
+                args.manifest,  # doubles as the streaming checkpoint dir
+                options=options,
+                available_now=True,
+            )
+            query.awaitTermination()
         print("stream drained; checkpoint at", args.manifest)
         return 0
 
@@ -111,17 +85,20 @@ def main(argv=None) -> int:
     else:
         documents = spark.table(args.input)  # Iceberg catalog path
 
-    result = run_checkpointed(
-        spark,
-        documents,
-        args.output,
-        args.manifest,
-        n_parts=args.n_parts,
-        options=options,
-        num_partitions=args.num_partitions,
-        concurrency=args.concurrency,
-    )
-    rollup = metrics_rollup(result).collect()
+    # every action here scans giant-document rows: the run, and the
+    # rollup that re-reads its output
+    with giant_doc_scan(spark):
+        result = run_checkpointed(
+            spark,
+            documents,
+            args.output,
+            args.manifest,
+            n_parts=args.n_parts,
+            options=options,
+            num_partitions=args.num_partitions,
+            concurrency=args.concurrency,
+        )
+        rollup = metrics_rollup(result).collect()
     for row in rollup:
         print(dict(row.asDict()))
     return 0

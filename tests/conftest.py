@@ -10,7 +10,7 @@ def spark():
     pyspark = pytest.importorskip("pyspark")  # noqa: F841
     from go_readability_spark.plans.session import get_spark
 
-    spark = get_spark(app_name="pytest", cores=4, shuffle_partitions=8)
+    spark = get_spark(app_name="pytest", cores=4)
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()

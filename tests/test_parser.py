@@ -495,3 +495,42 @@ class TestAdoptionAgencySpec:
         assert self._body(
             "<svg><desc><svg><path/><path/></svg>y</desc></svg>"
         ) == "<svg><desc><svg><path></path><path></path></svg>y</desc></svg>"
+
+    def test_integration_points_are_namespace_specific(self):
+        # x/net/html htmlIntegrationPoint / mathMLTextIntegrationPoint:
+        # <title> is an integration point only as an SVG element, <mi>
+        # only as a MathML one; elsewhere the self-closing flag holds
+        assert self._body("<svg><title><foo/>x</title></svg>") == (
+            "<svg><title><foo>x</foo></title></svg>"
+        )
+        assert self._body("<math><title><foo/>x</title></math>") == (
+            "<math><title><foo></foo>x</title></math>"
+        )
+        assert self._body("<svg><mi><foo/>x</mi></svg>") == (
+            "<svg><mi><foo></foo>x</mi></svg>"
+        )
+        # an HTML element inside an integration point is HTML, whatever
+        # its tag
+        assert self._body(
+            "<svg><foreignobject><title><foo/>x</title></foreignobject></svg>"
+        ) == "<svg><foreignobject><title><foo>x</foo></title></foreignobject></svg>"
+
+    def test_annotation_xml_needs_html_encoding(self):
+        assert self._body(
+            "<math><annotation-xml><foo/>x</annotation-xml></math>"
+        ) == "<math><annotation-xml><foo></foo>x</annotation-xml></math>"
+        for enc in ("text/html", "Application/XHTML+XML"):
+            assert self._body(
+                f'<math><annotation-xml encoding="{enc}"><foo/>x'
+                "</annotation-xml></math>"
+            ) == (
+                f'<math><annotation-xml encoding="{enc}"><foo>x</foo>'
+                "</annotation-xml></math>"
+            )
+        assert self._body(
+            '<math><annotation-xml encoding="image/svg+xml"><foo/>x'
+            "</annotation-xml></math>"
+        ) == (
+            '<math><annotation-xml encoding="image/svg+xml"><foo></foo>x'
+            "</annotation-xml></math>"
+        )

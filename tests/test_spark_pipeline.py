@@ -10,6 +10,8 @@ broadcast anti-join).
 from __future__ import annotations
 
 import importlib
+import os
+import re
 import sys
 import zipimport
 
@@ -31,7 +33,11 @@ from go_readability_spark.plans.checkpoint import (  # noqa: E402
     run_checkpointed,
     with_part,
 )
-from go_readability_spark.plans.session import lazy_zip_invalidation  # noqa: E402
+from go_readability_spark.plans.session import (  # noqa: E402
+    get_spark,
+    giant_doc_scan,
+    lazy_zip_invalidation,
+)
 from go_readability_spark.plans.skew import (  # noqa: E402
     MAX_DOC_BYTES,
     skew_partitioned,
@@ -514,3 +520,88 @@ class TestLazyZipInvalidation:
         )
         assert list(_arrow_batches(None, MAX_DOC_BYTES)(iter([]))) == []
         assert zipimport.zipimporter.invalidate_caches._stat_guarded
+
+
+READ_BATCH = "spark.sql.parquet.columnarReaderBatchSize"
+
+
+class TestSession:
+    def test_local_session_confs(self, spark):
+        # getOrCreate re-applies the builder's modifiable confs to the
+        # running session, so this reads what get_spark(cores=4) sets
+        s = get_spark(app_name="pytest", cores=4)
+        assert s.sparkContext.defaultParallelism == 4
+        assert {
+            k: s.conf.get(k)
+            for k in (
+                "spark.sql.shuffle.partitions",
+                "spark.sql.execution.arrow.maxRecordsPerBatch",
+                "spark.sql.execution.arrow.pyspark.enabled",
+                "spark.sql.session.timeZone",
+                "spark.sql.adaptive.enabled",
+                READ_BATCH,
+            )
+        } == {
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+            "spark.sql.execution.arrow.pyspark.enabled": "true",
+            "spark.sql.session.timeZone": "UTC",
+            "spark.sql.adaptive.enabled": "true",
+            READ_BATCH: "4096",
+        }
+
+    def test_core_rule(self, monkeypatch):
+        # the builder's options, read instead of starting a session
+        monkeypatch.setattr(
+            pyspark.sql.SparkSession.Builder,
+            "getOrCreate",
+            lambda builder: dict(builder._options),
+        )
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        derived = min(len(os.sched_getaffinity(0)), 16)
+        assert get_spark()["spark.master"] == f"local[{derived}]"
+        assert get_spark(cores=3)["spark.master"] == "local[3]"
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "20")
+        assert get_spark()["spark.master"] == "local[20]"
+        assert get_spark()["spark.sql.shuffle.partitions"] == "20"
+        assert get_spark(cores=3)["spark.master"] == "local[3]"
+        # under spark-submit the launcher owns master and resources
+        monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+        assert get_spark(cores=3) == {
+            "spark.app.name": "go-readability-spark",
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+            "spark.sql.execution.arrow.pyspark.enabled": "true",
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.session.timeZone": "UTC",
+        }
+
+    def test_giant_doc_scan_restores_unset_prior(self, spark):
+        assert spark.conf.get(READ_BATCH, None) is None
+        with giant_doc_scan(spark):
+            assert spark.conf.get(READ_BATCH) == "256"
+        assert spark.conf.get(READ_BATCH, None) is None
+
+    def test_giant_doc_scan_restores_set_prior(self, spark):
+        spark.conf.set(READ_BATCH, "1024")
+        try:
+            with pytest.raises(RuntimeError):
+                with giant_doc_scan(spark):
+                    assert spark.conf.get(READ_BATCH) == "256"
+                    raise RuntimeError("action failed")
+            assert spark.conf.get(READ_BATCH) == "1024"
+        finally:
+            spark.conf.unset(READ_BATCH)
+
+    def test_get_spark_is_the_only_session_builder(self):
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = re.compile(r"SparkSession\s*\.\s*builder")
+        found = []
+        for d, dirs, files in os.walk(root):
+            dirs[:] = [x for x in dirs if not x.startswith((".", "__"))]
+            for f in files:
+                if f.endswith(".py"):
+                    path = os.path.join(d, f)
+                    with open(path, encoding="utf-8") as fh:
+                        if builder.search(fh.read()):
+                            found.append(os.path.relpath(path, root))
+        assert found == [os.path.join("go_readability_spark", "plans", "session.py")]

@@ -28,12 +28,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def run_bench(cpus: int, n_docs: int) -> dict:
     env = dict(
         os.environ,
+        # an explicit core count is used exactly (plans.session.get_spark)
         SPARK_GRAFT_CPUS=str(cpus),
-        # the pair MUST run at exactly the requested parallelism —
-        # bench.py's effective-core cap (min(req,16)) would otherwise
-        # silently turn an 8->32 pair into 8->16 while the efficiency
-        # formula still divides by 4
-        SPARK_GRAFT_CPUS_NOCAP="1",
         SPARK_GRAFT_BENCH_DOCS=str(n_docs),
         SPARK_GRAFT_BENCH_SKIP_QUERIES="1",
     )
