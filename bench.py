@@ -14,8 +14,8 @@ detail rides the earlier line and a sidecar BENCH_DETAIL.json.
 
 Env:
   SPARK_GRAFT_SF_DIR      input tables (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS        core count, used exactly (default: get_spark's
-                          min(usable CPUs, 16))
+  SPARK_GRAFT_CPUS        core count, capped at 16 (default: usable
+                          CPUs, capped the same; plans.session.get_spark)
   SPARK_GRAFT_BENCH_DOCS  synthetic corpus size (default 6000)
   SPARK_GRAFT_BENCH_SKIP_QUERIES  "1" → only the extraction benchmark
 
@@ -23,7 +23,8 @@ The headline number is the synthetic-corpus extraction: N interleaved
 span documents (every population, one giant per 200 docs for skew)
 through the full pipeline — native doc_bytes pre-pass, salted size-aware
 repartition, Arrow-batched extraction UDF, metrics rollup. Scaling
-evidence across core counts is produced by tools/scaling_bench.py.
+evidence across core counts is produced by tools/scaling_bench.py, which
+calls main(cores=N) to run at exactly N threads, past the cap.
 """
 
 from __future__ import annotations
@@ -36,7 +37,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
+def main(cores: int | None = None) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_bench = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "6000"))
     skip_queries = os.environ.get("SPARK_GRAFT_BENCH_SKIP_QUERIES") == "1"
@@ -50,7 +51,7 @@ def main() -> None:
     from go_readability_spark.queries import queries
     from go_readability_spark.sources.tables import corpus_df
 
-    spark = get_spark(app_name=f"bench-sf{sf}")
+    spark = get_spark(app_name=f"bench-sf{sf}", cores=cores)
     spark.sparkContext.setLogLevel("ERROR")
     cpus = spark.sparkContext.defaultParallelism
 

@@ -49,12 +49,13 @@ def get_spark(
     override the launcher's ``--master``. Under spark-submit the launcher
     owns the resources and ``cores`` is ignored.
 
-    Cores: an explicit ``cores``, else an explicit ``SPARK_GRAFT_CPUS``,
-    is used exactly. Only the derived default is capped, at
-    min(usable CPUs, 16): the 32-CPU host delivers ~16 effective cores
-    (BENCH.md host-capacity control) and 16 threads beat 32 (3,028 vs
-    2,395 docs/s), and 32 concurrent giant-document scan tasks overwhelm
-    the column-vector buffers whatever the heap (SCALE.md §13).
+    Cores: an explicit ``cores`` is used exactly. Otherwise the count is
+    ``SPARK_GRAFT_CPUS``, else the usable CPUs, capped at 16: the 32-CPU
+    host delivers ~16 effective cores (BENCH.md host-capacity control)
+    and 16 threads beat 32 (3,028 vs 2,395 docs/s), and 32 concurrent
+    giant-document scan tasks overwhelm the column-vector buffers
+    whatever the heap (SCALE.md §13). The cap holds for
+    ``SPARK_GRAFT_CPUS`` too, which is often set to the full CPU count.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -64,10 +65,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
     )
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
-        cores = (
-            cores
-            or int(os.environ.get("SPARK_GRAFT_CPUS") or 0)
-            or min(len(os.sched_getaffinity(0)), 16)
+        cores = cores or min(
+            int(os.environ.get("SPARK_GRAFT_CPUS") or 0)
+            or len(os.sched_getaffinity(0)),
+            16,
         )
         builder = (
             builder.master(f"local[{cores}]")

@@ -65,8 +65,7 @@ def main(argv=None) -> int:
             return 2
         from go_readability_spark.streaming import run_extract_stream
 
-        # the stream clones the session when it starts, so it keeps the
-        # small read batch until it has drained
+        # the start and the drain both run inside the scope
         with giant_doc_scan(spark):
             query = run_extract_stream(
                 spark,

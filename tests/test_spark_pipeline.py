@@ -561,10 +561,15 @@ class TestSession:
         derived = min(len(os.sched_getaffinity(0)), 16)
         assert get_spark()["spark.master"] == f"local[{derived}]"
         assert get_spark(cores=3)["spark.master"] == "local[3]"
-        monkeypatch.setenv("SPARK_GRAFT_CPUS", "20")
-        assert get_spark()["spark.master"] == "local[20]"
-        assert get_spark()["spark.sql.shuffle.partitions"] == "20"
+        # the environment's count is capped like the derived one
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+        assert get_spark()["spark.master"] == "local[16]"
+        assert get_spark()["spark.sql.shuffle.partitions"] == "16"
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+        assert get_spark()["spark.master"] == "local[2]"
+        assert get_spark()["spark.sql.shuffle.partitions"] == "8"
         assert get_spark(cores=3)["spark.master"] == "local[3]"
+        assert get_spark(cores=32)["spark.master"] == "local[32]"
         # under spark-submit the launcher owns master and resources
         monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
         assert get_spark(cores=3) == {
@@ -576,7 +581,7 @@ class TestSession:
         }
 
     def test_giant_doc_scan_restores_unset_prior(self, spark):
-        assert spark.conf.get(READ_BATCH, None) is None
+        spark.conf.unset(READ_BATCH)
         with giant_doc_scan(spark):
             assert spark.conf.get(READ_BATCH) == "256"
         assert spark.conf.get(READ_BATCH, None) is None

@@ -28,13 +28,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def run_bench(cpus: int, n_docs: int) -> dict:
     env = dict(
         os.environ,
-        # an explicit core count is used exactly (plans.session.get_spark)
-        SPARK_GRAFT_CPUS=str(cpus),
         SPARK_GRAFT_BENCH_DOCS=str(n_docs),
         SPARK_GRAFT_BENCH_SKIP_QUERIES="1",
     )
+    # a fresh process per leg; get_spark uses an explicit cores= exactly,
+    # past the 16-core cap that SPARK_GRAFT_CPUS is held to
     out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py")],
+        [sys.executable, "-c", f"import bench; bench.main(cores={cpus})"],
         env=env,
         capture_output=True,
         text=True,
