@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -56,13 +57,16 @@ def main(cores: int | None = None) -> None:
     cpus = spark.sparkContext.defaultParallelism
 
     # Materialize the corpus once (parquet, like the production Iceberg
-    # scan) so the headline times scan → extract, not synthesis.
+    # scan; cached under TMPDIR, so side-by-side checkouts can keep apart)
+    # so the headline times scan → extract, not synthesis.
     # Fixed 64-way layout regardless of the session's core count: the
     # file count caps scan/shuffle-map parallelism, and scaling runs at
     # different core counts must read the identical table.
     from go_readability_spark.corpus import CORPUS_VERSION
 
-    corpus_path = f"/tmp/gr_bench_corpus_{n_bench}_v{CORPUS_VERSION}"
+    corpus_path = os.path.join(
+        tempfile.gettempdir(), f"gr_bench_corpus_{n_bench}_v{CORPUS_VERSION}"
+    )
     if not os.path.exists(os.path.join(corpus_path, "_SUCCESS")):
         corpus_df(spark, n_bench, giant_every=200, num_partitions=64).write.mode(
             "overwrite"

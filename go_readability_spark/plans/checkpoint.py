@@ -7,13 +7,15 @@ partition and resume idempotently. Mechanics (SURVEY.md §4.2):
   partition value, e.g. a crawl-date/bucket; here: an explicit column or
   ``pmod(xxhash64(doc_id), n_parts)``);
 - a **manifest table** records one row per finished partition:
-  (part, status, n_docs, n_errors, lineage_hash, finished_at). The lineage
+  (part, n_parts, status, n_docs, n_errors, total_bytes, avg_prune_ratio,
+  lineage_hash, finished_at). The stats are observed on the part's own
+  write job (``DataFrame.observe``), so no part is read back. The lineage
   hash is order-insensitive (XOR of xxhash64(doc_id)) so reruns verify they
   processed the same input slice;
-- resume = ``input LEFT ANTI JOIN manifest ON part`` — the manifest is tiny
-  (one row per partition, ≤ tens of thousands at 10^12 docs), so the join
-  side is **broadcast** and the anti-join costs one map-side probe, no
-  shuffle of the input;
+- resume skips the parts the manifest marks done. The manifest is tiny
+  (one row per partition, ≤ tens of thousands at 10^12 docs), so it is
+  collected once to the driver; ``resume_filter`` is the same skip as a
+  broadcast anti-join for callers that want the pending rows;
 - output per partition is written with dynamic partition overwrite
   (parquet here, ``writeTo(...).overwritePartitions()`` on Iceberg), which
   makes a rerun of a half-written partition idempotent.
@@ -25,11 +27,13 @@ Iceberg calls are the same shape.
 from __future__ import annotations
 
 import os
+import shutil
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .session import giant_doc_scan
 from pyspark.sql.types import (
@@ -73,7 +77,8 @@ def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
     if os.path.isdir(manifest_dir) and any(
         f.endswith(".parquet") for _, _, fs in os.walk(manifest_dir) for f in fs
     ):
-        return spark.read.parquet(manifest_dir)
+        # explicit schema: no footer-inference job before the real read
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
     return spark.createDataFrame([], MANIFEST_SCHEMA)
 
 
@@ -83,17 +88,23 @@ def resume_filter(input_df: DataFrame, manifest: DataFrame) -> DataFrame:
     return input_df.join(F.broadcast(done), "part", "left_anti")
 
 
-def _lineage_and_counts(extracted_part: DataFrame) -> dict:
-    row = extracted_part.agg(
-        F.count("*").alias("n_docs"),
+def _lineage_and_counts(extracted_part: DataFrame) -> tuple[DataFrame, Observation]:
+    """Attach the part's manifest stats to ``extracted_part``: they are
+    computed by whatever action runs the returned DataFrame (the part's
+    write) and read from the Observation's ``get`` after it. An empty
+    part observes ``n_docs=0`` and ``None`` for the other stats."""
+    obs = Observation()
+    observed = extracted_part.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_errors"),
         F.sum("doc_bytes").alias("total_bytes"),
         F.avg("metrics.prune_ratio").alias("avg_prune_ratio"),
         # bit_xor: order-insensitive and overflow-free under ANSI mode
         # (doc_ids are unique, so XOR cancellation needs identical dupes)
         F.expr("bit_xor(xxhash64(doc_id))").alias("lineage_hash"),
-    ).collect()[0]
-    return row.asDict()
+    )
+    return observed, obs
 
 
 def mark_partition_done(
@@ -128,22 +139,25 @@ def run_checkpointed(
 ) -> DataFrame:
     """Extract ``documents`` partition-by-partition with checkpointing.
 
-    Already-done partitions (per the manifest) are skipped via broadcast
-    anti-join; each pending partition is extracted, written to its own
-    hive-style ``part=N`` directory (full-directory overwrite — idempotent
-    on rerun, exactly the guarantee Iceberg's ``overwritePartitions()``
-    gives per partition), and marked done with lineage + metrics. Returns
-    the full output DataFrame.
+    Already-done partitions (per the manifest, read once) are skipped;
+    each pending partition is extracted, written to its own hive-style
+    ``part=N`` directory (full-directory overwrite — idempotent on rerun,
+    exactly the guarantee Iceberg's ``overwritePartitions()`` gives per
+    partition), and marked done with the lineage + metrics observed on
+    that write. Returns the full output DataFrame.
 
-    ``concurrency > 1`` runs that many partitions as concurrent Spark
-    jobs from a driver thread pool — the scheduler interleaves their
-    stages, so at 10⁴ parts the pipeline is not serialized through one
-    driver loop. Safe because (a) each part writes under its own output
-    root, so the Hadoop committer's ``_temporary`` staging dirs never
-    collide, and (b) manifest appends are tiny and serialized by a
-    driver-side lock. Failed parts don't block the others; the first
-    failure is re-raised after the pool drains (finished parts are in
-    the manifest, so a rerun resumes past them).
+    The parts run on a driver thread pool of ``max(concurrency, 1)``
+    threads, so up to ``concurrency`` parts are concurrent Spark jobs —
+    the scheduler interleaves their stages, so at 10⁴ parts the pipeline
+    is not serialized through one driver loop. Safe because (a) each part
+    writes under its own output root, so the Hadoop committer's
+    ``_temporary`` staging dirs never collide, and (b) manifest appends
+    are tiny and serialized by a driver-side lock. One failure rule at
+    every ``concurrency``, 1 included: a failed part does not block the
+    others, and after the pool drains the first failure (lowest part) is
+    re-raised as ``RuntimeError(... part=N)``. Finished parts are in the
+    manifest and the staged input is kept, so a rerun processes only the
+    failed parts.
 
     The RUN itself pins the giant-document columnar read batch
     (plans.giant_doc_scan), but the RETURNED DataFrame plans lazily
@@ -154,54 +168,39 @@ def run_checkpointed(
     """
     from ..operators.extract import extract_documents
 
-    manifest = read_manifest(spark, manifest_dir)
+    manifest = read_manifest(spark, manifest_dir).select(
+        "part", "n_parts", "status"
+    ).collect()
     # the part key is pmod(hash, n_parts): resuming with a DIFFERENT
-    # n_parts would anti-join new-scheme part ids against old-scheme done
-    # ids — silent loss AND duplication. Refuse instead.
-    prior = [
-        r["n_parts"]
-        for r in manifest.select("n_parts").distinct().collect()
-        if r["n_parts"]
-    ]
-    if prior and set(prior) != {n_parts}:
+    # n_parts would skip new-scheme part ids by old-scheme done ids —
+    # silent loss AND duplication. Refuse instead.
+    prior = sorted({r["n_parts"] for r in manifest if r["n_parts"]})
+    if prior and prior != [n_parts]:
         raise ValueError(
             f"manifest at {manifest_dir} was written with n_parts={prior}; "
             f"resume must use the same value (got {n_parts})"
         )
+    done = {int(r["part"]) for r in manifest if r["status"] == "done"}
 
     # Pending parts. For the hash-derived scheme the universe is
     # 0..n_parts-1 by construction (pmod), known without touching the
-    # input — checked BEFORE any staging work so a fully-done rerun is
-    # a manifest read and nothing else. An input that brings its OWN
-    # part column (the Iceberg-partitioned production shape) has
-    # arbitrary part values, so pending comes from the input's distinct
-    # parts via the broadcast anti-join (no separate done-set job).
+    # input — checked BEFORE any staging work, so a fully-done rerun
+    # runs one Spark job: the manifest collect above (the returned
+    # output is read lazily). An input that brings its OWN part column
+    # (the Iceberg-partitioned production shape) has arbitrary part
+    # values, so the universe is the input's distinct parts.
     has_own_part = "part" in documents.columns
     if has_own_part:
-        pending_parts = [
-            int(r["part"])
-            for r in resume_filter(documents, manifest)
-            .select("part")
-            .distinct()
-            .collect()
+        universe = [
+            int(r["part"]) for r in documents.select("part").distinct().collect()
         ]
     else:
-        done_parts: set[int] = set()
-        if manifest.columns:
-            done_parts = {
-                int(r["part"])
-                for r in manifest.filter(F.col("status") == "done")
-                .select("part")
-                .distinct()
-                .collect()
-            }
-        pending_parts = [p for p in range(n_parts) if p not in done_parts]
+        universe = range(n_parts)
+    pending_parts = sorted(p for p in universe if p not in done)
     if not pending_parts:
         # a kill can land between the last mark_partition_done and the
         # staging cleanup below — sweep the leftover staged copy here
         # so the leak is one-rerun-bounded, not permanent
-        import shutil
-
         shutil.rmtree(out_dir + "__staging", ignore_errors=True)
         return _read_output(spark, out_dir)
 
@@ -246,55 +245,44 @@ def run_checkpointed(
 
         def process_part(part: int) -> None:
             slice_df = parts_src.filter(F.col("part") == part).drop("part")
-            extracted = extract_documents(
-                slice_df, options=options, num_partitions=num_partitions
+            extracted, stats = _lineage_and_counts(
+                extract_documents(
+                    slice_df, options=options, num_partitions=num_partitions
+                )
             )
             part_dir = os.path.join(out_dir, f"part={int(part)}")
             extracted.write.mode("overwrite").parquet(part_dir)
-            stats = _lineage_and_counts(spark.read.parquet(part_dir))
             with manifest_lock:
                 mark_partition_done(
-                    spark, manifest_dir, part, stats, n_parts=n_parts
+                    spark, manifest_dir, part, stats.get, n_parts=n_parts
                 )
 
-        if concurrency <= 1:
-            for part in sorted(pending_parts):
-                process_part(part)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=concurrency) as pool:
-                futures = {
-                    part: pool.submit(process_part, part)
-                    for part in sorted(pending_parts)
-                }
-            errors = [
-                (part, f.exception())
-                for part, f in futures.items()
-                if f.exception() is not None
-            ]
-            if errors:
-                part, exc = errors[0]
-                raise RuntimeError(
-                    f"{len(errors)} partition(s) failed; first: part={part}"
-                ) from exc
+        with ThreadPoolExecutor(max_workers=max(concurrency, 1)) as pool:
+            futures = {part: pool.submit(process_part, part) for part in pending_parts}
+        errors = [
+            (part, f.exception())
+            for part, f in futures.items()
+            if f.exception() is not None
+        ]
+        if errors:
+            part, exc = errors[0]
+            raise RuntimeError(
+                f"{len(errors)} partition(s) failed; first: part={part}"
+            ) from exc
     if staged:
-        import shutil
-
         shutil.rmtree(os.path.dirname(staging), ignore_errors=True)
 
     return _read_output(spark, out_dir)
 
 
 def _read_output(spark: SparkSession, out_dir: str) -> DataFrame:
+    from ..schemas import EXTRACTED_SCHEMA
+
+    # a new StructType: StructType.add would mutate the shared schema
+    schema = StructType(EXTRACTED_SCHEMA.fields + [StructField("part", LongType())])
     if not os.path.isdir(out_dir):
         # nothing was ever written (empty input, or fully-done manifest
         # with a cleaned output dir): return an empty result, not a crash
-        from ..schemas import EXTRACTED_SCHEMA
-
-        # a new StructType: StructType.add would mutate the shared schema
-        schema = StructType(
-            EXTRACTED_SCHEMA.fields + [StructField("part", LongType())]
-        )
         return spark.createDataFrame([], schema)
-    return spark.read.parquet(out_dir)
+    # explicit schema: no footer-inference job, so returning it is lazy
+    return spark.read.schema(schema).parquet(out_dir)

@@ -268,6 +268,148 @@ class TestCheckpointResume:
         )
         assert result2.count() == 16
 
+    def test_no_part_output_is_read_back(self, spark, tmp_path, monkeypatch):
+        """The manifest stats are observed on each part's write: no
+        ``part=N`` output directory is read before the run returns."""
+        from pyspark.sql.readwriter import DataFrameReader
+
+        out_dir = str(tmp_path / "out")
+        read: list[str] = []
+        orig_parquet = DataFrameReader.parquet
+
+        def spy_parquet(self, *paths, **kwargs):
+            read.extend(str(p) for p in paths)
+            return orig_parquet(self, *paths, **kwargs)
+
+        monkeypatch.setattr(DataFrameReader, "parquet", spy_parquet)
+        run_checkpointed(
+            spark, corpus_df(spark, 8), out_dir, str(tmp_path / "man"),
+            n_parts=3, num_partitions=2,
+        )
+        part_prefix = os.path.join(out_dir, "part=")
+        assert read, "spy saw no parquet reads"
+        assert [p for p in read if p.startswith(part_prefix)] == []
+
+    @pytest.mark.parametrize("concurrency", [1, 4])
+    def test_manifest_equals_disk(self, spark, tmp_path, concurrency):
+        """Observed manifest stats equal the same aggregates recomputed
+        from each written part (empty parts included), and the manifest's
+        lineage XOR equals the input's."""
+        out_dir = str(tmp_path / "out")
+        man_dir = str(tmp_path / "man")
+        docs = corpus_df(spark, 6, num_partitions=2)
+        run_checkpointed(
+            spark, docs, out_dir, man_dir, n_parts=8, num_partitions=2,
+            concurrency=concurrency,
+        )
+        manifest = read_manifest(spark, man_dir).collect()
+        assert sorted(r["part"] for r in manifest) == list(range(8))
+        empty = 0
+        lineage = 0
+        for m in manifest:
+            part_dir = os.path.join(out_dir, f"part={m['part']}")
+            has_rows_file = os.path.isdir(part_dir) and any(
+                f.endswith(".parquet") for f in os.listdir(part_dir)
+            )
+            disk = {"n_docs": 0, "n_errors": 0, "total_bytes": 0,
+                    "avg_prune_ratio": 0.0, "lineage_hash": 0}
+            if has_rows_file:
+                row = spark.read.parquet(part_dir).agg(
+                    F.count(F.lit(1)).alias("n_docs"),
+                    F.sum(F.col("error").isNotNull().cast("long")).alias("n_errors"),
+                    F.sum("doc_bytes").alias("total_bytes"),
+                    F.avg("metrics.prune_ratio").alias("avg_prune_ratio"),
+                    F.expr("bit_xor(xxhash64(doc_id))").alias("lineage_hash"),
+                ).collect()[0]
+                disk.update({k: v for k, v in row.asDict().items() if v is not None})
+            empty += disk["n_docs"] == 0
+            for k in ("n_docs", "n_errors", "total_bytes", "lineage_hash"):
+                assert m[k] == disk[k], (m["part"], k)
+            assert abs(m["avg_prune_ratio"] - disk["avg_prune_ratio"]) <= 1e-12
+            lineage ^= m["lineage_hash"]
+        assert empty >= 2  # 6 docs over 8 parts
+        assert sum(m["n_docs"] for m in manifest) == 6
+        want = docs.agg(F.expr("bit_xor(xxhash64(doc_id))")).collect()[0][0]
+        assert lineage == want
+
+    def test_failed_part_does_not_block_the_others(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """concurrency=1 follows the pool's rule: the failing part is
+        reported as RuntimeError(part=N) after every other part finished,
+        staging is kept, and a rerun processes only the failed part."""
+        import threading
+
+        from go_readability_spark.operators import extract as extract_mod
+        from go_readability_spark.plans import checkpoint as cp
+
+        out_dir = str(tmp_path / "out")
+        man_dir = str(tmp_path / "man")
+        docs = corpus_df(spark, 8, num_partitions=2)
+        orig_extract = extract_mod.extract_documents
+        calls = []
+        lock = threading.Lock()
+
+        def failing_second_call(*args, **kwargs):
+            with lock:
+                calls.append(1)
+                n = len(calls)
+            if n == 2:
+                raise ValueError("injected part failure")
+            return orig_extract(*args, **kwargs)
+
+        monkeypatch.setattr(extract_mod, "extract_documents", failing_second_call)
+        # parts run in ascending order at concurrency=1: the second is part 1
+        with pytest.raises(RuntimeError, match=r"first: part=1$") as info:
+            cp.run_checkpointed(
+                spark, docs, out_dir, man_dir, n_parts=4, num_partitions=2,
+                concurrency=1,
+            )
+        assert isinstance(info.value.__cause__, ValueError)
+        assert len(calls) == 4
+        done = read_manifest(spark, man_dir).filter("status = 'done'").collect()
+        assert sorted(r["part"] for r in done) == [0, 2, 3]
+        assert os.path.exists(os.path.join(out_dir + "__staging", "n4", "_SUCCESS"))
+
+        marked: list[int] = []
+        orig_mark = cp.mark_partition_done
+
+        def spy_mark(spark_, manifest_dir, part, *args, **kwargs):
+            marked.append(part)
+            return orig_mark(spark_, manifest_dir, part, *args, **kwargs)
+
+        monkeypatch.setattr(extract_mod, "extract_documents", orig_extract)
+        monkeypatch.setattr(cp, "mark_partition_done", spy_mark)
+        result = cp.run_checkpointed(
+            spark, docs, out_dir, man_dir, n_parts=4, num_partitions=2,
+            concurrency=1,
+        )
+        assert marked == [1]
+        assert result.count() == 8
+        assert not os.path.exists(out_dir + "__staging")
+
+    def test_resume_with_other_n_parts_raises_and_writes_nothing(
+        self, spark, tmp_path
+    ):
+        out_dir = str(tmp_path / "out")
+        man_dir = str(tmp_path / "man")
+        docs = corpus_df(spark, 6, num_partitions=2)
+        run_checkpointed(spark, docs, out_dir, man_dir, n_parts=2, num_partitions=2)
+
+        def listing():
+            return sorted(
+                (os.path.join(root, n), os.stat(os.path.join(root, n)).st_mtime_ns)
+                for root, _, names in os.walk(tmp_path)
+                for n in names
+            )
+
+        before = listing()
+        with pytest.raises(ValueError, match=r"n_parts=\[2\]"):
+            run_checkpointed(
+                spark, docs, out_dir, man_dir, n_parts=3, num_partitions=2
+            )
+        assert listing() == before
+
     def test_resume_antijoin_is_broadcast(self, spark):
         docs = with_part(corpus_df(spark, 8), 4)
         manifest = read_manifest(spark, "/nonexistent-manifest")
