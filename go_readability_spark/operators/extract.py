@@ -25,12 +25,21 @@ from __future__ import annotations
 
 import sys
 import time
+from dataclasses import asdict
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..readability.extract import ReadabilityOptions
+from ..readability.extract import (
+    ExtractionMetrics,
+    ReadabilityOptions,
+    extract_content,
+)
+from ..readability.fmt import count_nodes
+from ..readability.parser import parse_html
+from ..readability.preprocess import preprocess_document
 from ..schemas import EXTRACTED_AND_RENDERED_SCHEMA, EXTRACTED_SCHEMA
+from ..spans import element_to_spans, spans_to_html
 from ..plans.session import lazy_zip_invalidation
 from ..plans.skew import MAX_DOC_BYTES, skew_partitioned, with_doc_bytes
 
@@ -59,17 +68,12 @@ def extract_batch_rows(
     markdown / text / metadata_json) from the SAME parsed article, so a
     pipeline wanting extraction + renderings pays the parse+score once
     (render.extract_and_render); error rows carry empty renderings."""
-    # imported lazily so the module imports fast on the driver
-    from ..readability.instrumented import extract_with_metrics
-    from ..spans import element_to_spans, spans_to_html
-
     if render:
         from .render import render_article
 
     if sys.getrecursionlimit() < _RECURSION_LIMIT:
         sys.setrecursionlimit(_RECURSION_LIMIT)
 
-    opts = options or ReadabilityOptions(forced_page_type="")
     out: list[dict] = []
     for doc_id, spans, doc_bytes in zip(doc_ids, spans_lists, doc_bytes_list):
         t0 = time.perf_counter()
@@ -79,11 +83,7 @@ def extract_batch_rows(
             "spans_out": [],
             "meta": {"title": "", "byline": "", "page_type": "error",
                      "node_count": 0},
-            "metrics": {
-                "candidate_count": 0, "pruned_nodes": 0,
-                "prune_ratio": 0.0, "top_score": 0.0,
-                "link_density": 0.0, "is_probably_content": False,
-            },
+            "metrics": asdict(ExtractionMetrics()),
             "doc_bytes": doc_bytes,
             "error": None,
         }
@@ -97,7 +97,16 @@ def extract_batch_rows(
             row["error"] = "null spans"
         else:
             try:
-                article, m = extract_with_metrics(spans_to_html(spans), opts)
+                doc = parse_html(spans_to_html(spans), "")
+                nodes_before = count_nodes(doc.document_element)
+                preprocess_document(doc)
+                nodes_after = count_nodes(doc.document_element)
+                article = extract_content(doc, options)
+                m = article.metrics
+                m.pruned_nodes = max(0, nodes_before - nodes_after)
+                m.prune_ratio = (
+                    m.pruned_nodes / nodes_before if nodes_before > 0 else 0.0
+                )
                 # built in full before update: a failing render leaves the
                 # error-row defaults untouched
                 row.update(
@@ -108,14 +117,7 @@ def extract_batch_rows(
                         "page_type": article.page_type,
                         "node_count": article.node_count,
                     },
-                    metrics={
-                        "candidate_count": m.candidate_count,
-                        "pruned_nodes": m.pruned_nodes,
-                        "prune_ratio": m.prune_ratio,
-                        "top_score": m.top_score,
-                        "link_density": m.link_density,
-                        "is_probably_content": m.is_probably_content,
-                    },
+                    metrics=asdict(m),
                     **(render_article(article) if render else {}),
                 )
             except Exception as exc:  # noqa: BLE001 — never kill the job
@@ -185,9 +187,9 @@ def extract_documents(
     """documents(doc_id, spans) → extracted(doc_id, spans_out, meta, metrics,
     doc_bytes, error, elapsed_ms).
 
-    ``repartition=False`` keeps the input partitioning (useful when the
-    caller already co-partitioned, e.g. the checkpointed per-partition
-    loop, or a stream)."""
+    ``repartition=False`` keeps the input partitioning; the stream
+    (streaming/extract_stream) uses it, since a micro-batch is already
+    bounded. The checkpointed loop repartitions each part."""
     return _map_documents(
         df, options, num_partitions, max_doc_bytes, repartition
     )

@@ -152,12 +152,14 @@ def run_checkpointed(
     is not serialized through one driver loop. Safe because (a) each part
     writes under its own output root, so the Hadoop committer's
     ``_temporary`` staging dirs never collide, and (b) manifest appends
-    are tiny and serialized by a driver-side lock. One failure rule at
-    every ``concurrency``, 1 included: a failed part does not block the
-    others, and after the pool drains the first failure (lowest part) is
-    re-raised as ``RuntimeError(... part=N)``. Finished parts are in the
-    manifest and the staged input is kept, so a rerun processes only the
-    failed parts.
+    are tiny and serialized by a driver-side lock. Every part job runs
+    under the caller's local properties, so a job group (or description,
+    scheduler pool, job tag) set on the calling thread covers them. One
+    failure rule at every ``concurrency``, 1 included: a failed part does
+    not block the others, and after the pool drains the first failure
+    (lowest part) is re-raised as ``RuntimeError(... part=N)``. Finished
+    parts are in the manifest and the staged input is kept, so a rerun
+    processes only the failed parts.
 
     The RUN itself pins the giant-document columnar read batch
     (plans.giant_doc_scan), but the RETURNED DataFrame plans lazily
@@ -242,8 +244,16 @@ def run_checkpointed(
             staged = True
 
         manifest_lock = threading.Lock()
+        # Pool threads do not inherit the caller's local properties (job
+        # group, description, scheduler pool, job tags): each part sets a
+        # fresh clone of them. A clone, not the caller's object: every SQL
+        # execution writes spark.sql.execution.id into the Properties of
+        # its thread, so concurrent parts must not share one.
+        jsc = spark.sparkContext._jsc.sc()
+        caller_props = jsc.getLocalProperties()
 
         def process_part(part: int) -> None:
+            jsc.setLocalProperties(caller_props.clone())
             slice_df = parts_src.filter(F.col("part") == part).drop("part")
             extracted, stats = _lineage_and_counts(
                 extract_documents(

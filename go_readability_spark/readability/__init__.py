@@ -38,6 +38,7 @@ from .dom import (  # noqa: F401
     is_probably_visible,
 )
 from .extract import (  # noqa: F401
+    ExtractionMetrics,
     ReadabilityArticle,
     ReadabilityOptions,
     add_significant_elements_by_class_or_id,
@@ -53,10 +54,6 @@ from .fmt import (  # noqa: F401
     format_document,
     stringify,
     to_html,
-)
-from .instrumented import (  # noqa: F401
-    ExtractionMetrics,
-    extract_with_metrics,
 )
 from .markdown import escape_markdown, to_markdown  # noqa: F401
 from .metadata import (  # noqa: F401

@@ -7,7 +7,7 @@ options/article structs (options.go:21-49, article.go:12-26).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Optional
 
 from .classify import (
@@ -17,6 +17,8 @@ from .classify import (
     is_significant_node,
 )
 from .dom import (
+    begin_inner_text_cache,
+    end_inner_text_cache,
     get_elements_by_tag_name,
     get_elements_in_tag_order,
     get_inner_text,
@@ -28,12 +30,13 @@ from .metadata import get_article_byline, get_article_title
 from .parser import parse_html
 from .preprocess import preprocess_document
 from .regexps import DEFAULT_CHAR_THRESHOLD, DEFAULT_N_TOP_CANDIDATES, byte_len
-from .scoring import find_main_candidates
+from .scoring import find_main_candidates, is_probably_content
 from .vdom import VDocument, VElement
 
 __all__ = [
     "ReadabilityOptions",
     "ReadabilityArticle",
+    "ExtractionMetrics",
     "extract",
     "extract_content",
     "find_structural_elements",
@@ -79,8 +82,25 @@ class OtherContent:
 
 
 @dataclass
+class ExtractionMetrics:
+    """Per-document pipeline metrics (FIXTURES.md §2 ``metrics`` struct).
+
+    The reference has no equivalent: the numbers are its intermediate
+    state. ``extract_content`` fills the scoring stats; the pruning stats
+    (node counts around ``preprocess_document``) are filled by the
+    extraction loop (operators/extract.py), and stay 0 otherwise."""
+
+    candidate_count: int = 0
+    pruned_nodes: int = 0
+    prune_ratio: float = 0.0
+    top_score: float = 0.0
+    link_density: float = 0.0
+    is_probably_content: bool = False
+
+
+@dataclass
 class ReadabilityArticle:
-    """article.go:12-26."""
+    """article.go:12-26, plus the pipeline's ``metrics``."""
 
     title: str = ""
     byline: str = ""
@@ -91,6 +111,7 @@ class ReadabilityArticle:
     footer: Optional[VElement] = None
     other_significant_nodes: list[VElement] = field(default_factory=list)
     aria_tree: object = None  # never populated by Extract (core.go:120-126)
+    metrics: ExtractionMetrics = field(default_factory=ExtractionMetrics)
 
     def get_content_by_page_type(self):
         """ArticleContent or OtherContent by page type (article.go:54-75)."""
@@ -112,93 +133,60 @@ def extract(
 ) -> ReadabilityArticle:
     """Main entry point (core.go:25-51).
 
-    Defaults are applied to a COPY: Go passes Options by value
-    (core.go:25), so its in-function defaulting never leaks to the
-    caller — mutating the caller's instance here would silently force
-    page_type='article' on their later extract_content calls."""
+    The reference defaults ForcedPageType to "article" (core.go:46-47) on
+    its by-value copy of Options (core.go:25); ``replace`` makes the same
+    copy, so the default never leaks into the caller's instance."""
     options = options or ReadabilityOptions()
     doc = parse_html(html, "")
     preprocess_document(doc)
-    effective = ReadabilityOptions(
-        char_threshold=(
-            options.char_threshold
-            if options.char_threshold > 0
-            else DEFAULT_CHAR_THRESHOLD
+    return extract_content(
+        doc,
+        replace(
+            options,
+            forced_page_type=options.forced_page_type or PAGE_TYPE_ARTICLE,
         ),
-        nb_top_candidates=(
-            options.nb_top_candidates
-            if options.nb_top_candidates > 0
-            else DEFAULT_N_TOP_CANDIDATES
-        ),
-        generate_aria_tree=options.generate_aria_tree,
-        forced_page_type=options.forced_page_type or PAGE_TYPE_ARTICLE,
     )
-    return extract_content(doc, effective)
 
 
 def extract_content(
     doc: VDocument, options: Optional[ReadabilityOptions] = None
 ) -> ReadabilityArticle:
-    """Core extraction (core.go:63-140).
+    """Core extraction (core.go:63-140) of a parsed, preprocessed document.
+
+    The returned article also carries the scoring half of its
+    ``ExtractionMetrics`` (candidate_count, top_score, link_density,
+    is_probably_content); the pruning half belongs to the caller that
+    ran ``preprocess_document``.
 
     NOTE (quirk replicated): ``Extract`` defaults ForcedPageType to
     "article" when unset (core.go:46-47), so the library path always forces
     page_type="article" and ``ClassifyPageType`` is only reachable by
     calling this function directly with forced_page_type="".
     """
-    options = options or ReadabilityOptions(forced_page_type="")
-    return _extract_content_core(doc, options)
-
-
-def _extract_content_core(
-    doc: VDocument,
-    options: ReadabilityOptions,
-    metrics_out: Optional[dict] = None,
-) -> ReadabilityArticle:
-    """Shared lifecycle for extract_content and extract_with_metrics.
-
-    ``metrics_out`` (a plain dict, to avoid a circular import with
-    instrumented.py) receives candidate_count / top_score / link_density /
-    is_probably_content when provided."""
+    options = options or ReadabilityOptions()
     char_threshold = (
         options.char_threshold
         if options.char_threshold > 0
         else DEFAULT_CHAR_THRESHOLD
     )
-    nb_top_candidates = (
-        options.nb_top_candidates
-        if options.nb_top_candidates > 0
-        else DEFAULT_N_TOP_CANDIDATES
-    )
+    metrics = ExtractionMetrics()
 
     # the tree is immutable during scoring/classify/metadata (only
     # ContentScore mutates) — memoize get_inner_text for this read phase
-    from .dom import begin_inner_text_cache, end_inner_text_cache
-
     begin_inner_text_cache()
     try:
-        candidates = find_main_candidates(doc, nb_top_candidates)
-        top_candidate: Optional[VElement] = None
+        candidates = find_main_candidates(doc, options.nb_top_candidates)
         article_content: Optional[VElement] = None
-        if metrics_out is not None:
-            metrics_out["candidate_count"] = len(candidates)
+        metrics.candidate_count = len(candidates)
 
         if candidates:
             top_candidate = candidates[0]
             text_length = byte_len(get_inner_text(top_candidate, False))
             link_density = get_link_density(top_candidate)
-            if metrics_out is not None:
-                from .scoring import is_probably_content
-
-                metrics_out["top_score"] = (
-                    top_candidate.readability
-                    if top_candidate.readability is not None
-                    else 0.0
-                )
-                metrics_out["link_density"] = link_density
-                metrics_out["is_probably_content"] = is_probably_content(
-                    top_candidate
-                )
+            if top_candidate.readability is not None:
+                metrics.top_score = top_candidate.readability
+            metrics.link_density = link_density
+            metrics.is_probably_content = is_probably_content(top_candidate)
             # accept gate (core.go:83-94)
             if text_length >= char_threshold and link_density <= 0.5:
                 article_content = top_candidate
@@ -235,6 +223,7 @@ def _extract_content_core(
         footer=footer,
         other_significant_nodes=other_significant_nodes,
         aria_tree=None,
+        metrics=metrics,
     )
 
 
@@ -339,6 +328,6 @@ def create_extractor(options: ReadabilityOptions):
     """core.go:582-586."""
 
     def _extract(html: str) -> ReadabilityArticle:
-        return extract(html, ReadabilityOptions(**options.__dict__))
+        return extract(html, options)
 
     return _extract

@@ -6,7 +6,8 @@
         [--n-parts 64] [--char-threshold 500] [--mode batch|stream]
 
 Runs the checkpointed extraction pipeline (plans/checkpoint.py): per-
-partition manifest with lineage + metrics, broadcast anti-join resume,
+partition manifest with lineage + metrics, resume by a driver-side skip
+of the parts the manifest (collected once) marks done, and
 dynamic-partition-overwrite idempotency. ``--mode stream`` instead tails
 the input directory with Structured Streaming (streaming/extract_stream).
 

@@ -16,8 +16,8 @@ from go_readability_spark.corpus import (
     generate_corpus,
     generate_doc,
 )
+from go_readability_spark.operators.extract import extract_batch_rows
 from go_readability_spark.readability import ReadabilityOptions, extract
-from go_readability_spark.readability.instrumented import extract_with_metrics
 from go_readability_spark.readability.parser import parse_html
 from go_readability_spark.spans import (
     element_to_spans,
@@ -114,12 +114,12 @@ class TestCorpus:
     def test_every_population_round_trips(self):
         """Reassemble → extract runs without error for every population."""
         seen = set()
-        for doc_id, spans in generate_corpus(30):
-            html = spans_to_html(spans)
-            art, metrics = extract_with_metrics(
-                html, ReadabilityOptions(forced_page_type="")
-            )
-            element_to_spans(art.root)
+        docs = list(generate_corpus(30))
+        rows = extract_batch_rows(
+            [d for d, _ in docs], [s for _, s in docs], [0] * len(docs)
+        )
+        for (doc_id, _), row in zip(docs, rows):
+            assert row["error"] is None, doc_id
             seen.add(doc_id.rsplit("-", 1)[0] if doc_id != "fixture-001" else doc_id)
         assert seen >= set(POPULATIONS) | {"fixture-001"}
 
@@ -172,24 +172,71 @@ class TestCorpus:
         assert any(s["kind"] == "media" for s in spans)
 
 
+# the library's forced page type, so the loop's rows compare with extract()
+_FORCED_ARTICLE = ReadabilityOptions(forced_page_type="article")
+
+
 class TestInstrumented:
+    """The extraction loop's rows (with metrics) against plain extract()."""
+
     def test_matches_plain_extract(self):
-        for doc_id, spans in generate_corpus(15):
-            html = spans_to_html(spans)
-            plain = extract(html)
-            inst, metrics = extract_with_metrics(html)
-            assert plain.title == inst.title
-            assert plain.page_type == inst.page_type
-            assert plain.node_count == inst.node_count
-            assert element_to_spans(plain.root) == element_to_spans(inst.root)
-            assert metrics.candidate_count >= 0
-            assert 0.0 <= metrics.prune_ratio <= 1.0
+        docs = list(generate_corpus(15))
+        rows = extract_batch_rows(
+            [d for d, _ in docs], [s for _, s in docs], [0] * len(docs),
+            _FORCED_ARTICLE,
+        )
+        for (doc_id, spans), row in zip(docs, rows):
+            plain = extract(spans_to_html(spans))
+            meta, metrics = row["meta"], row["metrics"]
+            assert row["error"] is None, doc_id
+            assert plain.title == meta["title"]
+            assert plain.page_type == meta["page_type"]
+            assert plain.node_count == meta["node_count"]
+            assert element_to_spans(plain.root) == row["spans_out"]
+            assert metrics["candidate_count"] >= 0
+            assert 0.0 <= metrics["prune_ratio"] <= 1.0
+            # the scoring stats are extract_content's, on either path
+            for key in ("candidate_count", "top_score", "link_density",
+                        "is_probably_content"):
+                assert getattr(plain.metrics, key) == metrics[key], key
 
     def test_metrics_capture_pruning(self):
-        html = spans_to_html(generate_doc("syn-noise-000002"))
-        _, metrics = extract_with_metrics(html)
-        assert metrics.pruned_nodes > 0
-        assert metrics.top_score > 0
+        doc_id = "syn-noise-000002"
+        [row] = extract_batch_rows(
+            [doc_id], [generate_doc(doc_id)], [0], _FORCED_ARTICLE
+        )
+        assert row["metrics"]["pruned_nodes"] > 0
+        assert row["metrics"]["top_score"] > 0
+
+
+class TestRowDigest:
+    # sha256 of the rows below: a refactor of the per-document path must
+    # keep it. Any change to spans_out, meta, the six metrics, doc_bytes
+    # or error on these documents moves it.
+    ROWS_SHA256 = (
+        "d66372280ade33d61ad3f974ad2901c6bde0f2209c135dfc2e0c2efef212caf4"
+    )
+
+    def test_extract_batch_rows_digest_pinned(self):
+        """Every field of every row (elapsed_ms dropped) on 200 corpus
+        documents plus one giant, hashed as sorted-key JSON."""
+        import hashlib
+
+        docs = list(generate_corpus(200))
+        docs.append(("syn-giant-000001", generate_doc("syn-giant-000001")))
+        doc_bytes = [
+            sum(len((s["text"] or "").encode()) + len((s["media_ref"] or "").encode())
+                for s in spans)
+            for _, spans in docs
+        ]
+        rows = extract_batch_rows(
+            [d for d, _ in docs], [s for _, s in docs], doc_bytes
+        )
+        for row in rows:
+            assert row["error"] is None, row["doc_id"]
+            del row["elapsed_ms"]
+        digest = hashlib.sha256(json.dumps(rows, sort_keys=True).encode())
+        assert digest.hexdigest() == self.ROWS_SHA256
 
 
 if __name__ == "__main__":

@@ -44,15 +44,10 @@ from go_readability_spark.plans.skew import (  # noqa: E402
     with_doc_bytes,
     with_size_bucket,
 )
-from go_readability_spark.readability.extract import ReadabilityOptions  # noqa: E402
-from go_readability_spark.readability.instrumented import (  # noqa: E402
-    extract_with_metrics,
-)
 from go_readability_spark.sources.tables import (  # noqa: E402
     corpus_df,
     documents_as_spans_df,
 )
-from go_readability_spark.spans import element_to_spans, spans_to_html  # noqa: E402
 
 N_DOCS = 24
 
@@ -77,10 +72,8 @@ def restore_zipimport(monkeypatch):
 
 
 def _golden(doc_id: str):
-    art, _ = extract_with_metrics(
-        spans_to_html(generate_doc(doc_id)), ReadabilityOptions(forced_page_type="")
-    )
-    return element_to_spans(art.root)
+    [row] = extract_batch_rows([doc_id], [generate_doc(doc_id)], [0])
+    return row["spans_out"]
 
 
 class TestExtractionParity:
@@ -415,6 +408,78 @@ class TestCheckpointResume:
         manifest = read_manifest(spark, "/nonexistent-manifest")
         plan = resume_filter(docs, manifest)._jdf.queryExecution().toString()
         assert "LeftAnti" in plan
+
+    @pytest.mark.parametrize("concurrency", [1, 4])
+    def test_part_jobs_run_in_the_callers_job_group(
+        self, spark, tmp_path, concurrency
+    ):
+        """A job group set on the calling thread covers every job of the
+        run, those of the pool threads included, and the output is the
+        pure per-document rows."""
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        docs = corpus_df(spark, 12, num_partitions=2)
+        group = f"checkpointed-{concurrency}"
+        ungrouped = set(tracker.getJobIdsForGroup())
+        sc.setJobGroup(group, "checkpointed run")
+        try:
+            result = run_checkpointed(
+                spark, docs, str(tmp_path / "out"), str(tmp_path / "man"),
+                n_parts=4, num_partitions=2, concurrency=concurrency,
+            )
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        assert set(tracker.getJobIdsForGroup()) - ungrouped == set()
+        # each of the 4 parts runs at least its write and its manifest append
+        assert len(tracker.getJobIdsForGroup(group)) >= 8
+
+        got = [r.asDict(recursive=True) for r in result.collect()]
+        assert sorted(r["doc_id"] for r in got) == sorted(
+            r["doc_id"] for r in docs.select("doc_id").collect()
+        )
+        for row in got:
+            del row["part"], row["elapsed_ms"]
+            [want] = extract_batch_rows(
+                [row["doc_id"]], [generate_doc(row["doc_id"])],
+                [row["doc_bytes"]],
+            )
+            del want["elapsed_ms"]
+            assert row == want, row["doc_id"]
+
+    def test_input_with_own_part_column(self, spark, tmp_path, monkeypatch):
+        """An input that brings its own ``part`` column (the Iceberg-
+        partitioned shape) is not staged; its distinct parts, not
+        0..n_parts-1, are the manifest's, and a rerun marks nothing."""
+        from go_readability_spark.plans import checkpoint as cp
+
+        out_dir = str(tmp_path / "out")
+        man_dir = str(tmp_path / "man")
+        docs = corpus_df(spark, 12, num_partitions=2).withColumn(
+            "part", F.pmod(F.xxhash64("doc_id"), F.lit(3)) * 10 + 5
+        )
+        parts = {r["part"] for r in docs.select("part").distinct().collect()}
+        assert parts <= {5, 15, 25} and len(parts) > 1
+
+        result = cp.run_checkpointed(
+            spark, docs, out_dir, man_dir, num_partitions=2
+        )
+        assert not os.path.exists(out_dir + "__staging")
+        manifest = read_manifest(spark, man_dir).collect()
+        assert sorted(r["part"] for r in manifest) == sorted(parts)
+        assert sum(r["n_docs"] for r in manifest) == 12
+        assert result.count() == 12
+
+        marked: list[int] = []
+        monkeypatch.setattr(
+            cp, "mark_partition_done", lambda *a, **k: marked.append(a[2])
+        )
+        assert cp.run_checkpointed(
+            spark, docs, out_dir, man_dir, num_partitions=2
+        ).count() == 12
+        assert marked == []
+        assert not os.path.exists(out_dir + "__staging")
 
 
 class TestDriverDocsSource:
