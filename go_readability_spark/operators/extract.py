@@ -10,9 +10,11 @@ Design notes for 100 TB scale:
   map-only and the metrics rollup is a partial-agg hash aggregate;
 - all per-doc work happens JVM→Arrow→Python batch-wise, never per-row
   Python UDF calls (input_hint requirement);
-- ``extract_batch_rows`` is the one per-document loop: the plain
-  extraction and ``render.extract_and_render`` both reach it through the
-  same Arrow adapter;
+- ``extract_documents`` is the one entry point and builds the one plan;
+  ``render=True`` adds the CLI sink renderings to the same pass, and a
+  streaming input skips the repartition (a micro-batch is already
+  bounded). ``extract_batch_rows`` is the one per-document loop behind
+  its Arrow adapter;
 - the adapter's worker-side body first calls
   ``plans.session.lazy_zip_invalidation``, so a reused Python worker does
   not re-read ``pyspark.zip`` at every task start;
@@ -42,6 +44,7 @@ from ..schemas import EXTRACTED_AND_RENDERED_SCHEMA, EXTRACTED_SCHEMA
 from ..spans import element_to_spans, spans_to_html
 from ..plans.session import lazy_zip_invalidation
 from ..plans.skew import MAX_DOC_BYTES, skew_partitioned, with_doc_bytes
+from .render import render_article
 
 __all__ = ["extract_documents", "extract_batch_rows", "metrics_rollup"]
 
@@ -55,22 +58,19 @@ def extract_batch_rows(
     spans_lists,
     doc_bytes_list,
     options: Optional[ReadabilityOptions] = None,
-    max_doc_bytes: int = MAX_DOC_BYTES,
     render: bool = False,
 ) -> list[dict]:
     """Extract one batch of documents; pure Python, testable without Spark.
 
-    Every document yields exactly one row. The size cap is checked first
-    (over-cap docs are never reassembled), then malformed spans (a null
-    array, null span entries or null offsets), then any exception from
-    extraction — each becomes an error row with ``page_type='error'``.
-    ``render=True`` additionally produces the CLI sink formats (html /
-    markdown / text / metadata_json) from the SAME parsed article, so a
-    pipeline wanting extraction + renderings pays the parse+score once
-    (render.extract_and_render); error rows carry empty renderings."""
-    if render:
-        from .render import render_article
-
+    Every document yields exactly one row. The size cap (a ``doc_bytes``
+    above ``MAX_DOC_BYTES``) is checked first (over-cap docs are never
+    reassembled), then malformed spans (a null array, null span entries
+    or null offsets), then any exception from extraction — each becomes
+    an error row with ``page_type='error'``. ``render=True`` additionally
+    produces the CLI sink formats (html / markdown / text /
+    metadata_json) from the SAME parsed article, so a pipeline wanting
+    extraction + renderings pays the parse+score once; error rows carry
+    empty renderings."""
     if sys.getrecursionlimit() < _RECURSION_LIMIT:
         sys.setrecursionlimit(_RECURSION_LIMIT)
 
@@ -89,8 +89,8 @@ def extract_batch_rows(
         }
         if render:
             row.update(html="", markdown="", text="", metadata_json="")
-        if doc_bytes > max_doc_bytes:
-            row["error"] = f"doc_bytes {doc_bytes} > cap {max_doc_bytes}"
+        if doc_bytes > MAX_DOC_BYTES:
+            row["error"] = f"doc_bytes {doc_bytes} > cap {MAX_DOC_BYTES}"
         elif spans is None or any(
             s is None or s.get("offset") is None for s in spans
         ):
@@ -127,11 +127,7 @@ def extract_batch_rows(
     return out
 
 
-def _arrow_batches(
-    options: Optional[ReadabilityOptions],
-    max_doc_bytes: int,
-    render: bool = False,
-):
+def _arrow_batches(options: Optional[ReadabilityOptions], render: bool):
     """The mapInArrow adapter: (doc_id, spans, doc_bytes) record batches
     in, one ``extract_batch_rows`` call per batch, its rows out."""
 
@@ -149,7 +145,6 @@ def _arrow_batches(
                 batch.column("spans").to_pylist(),
                 batch.column("doc_bytes").to_pylist(),
                 options,
-                max_doc_bytes,
                 render,
             )
             yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
@@ -157,49 +152,35 @@ def _arrow_batches(
     return run
 
 
-def _map_documents(
-    df: DataFrame,
-    options: Optional[ReadabilityOptions],
-    num_partitions: Optional[int],
-    max_doc_bytes: int,
-    repartition: bool = True,
-    render: bool = False,
-) -> DataFrame:
-    """The plan of extract_documents and render.extract_and_render:
-    doc_bytes pre-pass → salted repartition → one mapInArrow."""
-    df = with_doc_bytes(df)
-    if repartition:
-        num = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        df = skew_partitioned(df, num)
-    return df.select("doc_id", "spans", "doc_bytes").mapInArrow(
-        _arrow_batches(options, max_doc_bytes, render),
-        EXTRACTED_AND_RENDERED_SCHEMA if render else EXTRACTED_SCHEMA,
-    )
-
-
 def extract_documents(
     df: DataFrame,
     options: Optional[ReadabilityOptions] = None,
     num_partitions: Optional[int] = None,
-    max_doc_bytes: int = MAX_DOC_BYTES,
-    repartition: bool = True,
+    render: bool = False,
 ) -> DataFrame:
     """documents(doc_id, spans) → extracted(doc_id, spans_out, meta, metrics,
-    doc_bytes, error, elapsed_ms).
+    doc_bytes, error, elapsed_ms), plus (html, markdown, text,
+    metadata_json) when ``render=True``.
 
-    ``repartition=False`` keeps the input partitioning; the stream
-    (streaming/extract_stream) uses it, since a micro-batch is already
-    bounded. The checkpointed loop repartitions each part."""
-    return _map_documents(
-        df, options, num_partitions, max_doc_bytes, repartition
+    The plan: doc_bytes pre-pass → salted repartition into
+    ``num_partitions`` (default: the cluster's parallelism) → one
+    mapInArrow. A streaming input keeps its partitioning, since a
+    micro-batch is already bounded."""
+    df = with_doc_bytes(df)
+    if not df.isStreaming:
+        num = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+        df = skew_partitioned(df, num)
+    return df.select("doc_id", "spans", "doc_bytes").mapInArrow(
+        _arrow_batches(options, render),
+        EXTRACTED_AND_RENDERED_SCHEMA if render else EXTRACTED_SCHEMA,
     )
 
 
-def metrics_rollup(extracted: DataFrame, *group_cols: str) -> DataFrame:
-    """Aggregate extraction metrics (SURVEY.md §4.2: plain hash-agg with
-    map-side partials — Catalyst handles partial aggregation for free)."""
-    keys = [F.col(c) for c in group_cols] or [F.col("meta.page_type").alias("page_type")]
-    return extracted.groupBy(*keys).agg(
+def metrics_rollup(extracted: DataFrame) -> DataFrame:
+    """Aggregate extraction metrics per page type (SURVEY.md §4.2: plain
+    hash-agg with map-side partials — Catalyst handles partial
+    aggregation for free)."""
+    return extracted.groupBy(F.col("meta.page_type").alias("page_type")).agg(
         F.count("*").alias("n_docs"),
         F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_errors"),
         F.sum("doc_bytes").alias("total_bytes"),

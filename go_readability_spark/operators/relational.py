@@ -113,7 +113,7 @@ def pricing_summary(lineitem: DataFrame) -> DataFrame:
 def resume_pending(orders: DataFrame, mod: int = 7, done_below: int = 2) -> DataFrame:
     """Broadcast anti-join resume demo on a plain table: treat orders with
     ``o_orderkey % mod < done_below`` as checkpointed-done; return the
-    pending keys. Mirrors plans/checkpoint.resume_filter."""
+    pending keys."""
     done = orders.filter(
         F.pmod(F.col("o_orderkey"), F.lit(mod)) < done_below
     ).select("o_orderkey")

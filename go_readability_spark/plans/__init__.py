@@ -4,7 +4,6 @@ from .cache import persist_scope  # noqa: F401
 from .checkpoint import (  # noqa: F401
     mark_partition_done,
     read_manifest,
-    resume_filter,
     run_checkpointed,
 )
 from .session import get_spark, giant_doc_scan  # noqa: F401

@@ -14,8 +14,7 @@ partition and resume idempotently. Mechanics (SURVEY.md §4.2):
   processed the same input slice;
 - resume skips the parts the manifest marks done. The manifest is tiny
   (one row per partition, ≤ tens of thousands at 10^12 docs), so it is
-  collected once to the driver; ``resume_filter`` is the same skip as a
-  broadcast anti-join for callers that want the pending rows;
+  collected once to the driver;
 - output per partition is written with dynamic partition overwrite
   (parquet here, ``writeTo(...).overwritePartitions()`` on Iceberg), which
   makes a rerun of a half-written partition idempotent.
@@ -48,7 +47,6 @@ __all__ = [
     "MANIFEST_SCHEMA",
     "with_part",
     "read_manifest",
-    "resume_filter",
     "mark_partition_done",
     "run_checkpointed",
 ]
@@ -80,12 +78,6 @@ def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
         # explicit schema: no footer-inference job before the real read
         return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
     return spark.createDataFrame([], MANIFEST_SCHEMA)
-
-
-def resume_filter(input_df: DataFrame, manifest: DataFrame) -> DataFrame:
-    """Drop partitions already marked done — broadcast anti-join."""
-    done = manifest.filter(F.col("status") == "done").select("part").distinct()
-    return input_df.join(F.broadcast(done), "part", "left_anti")
 
 
 def _lineage_and_counts(extracted_part: DataFrame) -> tuple[DataFrame, Observation]:

@@ -1114,9 +1114,7 @@ def q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_render_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CLI-sink parity: clean-HTML / Markdown / text / metadata-JSON
     renderings of each extracted article (cmd/readability main.go:52-79)."""
-    from .operators.render import extract_and_render
-
-    out = extract_and_render(corpus_df(spark, CORPUS_DOCS))
+    out = extract_documents(corpus_df(spark, CORPUS_DOCS), render=True)
     return out.select(
         "doc_id",
         F.length("html").alias("html_len"),

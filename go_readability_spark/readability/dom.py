@@ -180,12 +180,14 @@ def has_ancestor_tag(node: VNode, tag_name: str, max_depth: int = 0) -> bool:
     return False
 
 
-# Phase-local memo for get_inner_text. The scoring/classify/metadata
-# phases call it O(nodes·depth) times on an immutable tree (SURVEY.md
-# §4.1: safe to memoize within a phase — FindMainCandidates mutates only
-# ContentScore, never text). Enabled by extract_content after preprocess
-# (the last tree mutation) and cleared in a finally. Keys are id(node):
-# valid because the cached phase neither frees nor creates nodes.
+# Phase-local memo for get_inner_text and get_link_density. The
+# scoring/classify/metadata phases call them O(nodes·depth) times on an
+# immutable tree (SURVEY.md §4.1: safe to memoize within a phase —
+# FindMainCandidates mutates only ContentScore, never text). Enabled by
+# extract_content after preprocess (the last tree mutation) and cleared
+# in a finally. Keys are id(node) paired with normalize_spaces or
+# "link_density": valid because the cached phase neither frees nor
+# creates nodes.
 _inner_text_cache: dict | None = None
 
 
@@ -254,6 +256,10 @@ def get_inner_text(node: VNode, normalize_spaces: bool = False) -> str:
 def get_link_density(element: VElement) -> float:
     """Ratio of (discounted) link-text bytes to total text bytes
     (dom_utils.go:162-181)."""
+    cache = _inner_text_cache
+    key = (id(element), "link_density")
+    if cache is not None and key in cache:
+        return cache[key]
     text_length = byte_len(get_inner_text(element, True))
     if text_length == 0:
         return 0.0
@@ -265,7 +271,10 @@ def get_link_density(element: VElement) -> float:
         # int() truncation of the float product, as in Go (dom_utils.go:177)
         link_length += int(byte_len(get_inner_text(link, True)) * coefficient)
 
-    return link_length / text_length
+    density = link_length / text_length
+    if cache is not None:
+        cache[key] = density
+    return density
 
 
 def get_text_density(element: VElement) -> float:

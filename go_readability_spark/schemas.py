@@ -89,7 +89,7 @@ EXTRACTED_SCHEMA = StructType(
     ]
 )
 
-# extraction + the CLI sink renderings (operators/render.extract_and_render)
+# extraction + the CLI sink renderings (extract_documents(render=True))
 EXTRACTED_AND_RENDERED_SCHEMA = StructType(
     EXTRACTED_SCHEMA.fields
     + [

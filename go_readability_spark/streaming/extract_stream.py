@@ -14,8 +14,6 @@ dropped; accumulating state is bounded).
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.extract import extract_documents
@@ -103,21 +101,16 @@ def stream_dedup_exact(
 
 
 def extract_stream(
-    spark: SparkSession,
-    input_path: str,
-    options=None,
-    max_files_per_trigger: Optional[int] = None,
+    spark: SparkSession, input_path: str, options=None
 ) -> DataFrame:
     """Streaming DataFrame of extraction results over a parquet dir.
 
-    The skew repartition is skipped (a micro-batch is already bounded;
-    ``maxFilesPerTrigger`` bounds it further) — the per-doc size cap and
-    error rows still apply inside the UDF."""
-    reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    return extract_documents(stream, options=options, repartition=False)
+    ``extract_documents`` skips the skew repartition for a streaming
+    input (a micro-batch is already bounded), so each micro-batch is one
+    scan and one mapInArrow; the per-doc size cap and error rows still
+    apply inside the UDF."""
+    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(input_path)
+    return extract_documents(stream, options=options)
 
 
 def run_extract_stream(

@@ -11,7 +11,6 @@ pyspark = pytest.importorskip("pyspark")
 from pyspark.sql import functions as F  # noqa: E402
 
 from go_readability_spark.operators.extract import extract_documents  # noqa: E402
-from go_readability_spark.operators.render import extract_and_render  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
 
@@ -139,14 +138,18 @@ class TestStarJoinPlan:
         assert "r_name" in plan and "PushedFilters: [IsNotNull(r_name)" in plan
 
 
-def _node_names(df) -> list[str]:
-    """Physical node names of ``df``'s plan, through adaptive wrappers."""
-    names, todo = [], [df._jdf.queryExecution().executedPlan()]
+def _node_names(plan) -> list[str]:
+    """Node names of a JVM physical plan, through adaptive wrappers and
+    the query stages of an executed adaptive plan."""
+    names, todo = [], [plan]
     while todo:
         node = todo.pop()
         cls = node.getClass().getSimpleName()
         if cls == "AdaptiveSparkPlanExec":
             todo.append(node.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
             continue
         names.append(node.nodeName())
         seq = node.children()
@@ -155,20 +158,67 @@ def _node_names(df) -> list[str]:
 
 
 class TestExtractionPlan:
-    """One loop, one plan: extraction and extraction + rendering each scan
-    once, shuffle once (the salted repartition) and cross into Python
-    through exactly one mapInArrow."""
+    """One entry point, one plan: extraction with or without rendering
+    scans once, shuffles once (the salted repartition) and crosses into
+    Python through exactly one mapInArrow; a streaming micro-batch does
+    not shuffle."""
 
     @pytest.mark.parametrize(
-        "op", [extract_documents, extract_and_render], ids=lambda f: f.__name__
+        "render", [False, True], ids=["extract_documents", "extract_and_render"]
     )
-    def test_one_scan_one_exchange_one_map_in_arrow(self, spark, tmp_path, op):
+    def test_one_scan_one_exchange_one_map_in_arrow(
+        self, spark, tmp_path, render
+    ):
         from go_readability_spark.sources.tables import corpus_df
 
         path = str(tmp_path / "docs")
         corpus_df(spark, 4).write.parquet(path)
-        names = _node_names(op(spark.read.parquet(path), num_partitions=2))
+        df = extract_documents(
+            spark.read.parquet(path), num_partitions=2, render=render
+        )
+        names = _node_names(df._jdf.queryExecution().executedPlan())
         assert sum(n.startswith("Scan parquet") for n in names) == 1, names
         assert names.count("Exchange") == 1, names
         assert names.count("MapInArrow") == 1, names
         assert not any("MapInPandas" in n for n in names), names
+
+    def test_stream_micro_batch_is_not_repartitioned(self, spark, tmp_path):
+        """A streaming input skips the skew repartition: the executed
+        micro-batch is one mapInArrow with no Exchange."""
+        from go_readability_spark.sources.tables import corpus_df
+        from go_readability_spark.streaming import run_extract_stream
+
+        inp = str(tmp_path / "in")
+        corpus_df(spark, 4).write.parquet(inp)
+        q = run_extract_stream(
+            spark, inp, str(tmp_path / "out"), str(tmp_path / "ckpt")
+        )
+        q.awaitTermination(120)
+        names = _node_names(
+            q._jsq.streamingQuery().lastExecution().executedPlan()
+        )
+        assert "Exchange" not in names, names
+        assert names.count("MapInArrow") == 1, names
+
+    def test_extract_py_is_the_only_map_in_arrow(self):
+        """The package's only mapInArrow call is the extraction plan's,
+        in operators/extract.py."""
+        import os
+        import re
+
+        root = os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "go_readability_spark",
+        )
+        call = re.compile(r"\.mapInArrow\s*\(")
+        found = []
+        for d, dirs, files in os.walk(root):
+            dirs[:] = [x for x in dirs if not x.startswith((".", "__"))]
+            for f in files:
+                if f.endswith(".py"):
+                    path = os.path.join(d, f)
+                    with open(path, encoding="utf-8") as fh:
+                        found += [os.path.relpath(path, root)] * len(
+                            call.findall(fh.read())
+                        )
+        assert found == [os.path.join("operators", "extract.py")]

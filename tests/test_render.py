@@ -112,13 +112,17 @@ class TestCli:
 @pytest.mark.usefixtures("spark")
 class TestRenderSpark:
     def test_extract_and_render_single_pass_parity(self, spark):
-        """Combined op == extract_documents + render_article, one UDF."""
+        """render=True == extract_documents + render_article, one UDF."""
         from go_readability_spark.operators.extract import extract_documents
-        from go_readability_spark.operators.render import extract_and_render
         from go_readability_spark.sources.tables import corpus_df
 
         docs = corpus_df(spark, 12)
-        combined = {r["doc_id"]: r for r in extract_and_render(docs, num_partitions=2).collect()}
+        combined = {
+            r["doc_id"]: r
+            for r in extract_documents(
+                docs, num_partitions=2, render=True
+            ).collect()
+        }
         extracted = {r["doc_id"]: r for r in extract_documents(docs, num_partitions=2).collect()}
         assert len(combined) == 12 and set(combined) == set(extracted)
         for doc_id, row in combined.items():
@@ -135,7 +139,10 @@ class TestRenderSpark:
         assert got["markdown"] == render_article(art)["markdown"]
 
     def test_extract_and_render_error_rows(self, spark):
-        from go_readability_spark.operators.render import extract_and_render
+        from pyspark.sql import functions as F
+
+        from go_readability_spark.operators.extract import extract_documents
+        from go_readability_spark.plans.skew import MAX_DOC_BYTES, with_doc_bytes
         from go_readability_spark.schemas import DOCUMENTS_SCHEMA
 
         big = [{"kind": "text", "text": "<p>" + "x" * 200 + "</p>",
@@ -143,14 +150,24 @@ class TestRenderSpark:
         bad = spark.createDataFrame(
             [("bad-doc", None), ("big-doc", big)], DOCUMENTS_SCHEMA
         )
+        # a supplied doc_bytes column is kept by the pre-pass: big-doc is
+        # pushed over the cap without building a 64 MiB document
+        bad = with_doc_bytes(bad).withColumn(
+            "doc_bytes",
+            F.when(
+                F.col("doc_id") == "big-doc", F.col("doc_bytes") + MAX_DOC_BYTES
+            ).otherwise(F.col("doc_bytes")),
+        )
         rows = {
             r["doc_id"]: r
-            for r in extract_and_render(
-                bad, num_partitions=1, max_doc_bytes=100
+            for r in extract_documents(
+                bad, num_partitions=1, render=True
             ).collect()
         }
         assert rows["bad-doc"]["error"] == "null spans"
-        assert rows["big-doc"]["error"] == "doc_bytes 207 > cap 100"
+        assert rows["big-doc"]["error"] == (
+            f"doc_bytes {MAX_DOC_BYTES + 207} > cap {MAX_DOC_BYTES}"
+        )
         for row in rows.values():
             assert row["meta"]["page_type"] == "error"
             for col in ("html", "markdown", "text", "metadata_json"):

@@ -29,7 +29,6 @@ from go_readability_spark.operators.extract import (  # noqa: E402
 )
 from go_readability_spark.plans.checkpoint import (  # noqa: E402
     read_manifest,
-    resume_filter,
     run_checkpointed,
     with_part,
 )
@@ -113,10 +112,16 @@ class TestExtractionParity:
 
 class TestErrorRows:
     def test_oversized_doc_becomes_error_row(self, spark):
-        df = corpus_df(spark, 4)
-        out = extract_documents(df, max_doc_bytes=100, num_partitions=2)
+        # a supplied doc_bytes column is kept by the pre-pass: every doc
+        # is pushed over the cap without building a 64 MiB document
+        df = with_doc_bytes(corpus_df(spark, 4)).withColumn(
+            "doc_bytes", F.col("doc_bytes") + MAX_DOC_BYTES
+        )
+        out = extract_documents(df, num_partitions=2)
         rows = out.collect()
-        assert all(r["error"] is not None for r in rows if r["doc_bytes"] > 100)
+        assert all(
+            r["error"] is not None for r in rows if r["doc_bytes"] > MAX_DOC_BYTES
+        )
         assert all(r["meta"]["page_type"] == "error" for r in rows)
 
     def test_null_and_broken_spans(self):
@@ -214,8 +219,7 @@ class TestCheckpointResume:
         assert sum(r["n_docs"] for r in done) == 12
 
         # resume: everything done → no pending partitions, output unchanged
-        pending = resume_filter(with_part(docs, 3), manifest)
-        assert pending.count() == 0
+        assert {r["part"] for r in done} == set(range(3))
         result2 = run_checkpointed(
             spark, docs, out_dir, man_dir, n_parts=3, num_partitions=2
         )
@@ -253,8 +257,7 @@ class TestCheckpointResume:
         assert sum(r["n_docs"] for r in done) == 16
         assert len(threads_seen) > 1  # jobs overlapped across pool threads
         # rerun: all parts in manifest -> nothing pending, output stable
-        pending = resume_filter(with_part(docs, 8), manifest)
-        assert pending.count() == 0
+        assert {r["part"] for r in done} == set(range(8))
         result2 = cp.run_checkpointed(
             spark, docs, out_dir, man_dir, n_parts=8, num_partitions=2,
             concurrency=4,
@@ -402,12 +405,6 @@ class TestCheckpointResume:
                 spark, docs, out_dir, man_dir, n_parts=3, num_partitions=2
             )
         assert listing() == before
-
-    def test_resume_antijoin_is_broadcast(self, spark):
-        docs = with_part(corpus_df(spark, 8), 4)
-        manifest = read_manifest(spark, "/nonexistent-manifest")
-        plan = resume_filter(docs, manifest)._jdf.queryExecution().toString()
-        assert "LeftAnti" in plan
 
     @pytest.mark.parametrize("concurrency", [1, 4])
     def test_part_jobs_run_in_the_callers_job_group(
@@ -557,17 +554,18 @@ class TestMalformedSpans:
 
         big_bad = [{"kind": "text", "text": "<p>" + "x" * 200 + "</p>",
                     "media_ref": "", "offset": None}]
-        df = spark.createDataFrame(
-            [self.CASES[0], ("big-null-offset", big_bad)], DOCUMENTS_SCHEMA
-        )
+        df = with_doc_bytes(
+            spark.createDataFrame(
+                [self.CASES[0], ("big-null-offset", big_bad)], DOCUMENTS_SCHEMA
+            )
+        ).withColumn("doc_bytes", F.col("doc_bytes") + MAX_DOC_BYTES)
         out = {
             r["doc_id"]: r["error"]
-            for r in extract_documents(
-                df, num_partitions=1, max_doc_bytes=100
-            ).collect()
+            for r in extract_documents(df, num_partitions=1).collect()
         }
-        assert out["big-null-offset"] == "doc_bytes 207 > cap 100"
-        assert out["ok"] == "doc_bytes 787 > cap 100"
+        cap = MAX_DOC_BYTES
+        assert out["big-null-offset"] == f"doc_bytes {cap + 207} > cap {cap}"
+        assert out["ok"] == f"doc_bytes {cap + 787} > cap {cap}"
 
 
 class TestCheckpointStagingEdgeCases:

@@ -543,9 +543,7 @@ class TestStreamDedupExtractPipeline:
         deduped = stream_dedup_exact(
             spark.readStream.schema(ddl).parquet(inp), watermark="1 hour"
         )
-        extracted = extract_documents(
-            deduped.select("doc_id", "spans"), repartition=False
-        )
+        extracted = extract_documents(deduped.select("doc_id", "spans"))
         q = (
             extracted.writeStream.format("parquet")
             .option("path", out)

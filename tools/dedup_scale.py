@@ -45,6 +45,8 @@ def build_corpus(spark, n_docs: int, mega: bool):
     chains ~50%, clusters ~25%, uniques the rest."""
     import pandas as pd
 
+    from go_readability_spark.plans.session import lazy_zip_invalidation
+
     n_mega = min(MEGA_LEN, n_docs // 2) if mega else 0
     n_chain = max(((n_docs // 2 - n_mega) // CHAIN_LEN), 0) * CHAIN_LEN
     n_clust = ((n_docs // 4) // CLUSTER_LEN) * CLUSTER_LEN
@@ -53,6 +55,7 @@ def build_corpus(spark, n_docs: int, mega: bool):
     b_clust = b_chain + n_clust
 
     def gen(pdf_iter):
+        lazy_zip_invalidation()
         for pdf in pdf_iter:
             ids, texts = [], []
             for i in pdf["id"]:
