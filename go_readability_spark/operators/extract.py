@@ -48,8 +48,9 @@ from .render import render_article
 
 __all__ = ["extract_documents", "extract_batch_rows", "metrics_rollup"]
 
-# deep DOM recursion (walkers + html.parser) needs headroom beyond the
-# 1000-frame default; bumped once per executor worker
+# the recursive tree walkers and serializers need headroom
+# beyond the 1000-frame default on deeply nested documents; parsing is
+# iterative. Bumped once per executor worker
 _RECURSION_LIMIT = 20000
 
 
@@ -127,6 +128,32 @@ def extract_batch_rows(
     return out
 
 
+def _decode_spans(spans) -> list:
+    """``spans.to_pylist()`` for a list<struct> column, built per field:
+    one ``to_pylist`` per struct child, zipped into the same dicts, then
+    sliced by the list offsets. A null list and a null struct entry stay
+    ``None``. ``.values`` (not ``.flatten()``, which drops the values
+    behind null lists) keeps ``.offsets`` absolute into it."""
+    offsets = spans.offsets.to_pylist()
+    start = offsets[0]
+    structs = spans.values.slice(start, offsets[-1] - start)
+    names = [field.name for field in structs.type]
+    decoded = [
+        dict(zip(names, values))
+        for values in zip(*(structs.field(i).to_pylist() for i in range(len(names))))
+    ]
+    if structs.null_count:
+        decoded = [
+            span if valid else None
+            for span, valid in zip(decoded, structs.is_valid().to_pylist())
+        ]
+    valid = spans.is_valid().to_pylist()
+    return [
+        decoded[offsets[k] - start:offsets[k + 1] - start] if valid[k] else None
+        for k in range(len(spans))
+    ]
+
+
 def _arrow_batches(options: Optional[ReadabilityOptions], render: bool):
     """The mapInArrow adapter: (doc_id, spans, doc_bytes) record batches
     in, one ``extract_batch_rows`` call per batch, its rows out."""
@@ -142,7 +169,7 @@ def _arrow_batches(options: Optional[ReadabilityOptions], render: bool):
         for batch in batches:
             rows = extract_batch_rows(
                 batch.column("doc_id").to_pylist(),
-                batch.column("spans").to_pylist(),
+                _decode_spans(batch.column("spans")),
                 batch.column("doc_bytes").to_pylist(),
                 options,
                 render,

@@ -27,7 +27,6 @@ from .functions.hashing import (
     minhash_signature_sql,
 )
 from .functions.text import (
-    BPE_TOKEN_RE,
     bpe_token_count_sql,
     norm_fingerprint_sql,
     rolling_hash_sql,

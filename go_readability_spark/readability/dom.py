@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from .regexps import NORMALIZE, byte_len
+from .regexps import byte_len, collapse_whitespace
 from .vdom import VElement, VNode, VText
 
 __all__ = [
@@ -247,7 +247,7 @@ def get_inner_text(node: VNode, normalize_spaces: bool = False) -> str:
 
     text = text.strip()
     if normalize_spaces:
-        text = NORMALIZE.sub(" ", text)
+        text = collapse_whitespace(text)
     if cache is not None:
         cache[key] = text
     return text

@@ -22,7 +22,6 @@ from .regexps import (
     HTML_ENTITY,
     JSONLD_ARTICLE_TYPES,
     NAME_PATTERN,
-    NORMALIZE,
     NUMERIC_ENTITY,
     PROPERTY_PATTERN,
     SCHEMA_DOT_ORG,
@@ -30,6 +29,7 @@ from .regexps import (
     TITLE_SEPARATOR,
     TITLE_SEPARATOR_STRIP,
     byte_len,
+    collapse_whitespace,
 )
 from .vdom import VDocument
 
@@ -113,7 +113,7 @@ def get_article_title(doc: VDocument) -> str:
             cur_title = get_inner_text(h_ones[0], False)
 
     cur_title = cur_title.strip()
-    cur_title = NORMALIZE.sub(" ", cur_title)
+    cur_title = collapse_whitespace(cur_title)
 
     cur_title_word_count = _word_count(cur_title)
     if cur_title_word_count <= 4 and (

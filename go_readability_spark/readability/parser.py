@@ -7,17 +7,46 @@ when absent (:70-82), and the <html> element's own attributes dropped
 (:47 creates a fresh "html" element).
 
 html5lib is not available in this environment, so this module implements an
-HTML5-*subset* tree builder on top of the stdlib tokenizer
-(``html.parser.HTMLParser``). It covers the constructions the extraction
-algorithm is sensitive to:
+HTML5-*subset* tree builder on its own tokenizer (``_tokenize``). The
+tokenizer is one master regex run as a ``match`` loop: its alternatives
+take text, a well-formed start tag and a simple end tag, and one
+tolerant branch in the same loop takes every other ``<``. It emits
+exactly the callback stream CPython 3.11.7's
+``html.parser.HTMLParser(convert_charrefs=True)`` gave the builder
+(tests/test_tokenizer.py holds it to that stream and to a sha256 pin of
+it), so the trees are the ones the stdlib-backed builder built, on any
+interpreter. The html.parser quirks it reproduces:
+
+- charrefs are decoded per text chunk and in attribute values; the data
+  chunks are html.parser's (text up to the next ``<``), since the
+  builder's whitespace, foster-parenting and ``<pre>`` rules look at
+  each chunk
+- a ``<`` that starts no markup is a ``"<"`` chunk of its own
+- attribute scanning follows ``attrfind_tolerant``: a name may contain
+  ``<`` (the catalogued ``attr-retokenize`` fuzz class), ``=`` may
+  repeat, bare values run to whitespace or ``>``, a valueless attribute
+  is ``None`` (``""`` in the tree)
+- a start tag not closed by ``>`` or ``/>`` becomes undecoded text, and
+  at end of input an unterminated ``<tag``, ``</x`` or ``<!--`` becomes
+  text up to the next ``>`` or ``<`` (html.parser's ``close()``)
+- ``</>`` is dropped, ``</ 3>`` is a bogus comment, ``</name junk>``
+  ends ``name``
+- script/style content is raw text up to its end tag (any case,
+  whitespace allowed around the name); an unterminated one drops the
+  rest of the input
+- comments, doctype, ``<?...>`` and marked sections are dropped;
+  ``<![CDATA[...]]>`` and ``<![if ...]>`` through their close, any other
+  ``<![`` (on which html.parser raises) as a bogus comment up to the next
+  ``>``, as in x/net/html
+
+The tree builder covers the constructions the extraction algorithm is
+sensitive to:
 
 - void elements never take children
 - ``<p>`` is implicitly closed by block-level start tags; ``<li>`` by
   ``<li>``; ``<dt>/<dd>``, ``<tr>``, ``<td>/<th>``, ``<option>``,
   ``<thead>/<tbody>/<tfoot>`` likewise
 - head/body synthesis with head-only elements kept in <head>
-- character references decoded in text (convert_charrefs)
-- script/style contents kept as raw text (tokenizer CDATA mode)
 - one newline immediately after ``<pre>``/``<textarea>``/``<listing>``
   start tags is dropped (HTML5 tokenizer rule honoured by x/net/html)
 - ``<x-media .../>`` — OUR span-codec placeholder, not an HTML tag — is
@@ -52,7 +81,8 @@ integration points honored).
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
+import re
+from html import unescape
 
 from .vdom import VDocument, VElement, VText
 
@@ -268,9 +298,8 @@ _TABLE_ALLOWED = frozenset({
 })
 
 
-class _TreeBuilder(HTMLParser):
+class _TreeBuilder:
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
         self.root = VElement("html")  # <html> attrs dropped (parser.go:47)
         self.head: VElement | None = None
         self.body: VElement | None = None
@@ -285,13 +314,6 @@ class _TreeBuilder(HTMLParser):
         self.afe: list[VElement | None] = []
 
     # -- helpers -------------------------------------------------------
-    def updatepos(self, i: int, j: int) -> int:
-        # line/column tracking disabled: nothing in the tree builder or
-        # its callers reads self.lineno/self.offset, and the stdlib
-        # bookkeeping (a splitlines per data chunk) showed up in per-doc
-        # profiles. Return j exactly as _markupbase.updatepos does.
-        return j
-
     def _current(self) -> VElement:
         return self.stack[-1]
 
@@ -882,18 +904,254 @@ class _TreeBuilder(HTMLParser):
         else:
             cur.append_child(VText(data))
 
-    # comments / doctype / PIs dropped (parser.go:124)
-    def handle_comment(self, data: str) -> None:  # noqa: D102
-        pass
 
-    def handle_decl(self, decl: str) -> None:  # noqa: D102
-        pass
+# -- tokenizer ----------------------------------------------------------
+# The master regex: text, a well-formed start tag, a simple end tag. Each
+# alternative is a sub-language on which html.parser's scanners (quoted
+# below) provably give the same token: tag and attribute names stop where
+# html.parser's would, whitespace inside a tag is the ASCII set its
+# tag-name class stops at (a \x0b or \xa0 there belongs to the name), and
+# a bare value stops only at whitespace or ">" as its bare value does.
+# Anything else at a "<" goes to the tolerant branch.
+_END_TAG = r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"  # html.parser's endtagfind
+_MASTER = re.compile(
+    r"([^<]+)"
+    r"|<([a-zA-Z][-a-zA-Z0-9]*)"
+    r"((?:[ \t\n\r\f]+[a-zA-Z_:][-a-zA-Z0-9_:.]*"
+    r"(?:[ \t\n\r\f]*=[ \t\n\r\f]*(?:\"[^\"]*\"|'[^']*'|[^\s>\"'=<`]+))?)*)"
+    r"[ \t\n\r\f]*(/?)>"
+    r"|" + _END_TAG
+)
+# one attribute of _MASTER's third group, name and value captured; the
+# two must agree, as findall re-splits that group with this
+_ATTR = re.compile(
+    r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)"
+    r"(?:[ \t\n\r\f]*=[ \t\n\r\f]*(\"[^\"]*\"|'[^']*'|[^\s>\"'=<`]+))?"
+)
 
-    def handle_pi(self, data: str) -> None:  # noqa: D102
-        pass
+# html.parser's own scanners (CPython 3.11 html/parser.py, _markupbase.py)
+# for the tolerant branch, where the input is anything at all
+_TAGFIND = re.compile(r"([a-zA-Z][^\t\n\r\f />\x00]*)(?:\s|/(?!>))*")
+_ATTRFIND = re.compile(
+    r"((?<=['\"\s/])[^\s/>][^\s/=>]*)(\s*=+\s*"
+    r"('[^']*'|\"[^\"]*\"|(?!['\"])[^>\s]*))?(?:\s|/(?!>))*"
+)
+_LOCATE_START_TAG_END = re.compile(r"""
+  <[a-zA-Z][^\t\n\r\f />\x00]*       # tag name
+  (?:[\s/]*                          # optional whitespace before attribute name
+    (?:(?<=['"\s/])[^\s/>][^\s/=>]*  # attribute name
+      (?:\s*=+\s*                    # value indicator
+        (?:'[^']*'                   # LITA-enclosed value
+          |"[^"]*"                   # LIT-enclosed value
+          |(?!['"])[^>\s]*           # bare value
+         )
+        \s*                          # possibly followed by a space
+       )?(?:\s|/(?!>))*
+     )*
+   )?
+  \s*                                # trailing whitespace
+""", re.VERBOSE)
+_INCOMPLETE_AT = frozenset(
+    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ=/"
+)
+_COMMENT_CLOSE = re.compile(r"--\s*>")
+_DECL_NAME = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*")
+_MARKED_SECTION_CLOSE = dict.fromkeys(
+    ("temp", "cdata", "ignore", "include", "rcdata"), re.compile(r"]\s*]\s*>")
+)
+_MARKED_SECTION_CLOSE.update(
+    dict.fromkeys(("if", "else", "endif"), re.compile(r"]\s*>"))  # MS Office
+)
 
-    def unknown_decl(self, data: str) -> None:  # noqa: D102
-        pass
+# raw-text elements: content runs to the first case-insensitive match
+_RAW_TEXT_END = {
+    tag: re.compile(r"</\s*%s\s*>" % tag, re.I) for tag in ("script", "style")
+}
+_END_TAG_AT = re.compile(_END_TAG)
+
+
+def _tokenize(html: str, sink) -> None:
+    """Feed ``html`` to ``sink``'s ``handle_starttag`` /
+    ``handle_startendtag`` / ``handle_endtag`` / ``handle_data`` exactly
+    as ``HTMLParser(convert_charrefs=True).feed(html); close()`` calls
+    them on CPython 3.11.7, data chunking included (see the module
+    docstring for the quirks this reproduces).
+
+    One loop of ``_MASTER.match`` at ``pos``: text, well-formed start
+    tags and simple end tags come from the match; every other ``<``
+    goes through ``_tolerant``, which parses that one construct with
+    html.parser's rules. After a ``<script>``/``<style>`` start tag the
+    loop jumps past the raw text (an unterminated one drops the rest
+    of the input)."""
+    starttag = sink.handle_starttag
+    startendtag = sink.handle_startendtag
+    endtag = sink.handle_endtag
+    data = sink.handle_data
+    match = _MASTER.match
+    findattrs = _ATTR.findall
+    raw_text_end = _RAW_TEXT_END
+    pos, n = 0, len(html)
+    while pos < n:
+        m = match(html, pos)
+        if m is None:
+            pos, tag = _tolerant(html, pos, sink)
+            if tag is None:
+                continue
+        else:
+            pos = m.end()
+            text, tag, attrs_src, slash, end = m.groups()
+            if text is not None:
+                data(unescape(text) if "&" in text else text)
+                continue
+            if end is not None:
+                endtag(end.lower())
+                continue
+            tag = tag.lower()
+            attrs = []
+            if attrs_src:
+                for name, value in findattrs(attrs_src):
+                    if not value:
+                        value = None
+                    else:
+                        if value[0] in "\"'":
+                            value = value[1:-1]
+                        if "&" in value:
+                            value = unescape(value)
+                    attrs.append((name.lower(), value))
+            if slash:
+                startendtag(tag, attrs)
+                continue
+            starttag(tag, attrs)
+        end_re = raw_text_end.get(tag)
+        if end_re is not None:
+            pos = _raw_text(html, pos, end_re, sink)
+
+
+def _raw_text(html: str, pos: int, end_re, sink) -> int:
+    """Emit a script/style element's content as raw text (no charref
+    decoding) and its end tag; return where normal tokenizing resumes."""
+    while True:
+        m = end_re.search(html, pos)
+        if m is None:
+            return len(html)  # unterminated: the rest is dropped
+        j = m.start()
+        if j > pos:
+            sink.handle_data(html[pos:j])
+        pos = m.end()
+        end = _END_TAG_AT.match(html, j)
+        if end is not None:
+            sink.handle_endtag(end.group(1).lower())
+            return pos
+        # the case-insensitive match folded a non-ASCII letter (ſ, K, ı)
+        # into the name: html.parser passes that end tag on as text and
+        # stays in raw-text mode
+        sink.handle_data(html[j:pos])
+
+
+def _tolerant(html: str, i: int, sink):
+    """The tolerant branch: one construct at the ``<`` at ``i`` that the
+    master regex did not match, parsed with html.parser's rules. Returns
+    (next position, tag) where tag is set only when a start tag was
+    emitted through ``handle_starttag`` (the caller then checks for raw
+    text)."""
+    tag = None
+    c = html[i + 1:i + 2]
+    if c.isascii() and c.isalpha():
+        k, tag = _tolerant_start_tag(html, i, sink)
+    elif c == "/":
+        k = html.find(">", i + 1)
+        if k >= 0:
+            name = _TAGFIND.match(html, i + 2)
+            if name is not None:
+                # "</name junk>": the name, everything up to ">" dropped
+                sink.handle_endtag(name.group(1).lower())
+            # else "</>" is dropped and "</ 3>" is a bogus comment;
+            # all three end at the first ">"
+            k += 1
+    elif html.startswith("<!--", i):
+        close = _COMMENT_CLOSE.search(html, i + 4)
+        k = close.end() if close is not None else -1
+    elif c == "!" or c == "?":
+        k = _declaration(html, i)
+    else:
+        # a "<" that starts no markup is its own text chunk
+        sink.handle_data("<")
+        return i + 1, None
+    if k < 0:
+        # input ends inside the construct: html.parser's close() emits
+        # it as text up to the next ">" (or "<")
+        k = html.find(">", i + 1)
+        if k < 0:
+            k = html.find("<", i + 1)
+            if k < 0:
+                k = i + 1
+        else:
+            k += 1
+        text = html[i:k]
+        sink.handle_data(unescape(text) if "&" in text else text)
+    return k, tag
+
+
+def _tolerant_start_tag(html: str, i: int, sink):
+    """html.parser's check_for_whole_start_tag + parse_starttag."""
+    m = _LOCATE_START_TAG_END.match(html, i)
+    j = m.end()
+    c = html[j:j + 1]
+    if c == ">":
+        endpos = j + 1
+    elif c == "/":
+        endpos = j + 2 if html.startswith("/>", j) else -1
+    elif not c or c in _INCOMPLETE_AT:
+        endpos = -1
+    else:
+        endpos = j
+    if endpos < 0:
+        return -1, None
+    name = _TAGFIND.match(html, i + 1)
+    tag = name.group(1).lower()
+    k = name.end()
+    attrs = []
+    while k < endpos:
+        m = _ATTRFIND.match(html, k)
+        if m is None:
+            break
+        attrname, rest, value = m.group(1, 2, 3)
+        if not rest:
+            value = None
+        elif value[:1] == "'" == value[-1:] or value[:1] == '"' == value[-1:]:
+            value = value[1:-1]
+        if value:
+            value = unescape(value)
+        attrs.append((attrname.lower(), value))
+        k = m.end()
+    end = html[k:endpos].strip()
+    if end not in (">", "/>"):
+        # not closed by ">" or "/>": the source text, undecoded, is data
+        sink.handle_data(html[i:endpos])
+        return endpos, None
+    if end.endswith("/>"):
+        sink.handle_startendtag(tag, attrs)
+        return endpos, None
+    sink.handle_starttag(tag, attrs)
+    return endpos, tag
+
+
+def _declaration(html: str, i: int) -> int:
+    """``<?...>`` or ``<!`` other than a comment: dropped. Returns the
+    end, or -1 when unterminated."""
+    if html.startswith("<![", i):
+        name = _DECL_NAME.match(html, i + 3)
+        close_re = name is not None and _MARKED_SECTION_CLOSE.get(
+            name.group().strip().lower()
+        )
+        if close_re:
+            close = close_re.search(html, i + 3)
+            return close.end() if close is not None else -1
+        # any other "<![" (html.parser raises there) is a bogus comment,
+        # as in x/net/html
+    # a doctype, <?...> and a bogus comment all end at the first ">"
+    gt = html.find(">", i + 2)
+    return gt + 1 if gt >= 0 else -1
 
 
 def parse_html(html_content: str, base_uri: str = "") -> VDocument:
@@ -903,8 +1161,7 @@ def parse_html(html_content: str, base_uri: str = "") -> VDocument:
     and the returned document element is always a fresh ``<html>``.
     """
     builder = _TreeBuilder()
-    builder.feed(html_content)
-    builder.close()
+    _tokenize(html_content, builder)
     builder._ensure_body()
     doc = VDocument(builder.root, builder.body)
     doc.base_uri = base_uri

@@ -61,6 +61,17 @@ COMMAS = re.compile(",|،|﹐|︐|︑|⹁|⹔|⹒|，|、")
 # internal/util/regexp.go:41 — RE2 \s is ASCII-only
 NORMALIZE = re.compile(GOWS + "{2,}")
 
+
+def collapse_whitespace(text: str) -> str:
+    """``NORMALIZE.sub(" ", text)``. Text whose only whitespace is the
+    space (the common case) skips the regex scan: halving double spaces
+    until none is left gives the same string."""
+    if "\n" in text or "\t" in text or "\r" in text or "\f" in text:
+        return NORMALIZE.sub(" ", text)
+    while "  " in text:
+        text = text.replace("  ", " ")
+    return text
+
 # internal/util/regexp.go:51-62 (hasChildBlockElement set; used by markdown)
 DIV_TO_P_ELEMS = frozenset(
     {"blockquote", "dl", "div", "img", "ol", "p", "pre", "table", "ul"}

@@ -4,6 +4,8 @@ article_test.go."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 
 from go_readability_spark.readability.extract import (
@@ -23,6 +25,7 @@ from go_readability_spark.readability.regexps import (
     PHRASING_ELEMS,
     POSITIVE,
     UNLIKELY_CANDIDATES,
+    collapse_whitespace,
 )
 from go_readability_spark.readability.vdom import VElement, VText
 
@@ -92,6 +95,18 @@ class TestRegexps:
     )
     def test_normalize(self, value, expected):
         assert NORMALIZE.sub(" ", value) == expected
+        assert collapse_whitespace(value) == expected
+
+    def test_collapse_whitespace_matches_normalize(self):
+        # \x0b and \xa0 are whitespace to str.strip and Python's \s but
+        # not to NORMALIZE (RE2's ASCII \s): both must pass through
+        rng = random.Random(7)
+        alphabet = "\t\n\f\r \x0b\xa0a"
+        for _ in range(5000):
+            value = "".join(rng.choices(alphabet, k=rng.randint(0, 40)))
+            assert collapse_whitespace(value) == NORMALIZE.sub(" ", value), value
+        for value in (" " * 1025, "a" + " " * 64 + "b" + " " * 3):
+            assert collapse_whitespace(value) == NORMALIZE.sub(" ", value)
 
     def test_default_tags_to_score(self):
         assert tuple(DEFAULT_TAGS_TO_SCORE) == (

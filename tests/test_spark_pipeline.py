@@ -21,7 +21,7 @@ pyspark = pytest.importorskip("pyspark")
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from go_readability_spark.corpus import generate_corpus, generate_doc  # noqa: E402
+from go_readability_spark.corpus import generate_doc  # noqa: E402
 from go_readability_spark.operators.extract import (  # noqa: E402
     extract_batch_rows,
     extract_documents,
@@ -173,6 +173,39 @@ class TestErrorRows:
         out = list(fn(iter([batch])))[0]
         assert out.column("error").to_pylist() == ["null spans"]
         assert out.column("doc_id").to_pylist() == ["doc-x"]
+
+    def test_columnar_span_decode_matches_to_pylist(self):
+        """The adapter's per-field decode gives exactly ``to_pylist()``:
+        on a sliced column, a null list whose offsets still span values,
+        and a null struct entry with non-null children."""
+        import pyarrow as pa
+
+        from go_readability_spark.operators.extract import _decode_spans
+        from go_readability_spark.schemas import SPAN_IN_TYPE
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        span_t = to_arrow_type(SPAN_IN_TYPE)
+        n = 7
+        structs = pa.StructArray.from_arrays(
+            [
+                pa.array(["text", "media", None, "text", "text", "media", "text"]),
+                pa.array([f"<p>{k}</p>" for k in range(n)]),
+                pa.array(["", "media://x", "", None, "", "", ""]),
+                pa.array(range(n), type=pa.int32()),
+            ],
+            fields=list(span_t),
+            mask=pa.array([False, False, False, True, True, False, False]),
+        )
+        spans = pa.ListArray.from_arrays(
+            pa.array([0, 2, 4, 4, 6, 7], type=pa.int32()),
+            structs,
+            mask=pa.array([False, True, False, False, False]),
+        )
+        assert spans.to_pylist()[1] is None and spans.offsets[1] != spans.offsets[2]
+        for col in (spans, spans.slice(1), spans.slice(2, 2), spans.slice(5)):
+            assert _decode_spans(col) == col.to_pylist()
+        assert _decode_spans(spans)[2] == []
+        assert _decode_spans(spans)[3][0] is None
 
 
 class TestSkewPlan:

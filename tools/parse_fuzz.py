@@ -20,7 +20,14 @@ nesting. For every document it asserts:
      the reference byte-for-byte (parity > spec) and therefore inherit
      that instability; the fixpoint oracle applies to everything else;
   3. full extract() never raises and emits a well-formed span sequence
-     (contiguous 0..n-1 order, kinds in {text, media}).
+     (contiguous 0..n-1 order, kinds in {text, media});
+  4. the parser's own tokenizer emits exactly the callback stream of
+     CPython 3.11.7's ``html.parser.HTMLParser(convert_charrefs=True)``
+     (``token_stream`` vs ``stdlib_token_stream``; the recorder below is
+     the oracle, the package itself no longer imports html.parser). On
+     another interpreter version html.parser's own stream may differ
+     (CPython changed its comment and script handling after 3.11.7), so
+     this invariant is only meaningful on 3.11.7.
 
 Cross-engine mode: ``--go-binary PATH`` additionally runs the reference
 CLI on each document and diffs article HTML; this sandbox has no Go
@@ -43,6 +50,8 @@ import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from html.parser import HTMLParser  # noqa: E402
 
 FORMATTING = ["b", "i", "em", "strong", "code", "small", "u", "s"]
 _LT_ATTR = re.compile(r" <[a-zA-Z][^\s=<>]*=\"")
@@ -197,6 +206,49 @@ def classify_fixpoint_divergence(s1: str, s2: str) -> str:
     return "unknown"
 
 
+class _TokenRecorder:
+    """Records the four tree-builder callbacks as (kind, tag, attrs,
+    data) tuples."""
+
+    def __init__(self) -> None:
+        self.events: list[tuple] = []
+
+    def handle_starttag(self, tag, attrs):
+        self.events.append(("start", tag, list(attrs), None))
+
+    def handle_startendtag(self, tag, attrs):
+        self.events.append(("startend", tag, list(attrs), None))
+
+    def handle_endtag(self, tag):
+        self.events.append(("end", tag, None, None))
+
+    def handle_data(self, data):
+        self.events.append(("data", None, None, data))
+
+
+class _StdlibRecorder(_TokenRecorder, HTMLParser):
+    def __init__(self) -> None:
+        _TokenRecorder.__init__(self)
+        HTMLParser.__init__(self, convert_charrefs=True)
+
+
+def token_stream(html: str) -> list[tuple]:
+    """The callback stream of the parser's tokenizer on ``html``."""
+    from go_readability_spark.readability.parser import _tokenize
+
+    rec = _TokenRecorder()
+    _tokenize(html, rec)
+    return rec.events
+
+
+def stdlib_token_stream(html: str) -> list[tuple]:
+    """The oracle: html.parser's stream for ``feed(html); close()``."""
+    rec = _StdlibRecorder()
+    rec.feed(html)
+    rec.close()
+    return rec.events
+
+
 def span_sequence(html: str):
     """Parse + extract; return the output span tuples (kind, ref, md5)."""
     from go_readability_spark.readability import ReadabilityOptions, extract
@@ -238,6 +290,7 @@ def main() -> int:
         "fixpoint_convergence_depths": {},
         "extract_errors": 0,
         "span_order_violations": 0,
+        "token_stream_violations": 0,
         "go_diffs": None,
     }
     failures = []
@@ -287,6 +340,9 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001
             stats["extract_errors"] += 1
             failures.append({"i": i, "kind": "extract", "err": str(exc), "html": html})
+        if token_stream(html) != stdlib_token_stream(html):
+            stats["token_stream_violations"] += 1
+            failures.append({"i": i, "kind": "token_stream", "html": html})
         if args.go_binary:
             # Compare like-for-like artifacts: the reference CLI emits
             # the EXTRACTED ARTICLE as clean HTML (readability.ToHTML,
@@ -333,6 +389,7 @@ def main() -> int:
         + stats["fixpoint_violations"]
         + stats["extract_errors"]
         + stats["span_order_violations"]
+        + stats["token_stream_violations"]
     )
     return 1 if bad else 0
 
