@@ -43,9 +43,11 @@ The tree builder covers the constructions the extraction algorithm is
 sensitive to:
 
 - void elements never take children
-- ``<p>`` is implicitly closed by block-level start tags; ``<li>`` by
-  ``<li>``; ``<dt>/<dd>``, ``<tr>``, ``<td>/<th>``, ``<option>``,
-  ``<thead>/<tbody>/<tfoot>`` likewise
+- ``<p>`` is implicitly closed by block-level start tags, ``<option>`` by
+  ``<option>``/``<optgroup>``; ``<li>``/``<dt>``/``<dd>`` close an open
+  item by the spec's "in body" rule (the search stops at any special
+  element but address, div and p); rows, cells and table sections are
+  closed by the "clear the stack back to a table context" rule
 - head/body synthesis with head-only elements kept in <head>
 - one newline immediately after ``<pre>``/``<textarea>``/``<listing>``
   start tags is dropped (HTML5 tokenizer rule honoured by x/net/html)
@@ -84,7 +86,7 @@ from __future__ import annotations
 import re
 from html import unescape
 
-from .vdom import VDocument, VElement, VText
+from .vdom import VDocument, VElement, VText, detach, last_index
 
 __all__ = [
     "parse_html",
@@ -114,48 +116,22 @@ P_CLOSERS = frozenset({
     "li", "xmp", "listing",
 })
 
-# tag -> ORDERED closer groups. The search walks the open stack once
-# (innermost-out, bounded by scope); the close happens at the INNERMOST
-# match of the earliest-priority group that matched anywhere in scope. The
-# ordering encodes HTML5's layered implied-ends: a <tr> start closes the
-# open ROW (which also pops an unclosed cell above it) when one exists,
-# and only falls back to closing a bare cell otherwise — a flat
-# nearest-match set closed just the cell and nested the new row inside
-# the old one (found by tools/parse_fuzz.py round 2).
-SIBLING_CLOSERS: dict[str, tuple[frozenset[str], ...]] = {
-    "li": (frozenset({"li"}),),
-    "dt": (frozenset({"dt", "dd"}),),
-    "dd": (frozenset({"dt", "dd"}),),
-    "tr": (frozenset({"tr"}), frozenset({"td", "th"})),
-    "td": (frozenset({"td", "th"}),),
-    "th": (frozenset({"td", "th"}),),
-    "thead": (
-        frozenset({"thead", "tbody", "tfoot"}),
-        frozenset({"tr"}),
-        frozenset({"td", "th"}),
-    ),
-    "tbody": (
-        frozenset({"thead", "tbody", "tfoot"}),
-        frozenset({"tr"}),
-        frozenset({"td", "th"}),
-    ),
-    "tfoot": (
-        frozenset({"thead", "tbody", "tfoot"}),
-        frozenset({"tr"}),
-        frozenset({"td", "th"}),
-    ),
-    "option": (frozenset({"option"}),),
-    "optgroup": (frozenset({"option", "optgroup"}),),
+# tag -> the open elements its start tag implicitly closes: the innermost
+# match, searched out from the current node, is popped with everything
+# above it, and a stop element (_implicit_close) ends the search first.
+# Table rows, cells and sections have no entry: the "clear the stack back
+# to a table context" rule (_TABLE_STRUCTURE_CLEAR) pops those.
+SIBLING_CLOSERS: dict[str, frozenset[str]] = {
+    "li": frozenset({"li"}),
+    "dt": frozenset({"dt", "dd"}),
+    "dd": frozenset({"dt", "dd"}),
+    "option": frozenset({"option"}),
+    "optgroup": frozenset({"option", "optgroup"}),
     # HTML5 "in table" mode: a <table> start tag acts as </table> first.
     # The td/th/caption scope boundaries keep legitimate nested tables
     # (inside a cell) open — only a table started in row/table context
     # (e.g. directly inside <tr>) closes the outer one.
-    "table": (frozenset({"table"}),),
-}
-
-# per-tag union of its closer groups, precomputed off the hot path
-_SIBLING_ANY: dict[str, frozenset[str]] = {
-    tag: frozenset().union(*groups) for tag, groups in SIBLING_CLOSERS.items()
+    "table": frozenset({"table"}),
 }
 
 # Elements that bound the implicit-close search (approximate HTML5 scopes)
@@ -163,26 +139,6 @@ SCOPE_BOUNDARIES = frozenset({
     "html", "body", "table", "td", "th", "caption", "template", "applet",
     "object", "marquee", "select",
 })
-
-# Per-tag additions to the boundary set: an <li> start tag closes an open
-# <li> only within "list item scope" (HTML5), i.e. the search must stop at
-# a nested <ul>/<ol> so inner lists don't close the outer item.
-# HTML5 "has an element in list item scope" is bounded by ul/ol; the
-# spec's generate-implied-ends walk for li/dt/dd additionally stops at
-# any "special" element other than address/div/p — approximated here by
-# the block-level set (a new <li> must not close a list item across an
-# intervening <section>/<blockquote>/heading boundary).
-_LI_SPECIAL_STOPS = frozenset({
-    "ul", "ol", "section", "article", "aside", "blockquote", "pre",
-    "h1", "h2", "h3", "h4", "h5", "h6", "nav", "header", "footer",
-    "main", "figure", "figcaption", "fieldset", "details", "summary",
-    "dl", "form", "hgroup", "menu",
-})
-SIBLING_SCOPE_EXTRA: dict[str, frozenset[str]] = {
-    "li": _LI_SPECIAL_STOPS,
-    "dt": _LI_SPECIAL_STOPS,
-    "dd": _LI_SPECIAL_STOPS,
-}
 
 PRE_LIKE = frozenset({"pre", "textarea", "listing"})
 
@@ -218,6 +174,11 @@ DEFAULT_SCOPE = frozenset({
 _LIST_ITEM_SCOPE = DEFAULT_SCOPE | frozenset({"ol", "ul"})
 _BUTTON_SCOPE = DEFAULT_SCOPE | frozenset({"button"})
 _TABLE_SCOPE = frozenset({"html", "table", "template"})
+# WHATWG "in body" <li>/<dd>/<dt> loop (x/net/html's li case): the search
+# for the item to close stops at any special element but address, div
+# and p — so a new <li> nests inside an open <section>, <ul> or <button>
+_LIST_ITEMS = frozenset({"li", "dt", "dd"})
+_LIST_ITEM_STOPS = SPECIAL_ELEMENTS - {"address", "div", "p"}
 _HEADINGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 _TABLE_END_TAGS = frozenset({
     "table", "td", "th", "tr", "tbody", "thead", "tfoot", "caption",
@@ -347,16 +308,6 @@ class _TreeBuilder:
         c.attributes.update(el.attributes)
         return c
 
-    @staticmethod
-    def _detach(node) -> None:
-        p = node.parent
-        if p is not None:
-            for k in range(len(p.children) - 1, -1, -1):
-                if p.children[k] is node:
-                    del p.children[k]
-                    break
-        node.parent = None
-
     def _append_node(self, node: VElement, target: VElement | None = None) -> None:
         """Insert at the spec's "appropriate place for inserting a node":
         inside ``target`` (default: current node), except that non-table
@@ -485,11 +436,7 @@ class _TreeBuilder:
             if fmt is None:
                 self._any_other_end_tag(subject)
                 return
-            fmt_stack = -1
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i] is fmt:
-                    fmt_stack = i
-                    break
+            fmt_stack = last_index(stack, fmt)
             if fmt_stack < 0:  # in list but not on stack: drop entry
                 del afe[fmt_afe]
                 return
@@ -527,11 +474,7 @@ class _TreeBuilder:
                 node = stack[node_idx]
                 if node is fmt:
                     break
-                node_afe = -1
-                for j in range(len(afe) - 1, -1, -1):
-                    if afe[j] is node:
-                        node_afe = j
-                        break
+                node_afe = last_index(afe, node)
                 if inner > 3 and node_afe != -1:
                     del afe[node_afe]
                     if node_afe < bookmark:
@@ -548,10 +491,10 @@ class _TreeBuilder:
                 node = clone
                 if last_node is fb:
                     bookmark = node_afe + 1
-                self._detach(last_node)
+                detach(last_node)
                 node.append_child(last_node)
                 last_node = node
-            self._detach(last_node)
+            detach(last_node)
             self._append_node(last_node, target=common)
             clone = self._clone(fmt)
             for ch in fb.children:
@@ -559,28 +502,19 @@ class _TreeBuilder:
             clone.children = fb.children
             fb.children = []
             fb.append_child(clone)
-            fa = -1
-            for j in range(len(afe) - 1, -1, -1):
-                if afe[j] is fmt:
-                    fa = j
-                    break
+            fa = last_index(afe, fmt)
             if fa != -1:
                 del afe[fa]
                 if fa < bookmark:
                     bookmark -= 1
             bookmark = max(0, min(bookmark, len(afe)))
             afe.insert(bookmark, clone)
-            fi = -1
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i] is fmt:
-                    fi = i
-                    break
+            fi = last_index(stack, fmt)
             if fi != -1:
                 del stack[fi]
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i] is fb:
-                    stack.insert(i + 1, clone)
-                    break
+            fb_stack = last_index(stack, fb)
+            if fb_stack != -1:
+                stack.insert(fb_stack + 1, clone)
             # outer loop re-runs: with no special element left above the
             # clone it takes the no-furthest-block branch next pass,
             # which is what puts following content into the block (the
@@ -609,29 +543,15 @@ class _TreeBuilder:
                     break
                 if t in SCOPE_BOUNDARIES:
                     break
-        groups = SIBLING_CLOSERS.get(tag)
-        if groups:
-            any_closer = _SIBLING_ANY[tag]
-            extra = SIBLING_SCOPE_EXTRA.get(tag)
-            # innermost match per group, scanned once out to the scope
-            # boundary; close at the earliest-priority group that matched
-            # (the scan stops early when the top-priority group matches —
-            # its first, i.e. innermost, hit always wins)
-            matches: dict[int, int] = {}
+        closers = SIBLING_CLOSERS.get(tag)
+        if closers:
+            stops = _LIST_ITEM_STOPS if tag in _LIST_ITEMS else SCOPE_BOUNDARIES
             for i in range(len(self.stack) - 1, 0, -1):
                 t = self.stack[i].tag_name
-                for g, group in enumerate(groups):
-                    if t in group and g not in matches:
-                        matches[g] = i
-                if 0 in matches:
+                if t in closers:
+                    self._pop_upto(i)
                     break
-                if t not in any_closer and (
-                    t in SCOPE_BOUNDARIES or (extra and t in extra)
-                ):
-                    break
-            for g in range(len(groups)):
-                if g in matches:
-                    self._pop_upto(matches[g])
+                if t in stops:
                     break
 
     # -- tokenizer callbacks -------------------------------------------
@@ -684,15 +604,10 @@ class _TreeBuilder:
                         break
                     if e.tag_name == "a":
                         self._adoption_agency("a")
-                        for k in range(len(afe) - 1, -1, -1):
-                            if afe[k] is e:
-                                del afe[k]
-                                break
-                        stack = self.stack
-                        for k in range(len(stack) - 1, 0, -1):
-                            if stack[k] is e:
-                                del stack[k]
-                                break
+                        for seq in (afe, self.stack):
+                            k = last_index(seq, e)
+                            if k != -1:
+                                del seq[k]
                         break
             self._reconstruct_afe()
             if tag == "nobr" and self._has_in_scope("nobr"):

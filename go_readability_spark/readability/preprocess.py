@@ -12,7 +12,7 @@ import re
 
 from .dom import get_elements_by_tag_name, get_elements_by_tag_names
 from .regexps import AD_PATTERNS, TAGS_TO_REMOVE
-from .vdom import VDocument, VElement
+from .vdom import VDocument, VElement, detach
 
 __all__ = ["preprocess_document", "is_likely_ad"]
 
@@ -21,16 +21,6 @@ __all__ = ["preprocess_document", "is_likely_ad"]
 _AD_COMBINED = re.compile(
     "|".join(f"(?:{p.pattern})" for p in AD_PATTERNS), re.IGNORECASE
 )
-
-
-def _detach(element: VElement) -> None:
-    parent = element.parent
-    if parent is None:
-        return
-    for i, child in enumerate(parent.children):
-        if child is element:
-            del parent.children[i]
-            break
 
 
 def preprocess_document(doc: VDocument) -> VDocument:
@@ -54,14 +44,14 @@ def _remove_unwanted_tags(doc: VDocument) -> None:
     for element in get_elements_by_tag_names(
         doc.document_element, list(TAGS_TO_REMOVE)
     ):
-        _detach(element)
+        detach(element)
 
 
 def _remove_ads(doc: VDocument) -> None:
     """Delete likely-ad elements under body (preprocess.go:106-122)."""
     for element in get_elements_by_tag_name(doc.body, "*"):
         if element.parent is not None and is_likely_ad(element):
-            _detach(element)
+            detach(element)
 
 
 def is_likely_ad(element: VElement) -> bool:

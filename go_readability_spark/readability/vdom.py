@@ -8,9 +8,12 @@ materialized as Spark rows.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Union
+from typing import Optional, Union
 
-__all__ = ["VText", "VElement", "VDocument", "VNode", "is_element", "is_text"]
+__all__ = [
+    "VText", "VElement", "VDocument", "VNode", "is_element", "is_text",
+    "detach", "last_index",
+]
 
 
 class VText:
@@ -65,16 +68,6 @@ class VElement:
         child.parent = self
         self.children.append(child)
 
-    def iter_elements(self) -> Iterator["VElement"]:
-        """Pre-order iteration over self + descendant elements."""
-        stack = [self]
-        while stack:
-            el = stack.pop()
-            yield el
-            stack.extend(
-                c for c in reversed(el.children) if isinstance(c, VElement)
-            )
-
     def __repr__(self) -> str:  # pragma: no cover - debug aid
         return f"VElement(<{self.tag_name}> children={len(self.children)})"
 
@@ -92,6 +85,28 @@ class VDocument:
         self.body = body
         self.base_uri = ""
         self.document_uri = ""
+
+
+def last_index(seq: list, item: object) -> int:
+    """Index of the last entry of ``seq`` that IS ``item``, or -1.
+
+    Nodes define no ``__eq__``; the search is by identity and runs from
+    the end, where the parser's stacks keep their recent entries."""
+    for i in range(len(seq) - 1, -1, -1):
+        if seq[i] is item:
+            return i
+    return -1
+
+
+def detach(node: VNode) -> None:
+    """Remove ``node`` from its parent's children. ``node.parent`` is
+    left as it was: the tree builder re-attaches the node at once, and
+    preprocessing drops it with its subtree."""
+    parent = node.parent
+    if parent is not None:
+        i = last_index(parent.children, node)
+        if i >= 0:
+            del parent.children[i]
 
 
 def is_element(node: object) -> bool:

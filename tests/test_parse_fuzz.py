@@ -10,19 +10,49 @@ dispatcher territory, deliberately out of subset scope)."""
 from __future__ import annotations
 
 import random
+from pathlib import Path
 
+from go_readability_spark.corpus import generate_corpus
 from go_readability_spark.readability.parser import (
     parse_html,
     serialize_document_to_html,
     serialize_to_html,
 )
 
-from tools.parse_fuzz import classify_fixpoint_divergence, gen_doc, span_sequence
+from go_readability_spark.spans import spans_to_html
+from tools.parse_fuzz import (
+    classify_fixpoint_divergence,
+    gen_doc,
+    span_sequence,
+    tree_digest,
+)
 
 N_DOCS = 400
 SEED = 1234
 MAX_FIXPOINT_VIOLATION_RATE = 0.04
 KNOWN_CLASSES = {"li-reclose", "cell-reclose", "text-reorder", "attr-retokenize"}
+
+# tools.parse_fuzz.tree_digest over _tree_docs(): pins the trees
+# themselves, so a tree-builder refactor that claims to change no tree
+# is checked tree for tree, not by fixpoint classes and counts
+TREE_SEEDS = (42, 1234)
+TREE_DOCS = 2000
+TREE_SHA256 = "79c34bc76346b55ea7e857db5ee046b4b5f68e3401e38646a5312823bf098fd2"
+FIXTURE = Path(__file__).parent / "fixtures" / "001" / "source.html"
+
+
+def _tree_docs() -> list[str]:
+    docs = []
+    for seed in TREE_SEEDS:
+        rng = random.Random(seed)
+        docs += [gen_doc(rng) for _ in range(TREE_DOCS)]
+    docs += [spans_to_html(spans) for _, spans in generate_corpus(300)]
+    docs.append(FIXTURE.read_text(encoding="utf-8"))
+    return docs
+
+
+def test_tree_digest_pin():
+    assert tree_digest(_tree_docs()) == TREE_SHA256
 
 
 def test_fuzz_campaign_invariants():

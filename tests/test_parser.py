@@ -534,3 +534,39 @@ class TestAdoptionAgencySpec:
             '<math><annotation-xml encoding="image/svg+xml"><foo></foo>x'
             "</annotation-xml></math>"
         )
+
+
+class TestListItemStops:
+    """The <li>/<dt>/<dd> start-tag rule is WHATWG "in body" (x/net/html's
+    li loop): the search for the item to close stops at any special
+    element but address, div and p, so the new item nests inside it."""
+
+    def _body(self, html):
+        doc = parse_html(html)
+        return "".join(serialize_to_html(c) for c in doc.body.children)
+
+    def test_center_keeps_the_item_open(self):
+        assert self._body("<ul><li>a<center>b<li>c</ul>") == (
+            "<ul><li>a<center>b<li>c</li></center></li></ul>"
+        )
+
+    def test_button_keeps_the_item_open(self):
+        assert self._body("<ul><li>a<button>b<li>c</ul>") == (
+            "<ul><li>a<button>b<li>c</li></button></li></ul>"
+        )
+
+    def test_li_keeps_the_definition_term_open(self):
+        assert self._body("<dl><dt>a<li>b<dt>c</dl>") == (
+            "<dl><dt>a<li>b<dt>c</dt></li></dt></dl>"
+        )
+
+    def test_div_and_address_do_not_stop_the_close(self):
+        assert self._body("<ul><li>a<div>b<li>c</ul>") == (
+            "<ul><li>a<div>b</div></li><li>c</li></ul>"
+        )
+        assert self._body("<ul><li>a<address>b<li>c</ul>") == (
+            "<ul><li>a<address>b</address></li><li>c</li></ul>"
+        )
+        assert self._body("<dl><dt>a<div>b<dd>c</dl>") == (
+            "<dl><dt>a<div>b</div></dt><dd>c</dd></dl>"
+        )

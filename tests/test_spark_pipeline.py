@@ -143,6 +143,8 @@ class TestErrorRows:
         import pyarrow as pa
 
         from go_readability_spark.operators.extract import _arrow_batches
+        from go_readability_spark.schemas import EXTRACTED_SCHEMA
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         span_t = pa.struct(
             [
@@ -169,8 +171,9 @@ class TestErrorRows:
             [pa.array(["doc-x"]), spans, pa.array([10], type=pa.int64())],
             names=["doc_id", "spans", "doc_bytes"],
         )
-        fn = _arrow_batches(None, 1 << 30)
+        fn = _arrow_batches(None, False)
         out = list(fn(iter([batch])))[0]
+        assert out.schema == to_arrow_schema(EXTRACTED_SCHEMA)
         assert out.column("error").to_pylist() == ["null spans"]
         assert out.column("doc_id").to_pylist() == ["doc-x"]
 
@@ -756,7 +759,7 @@ class TestLazyZipInvalidation:
         assert not getattr(
             zipimport.zipimporter.invalidate_caches, "_stat_guarded", False
         )
-        assert list(_arrow_batches(None, MAX_DOC_BYTES)(iter([]))) == []
+        assert list(_arrow_batches(None, False)(iter([]))) == []
         assert zipimport.zipimporter.invalidate_caches._stat_guarded
 
 

@@ -29,6 +29,10 @@ nesting. For every document it asserts:
      (CPython changed its comment and script handling after 3.11.7), so
      this invariant is only meaningful on 3.11.7.
 
+The stats line also carries ``tree_sha256``, a sha256 over every
+document's serialized tree (``tree_digest``), so the campaigns of two
+commits can be compared tree for tree, not only by their counts.
+
 Cross-engine mode: ``--go-binary PATH`` additionally runs the reference
 CLI on each document and diffs article HTML; this sandbox has no Go
 toolchain (`which go` is empty, no prebuilt binary in the reference
@@ -249,6 +253,18 @@ def stdlib_token_stream(html: str) -> list[tuple]:
     return rec.events
 
 
+def tree_digest(docs) -> str:
+    """sha256 over ``serialize_to_html(parse_html(doc).document_element)``
+    of each document in order, one line per tree."""
+    from go_readability_spark.readability.parser import parse_html, serialize_to_html
+
+    h = hashlib.sha256()
+    for html in docs:
+        h.update(serialize_to_html(parse_html(html).document_element).encode())
+        h.update(b"\n")
+    return h.hexdigest()
+
+
 def span_sequence(html: str):
     """Parse + extract; return the output span tuples (kind, ref, md5)."""
     from go_readability_spark.readability import ReadabilityOptions, extract
@@ -278,6 +294,7 @@ def main() -> int:
     from go_readability_spark.readability.parser import (
         parse_html,
         serialize_document_to_html,
+        serialize_to_html,
     )
 
     rng = random.Random(args.seed)
@@ -291,19 +308,25 @@ def main() -> int:
         "extract_errors": 0,
         "span_order_violations": 0,
         "token_stream_violations": 0,
+        "tree_sha256": None,
         "go_diffs": None,
     }
+    trees = hashlib.sha256()
     failures = []
     go_diffs = 0
     go_errors = 0
     for i in range(args.n_docs):
         html = gen_doc(rng)
         try:
-            s1 = serialize_document_to_html(parse_html(html))
+            doc = parse_html(html)
+            tree = serialize_to_html(doc.document_element)
+            s1 = serialize_document_to_html(doc)
         except Exception as exc:  # noqa: BLE001
             stats["parse_errors"] += 1
             failures.append({"i": i, "kind": "parse", "err": str(exc), "html": html})
             continue
+        trees.update(tree.encode())  # the bytes tree_digest hashes
+        trees.update(b"\n")
         s2 = serialize_document_to_html(parse_html(s1))
         if s1 != s2:
             stats["fixpoint_violations"] += 1
@@ -376,6 +399,7 @@ def main() -> int:
                     {"i": i, "kind": "go_diff", "html": html,
                      "ours": ours, "ref": ref}
                 )
+    stats["tree_sha256"] = trees.hexdigest()
     if args.go_binary:
         stats["go_diffs"] = go_diffs
         stats["go_errors"] = go_errors
