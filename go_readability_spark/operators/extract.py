@@ -25,9 +25,7 @@ Design notes for 100 TB scale:
 
 from __future__ import annotations
 
-import sys
 import time
-from dataclasses import asdict
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
@@ -35,6 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..readability.extract import (
     ExtractionMetrics,
     ReadabilityOptions,
+    ensure_recursion_headroom,
     extract_content,
 )
 from ..readability.fmt import count_nodes
@@ -47,12 +46,6 @@ from ..plans.skew import MAX_DOC_BYTES, skew_partitioned, with_doc_bytes
 from .render import render_article
 
 __all__ = ["extract_documents", "extract_batch_rows", "metrics_rollup"]
-
-# the recursive tree walkers and serializers need headroom
-# beyond the 1000-frame default on deeply nested documents; parsing is
-# iterative. Bumped once per executor worker
-_RECURSION_LIMIT = 20000
-
 
 def extract_batch_rows(
     doc_ids,
@@ -72,9 +65,7 @@ def extract_batch_rows(
     metadata_json) from the SAME parsed article, so a pipeline wanting
     extraction + renderings pays the parse+score once; error rows carry
     empty renderings."""
-    if sys.getrecursionlimit() < _RECURSION_LIMIT:
-        sys.setrecursionlimit(_RECURSION_LIMIT)
-
+    ensure_recursion_headroom()
     out: list[dict] = []
     for doc_id, spans, doc_bytes in zip(doc_ids, spans_lists, doc_bytes_list):
         t0 = time.perf_counter()
@@ -84,7 +75,7 @@ def extract_batch_rows(
             "spans_out": [],
             "meta": {"title": "", "byline": "", "page_type": "error",
                      "node_count": 0},
-            "metrics": asdict(ExtractionMetrics()),
+            "metrics": dict(vars(ExtractionMetrics())),
             "doc_bytes": doc_bytes,
             "error": None,
         }
@@ -118,7 +109,7 @@ def extract_batch_rows(
                         "page_type": article.page_type,
                         "node_count": article.node_count,
                     },
-                    metrics=asdict(m),
+                    metrics=dict(vars(m)),
                     **(render_article(article) if render else {}),
                 )
             except Exception as exc:  # noqa: BLE001 — never kill the job

@@ -26,10 +26,8 @@ from .classify import (  # noqa: F401
     is_significant_node,
 )
 from .dom import (  # noqa: F401
+    DocIndex,
     get_elements_by_tag_name,
-    get_elements_by_tag_names,
-    get_elements_grouped_by_tag,
-    get_elements_in_tag_order,
     get_inner_text,
     get_link_density,
     get_node_ancestors,

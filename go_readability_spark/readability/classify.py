@@ -9,11 +9,7 @@ from __future__ import annotations
 
 import re
 
-from .dom import (
-    get_elements_by_tag_name,
-    get_inner_text,
-    get_link_density,
-)
+from .dom import DocIndex
 from .regexps import DEFAULT_CHAR_THRESHOLD, byte_len
 from .vdom import VDocument, VElement
 
@@ -49,11 +45,13 @@ _SIGNIFICANT_PATTERNS = (
 
 def classify_page_type(
     doc: VDocument,
+    index: DocIndex,
     candidates: list[VElement],
     char_threshold: int = DEFAULT_CHAR_THRESHOLD,
     url: str = "",
 ) -> str:
-    """Article/other decision tree (classify.go:27-232)."""
+    """Article/other decision tree (classify.go:27-232) over ``index``,
+    an index of ``doc.document_element``."""
     if char_threshold <= 0:
         char_threshold = DEFAULT_CHAR_THRESHOLD
 
@@ -71,10 +69,10 @@ def classify_page_type(
             return PAGE_TYPE_ARTICLE if candidates else PAGE_TYPE_OTHER
         if _TOP_LEVEL.search(url) or _USER_PAGE.search(url):
             if candidates:
-                text = get_inner_text(candidates[0], False)
+                text = index.inner_text(candidates[0])
                 if (
                     byte_len(text) > char_threshold * 2
-                    and get_link_density(candidates[0]) < 0.3
+                    and index.link_density(candidates[0]) < 0.3
                 ):
                     return PAGE_TYPE_ARTICLE
             return PAGE_TYPE_OTHER
@@ -86,18 +84,15 @@ def classify_page_type(
 
     # 1. page-structure counters (classify.go:96-128)
     body = doc.body
-    # one pre-order pass for all tag counters (same totals as per-tag
-    # scans at classify.go:96-128, ~7 tree walks saved per document)
-    counts = {"h1": 0, "h2": 0, "h3": 0, "img": 0, "a": 0, "article": 0, "li": 0}
-    for el in get_elements_by_tag_name(body, "*"):
-        tag = el.tag_name
-        if tag in counts:
-            counts[tag] += 1
-    heading_count = counts["h1"] + counts["h2"] + counts["h3"]
-    image_count = counts["img"]
-    link_count = counts["a"]
-    article_count = counts["article"]
-    list_item_count = counts["li"]
+
+    def matches(tag: str) -> int:
+        return len(index.elements(body, tag))
+
+    heading_count = matches("h1") + matches("h2") + matches("h3")
+    image_count = matches("img")
+    link_count = matches("a")
+    article_count = matches("article")
+    list_item_count = matches("li")
     card_count = 0
     for child in body.children:
         if isinstance(child, VElement):
@@ -121,8 +116,8 @@ def classify_page_type(
 
     # 3. semantic tag + text length (classify.go:146-166)
     if is_semantic_tag(top_candidate):
-        text = get_inner_text(top_candidate, False)
-        link_density = get_link_density(top_candidate)
+        text = index.inner_text(top_candidate)
+        link_density = index.link_density(top_candidate)
         if byte_len(text) >= char_threshold // 2 and link_density <= 0.5:
             if list_element_count > 10:
                 return PAGE_TYPE_OTHER
@@ -131,8 +126,8 @@ def classify_page_type(
             return PAGE_TYPE_OTHER
 
     # 4. text length + link density + heading count (classify.go:168-178)
-    text = get_inner_text(top_candidate, False)
-    link_density = get_link_density(top_candidate)
+    text = index.inner_text(top_candidate)
+    link_density = index.link_density(top_candidate)
     if (
         byte_len(text) >= char_threshold
         and link_density <= 0.5
@@ -146,7 +141,7 @@ def classify_page_type(
         second_score = candidates[1].readability or 0.0
         score_ratio = (second_score / top_score) if top_score > 0 else 1.0
         if score_ratio > 0.8:
-            body_text_length = byte_len(get_inner_text(body, False))
+            body_text_length = byte_len(index.inner_text(body))
             body_link_density = (
                 link_count / body_text_length if body_text_length > 0 else 0.0
             )
@@ -154,7 +149,7 @@ def classify_page_type(
                 return PAGE_TYPE_OTHER
 
     # 6. many links + short body (classify.go:212-218)
-    body_text_length = byte_len(get_inner_text(body, False))
+    body_text_length = byte_len(index.inner_text(body))
     if link_count > 30 and body_text_length < int(char_threshold * 1.5):
         return PAGE_TYPE_OTHER
 

@@ -9,20 +9,35 @@ on their exact semantics:
 - all lengths are UTF-8 *byte* lengths (Go ``len()``).
 - link density discounts ``href="#..."`` anchors by 0.3 with ``int()``
   truncation of the product (dom_utils.go:162-181).
+
+``DocIndex`` is the one tree walk behind all of them. One iterative
+pre-order pass gives every element its pre-order position and subtree end
+(text nodes take positions too, so ``end - pos`` is ``count_nodes``), and
+every tag, plus ``"*"`` for all elements, a list of (position, element) in
+document order. A tag lookup under any element is then a bisect-bounded
+slice of that list, and inner text and link density are memoized on the
+index. The positions and the memos describe the tree as it was when the
+index was built, so an index is valid only after the tree's last
+mutation: ``preprocess_document`` builds one for its snapshots before it
+detaches anything, and ``extract_content`` builds one after
+preprocessing and hands it to the scoring, classify, metadata and
+structural passes, which only write ``readability`` scores. A lookup
+under an element outside the indexed tree (a body that preprocessing
+detached as an ad) indexes that element's tree on first use. The public
+element-level helpers below build a throwaway index over their argument.
 """
 
 from __future__ import annotations
 
+from bisect import bisect_left
 from typing import Optional
 
 from .regexps import byte_len, collapse_whitespace
 from .vdom import VElement, VNode, VText
 
 __all__ = [
+    "DocIndex",
     "get_elements_by_tag_name",
-    "get_elements_by_tag_names",
-    "get_elements_grouped_by_tag",
-    "get_elements_in_tag_order",
     "is_probably_visible",
     "get_node_ancestors",
     "has_ancestor_tag",
@@ -32,113 +47,181 @@ __all__ = [
 ]
 
 
-def get_elements_by_tag_name(element: VElement, tag_name: str) -> list[VElement]:
-    """Pre-order recursive tag scan; ``*`` matches all (dom_utils.go:14-48)."""
-    return get_elements_by_tag_names(element, (tag_name,))
+class DocIndex:
+    """Pre-order positions, per-tag element lists and text memos of the
+    tree under ``root``; see the module docstring for when it is valid."""
 
+    __slots__ = (
+        "_order", "_ends", "_tags", "_size", "_text", "_normalized",
+        "_density",
+    )
 
-def get_elements_by_tag_names(
-    element: VElement, tag_names: "list[str] | tuple[str, ...]"
-) -> list[VElement]:
-    # Iterative pre-order, the hottest loop in the whole extractor (one
-    # third of per-doc wall before this shape). Text nodes ride the
-    # stack and are skipped at pop: one class check per node in the
-    # main loop plus a C-level ``children[::-1]`` copy beats filtering
-    # children through a generator per parent (measured ~14% whole-doc).
-    # Result order is identical to the recursive walk.
-    if not isinstance(tag_names, (list, tuple)):
-        # public API: sets/generators were accepted before the
-        # sequence-shaped fast paths below existed — keep them working
-        tag_names = tuple(tag_names)
-    result: list[VElement] = []
-    stack = [element]
-    pop = stack.pop
-    append = result.append
-    extend = stack.extend
-    if len(tag_names) == 1:
-        tag = tag_names[0].lower()
-        if tag == "*":  # match-all: no membership test in the loop
-            while stack:
-                el = pop()
-                if el.__class__ is not VElement:
-                    continue
-                append(el)
-                cs = el.children
+    def __init__(self, root: VNode) -> None:
+        # an element's place k in the "*" list; its subtree ends at
+        # position _ends[k] (ints, so the build allocates no container
+        # per element for the garbage collector to count)
+        self._order: dict[VElement, int] = {}
+        self._ends: list[int] = []
+        self._tags: dict[str, tuple[list[int], list[VElement]]] = {
+            "*": ([], [])
+        }
+        self._size = 0
+        self._text: dict[VNode, str] = {}
+        self._normalized: dict[VNode, str] = {}
+        self._density: dict[VElement, float] = {}
+        self._add(root)
+
+    def _add(self, root: VNode) -> None:
+        """Index the tree under ``root``, numbered after the trees indexed
+        so far, so every tag's positions stay sorted."""
+        order = self._order
+        ends = self._ends
+        tags = self._tags
+        get = tags.get
+        every_pos, every = tags["*"]
+        stack: list = [root]
+        pop = stack.pop
+        push = stack.append
+        extend = stack.extend
+        n = self._size
+        k = len(every)
+        while stack:
+            node = pop()
+            if node.__class__ is int:
+                # the place of an element whose subtree ends here
+                ends[node] = n
+                continue
+            if isinstance(node, VElement):
+                order[node] = k
+                every_pos.append(n)
+                every.append(node)
+                ends.append(0)
+                entry = get(node.tag_name)
+                if entry is None:
+                    entry = tags[node.tag_name] = ([], [])
+                entry[0].append(n)
+                entry[1].append(node)
+                push(k)
+                k += 1
+                cs = node.children
                 if cs:
                     extend(cs[::-1])
-            return result
-        while stack:
-            el = pop()
-            if el.__class__ is not VElement:
-                continue
-            if el.tag_name == tag:
-                append(el)
-            cs = el.children
-            if cs:
-                extend(cs[::-1])
-        return result
-    tagset = frozenset(t.lower() for t in tag_names)
-    star = "*" in tagset
-    while stack:
-        el = pop()
-        if el.__class__ is not VElement:
-            continue
-        if star or el.tag_name in tagset:
-            append(el)
-        cs = el.children
-        if cs:
-            extend(cs[::-1])
-    return result
+            n += 1
+        self._size = n
 
+    def _span(self, root: VElement) -> tuple[int, int]:
+        """``(pos, end)`` of ``root``; the tree of a root outside the
+        indexed ones is indexed first."""
+        k = self._order.get(root)
+        if k is None:
+            self._add(root)
+            k = self._order[root]
+        return self._tags["*"][0][k], self._ends[k]
 
-def get_elements_grouped_by_tag(
-    element: VElement, tag_names
-) -> dict[str, list[VElement]]:
-    """ONE pre-order walk grouping matches per tag.
+    def elements(self, root: VElement, tag: str) -> list[VElement]:
+        """Elements named ``tag`` (lowercase, or ``"*"``) in the subtree of
+        ``root``, ``root`` included, in document order: the pre-order
+        tag scan of dom_utils.go:14-48."""
+        pos, end = self._span(root)
+        entry = self._tags.get(tag)
+        if entry is None:
+            return []
+        positions, elements = entry
+        lo = bisect_left(positions, pos)
+        return elements[lo:bisect_left(positions, end, lo)]
 
-    Equivalent to calling ``get_elements_by_tag_name`` once per tag
-    (each group comes back in document order, exactly as the per-tag
-    walk returns it) while paying the subtree traversal once — the
-    scoring and structural phases walk the same body for up to nine
-    tags back to back. ``*`` is not supported here; callers pass
-    concrete tag lists."""
-    groups: dict[str, list[VElement]] = {t.lower(): [] for t in tag_names}
-    get = groups.get
-    stack = [element]
-    pop = stack.pop
-    extend = stack.extend
-    while stack:
-        el = pop()
-        if el.__class__ is not VElement:
-            continue
-        g = get(el.tag_name)
-        if g is not None:
-            g.append(el)
-        cs = el.children
-        if cs:
-            extend(cs[::-1])
-    return groups
+    def count(self, root: VElement) -> int:
+        """Element and text nodes in the subtree of ``root``, ``root``
+        included (``count_nodes``, format.go:296-315)."""
+        pos, end = self._span(root)
+        return end - pos
 
+    def inner_text(self, node: VNode, normalize_spaces: bool = False) -> str:
+        """Space-joined, trimmed descendant text (dom_utils.go:127-158).
 
-def get_elements_in_tag_order(element: VElement, tag_names) -> list[VElement]:
-    """Matches of every tag in one walk, concatenated in ``tag_names``
-    order — exactly what ``[*walk(element, t) for t in tag_names]``
-    produced with one traversal per tag. Keeps the ordering contract of
-    the grouped walk in one place for its two consumers (candidate
-    scoring, structural detection). ``*`` is not supported (it has no
-    per-tag group); use ``get_elements_by_tag_names`` for match-all."""
-    if not isinstance(tag_names, (list, tuple)):
-        tag_names = tuple(tag_names)  # generators are consumed twice below
-    if any(t == "*" for t in tag_names):
-        raise ValueError(
-            "get_elements_in_tag_order does not support '*'; use "
-            "get_elements_by_tag_names for a match-all walk"
+        For elements: children are concatenated with a single ``" "``
+        inserted before every child after the first *whenever accumulated
+        text is non-empty* — even if that child then contributes nothing
+        (faithful to the Go loop structure at dom_utils.go:134-148). Child
+        elements recurse with normalize=False and are therefore trimmed at
+        every level; the ``\\s{2,}``→" " collapse (ASCII \\s, RE2 parity)
+        applies only at this level when ``normalize_spaces`` is True.
+        """
+        if normalize_spaces:
+            text = self._normalized.get(node)
+            if text is None:
+                text = self._normalized[node] = collapse_whitespace(
+                    self.inner_text(node)
+                )
+            return text
+        text = self._text.get(node)
+        if text is not None:
+            return text
+        if isinstance(node, VText):
+            text = node.text_content
+        else:
+            children = node.children
+            if not children:
+                text = ""
+            elif len(children) == 1 and isinstance(children[0], VText):
+                # leaf-ish fast path (p/a/h1 with one merged text node is
+                # the most common element shape): no parts list, no join
+                text = children[0].text_content
+            else:
+                parts: list[str] = []
+                empty = True
+                for i, child in enumerate(children):
+                    if i > 0 and not empty:
+                        parts.append(" ")
+                    if isinstance(child, VText):
+                        parts.append(child.text_content)
+                        if child.text_content:
+                            empty = False
+                    else:
+                        child_text = self.inner_text(child)
+                        if child_text != "":
+                            parts.append(child_text)
+                            empty = False
+                text = "".join(parts)
+        text = self._text[node] = text.strip()
+        return text
+
+    def link_density(self, element: VElement) -> float:
+        """Ratio of (discounted) link-text bytes to total text bytes
+        (dom_utils.go:162-181)."""
+        density = self._density.get(element)
+        if density is not None:
+            return density
+        density = 0.0
+        text_length = byte_len(self.inner_text(element, True))
+        if text_length:
+            link_length = 0
+            for link in self.elements(element, "a"):
+                href = link.get_attribute("href")
+                coefficient = 0.3 if href.startswith("#") else 1.0
+                # int() truncation of the float product, as in Go
+                # (dom_utils.go:177)
+                link_length += int(
+                    byte_len(self.inner_text(link, True)) * coefficient
+                )
+            density = link_length / text_length
+        self._density[element] = density
+        return density
+
+    def text_density(self, element: VElement) -> float:
+        """Text bytes per child *element* (min 1) (dom_utils.go:185-204)."""
+        text_length = byte_len(self.inner_text(element, True))
+        if text_length == 0:
+            return 0.0
+        child_element_count = sum(
+            1 for c in element.children if isinstance(c, VElement)
         )
-    grouped = get_elements_grouped_by_tag(element, tag_names)
-    result: list[VElement] = []
-    for tag in tag_names:
-        result.extend(grouped[tag.lower()])
-    return result
+        return text_length / max(child_element_count, 1)
+
+
+def get_elements_by_tag_name(element: VElement, tag_name: str) -> list[VElement]:
+    """Pre-order tag scan; ``*`` matches all (dom_utils.go:14-48)."""
+    return DocIndex(element).elements(element, tag_name.lower())
 
 
 def is_probably_visible(node: VElement) -> bool:
@@ -180,109 +263,16 @@ def has_ancestor_tag(node: VNode, tag_name: str, max_depth: int = 0) -> bool:
     return False
 
 
-# Phase-local memo for get_inner_text and get_link_density. The
-# scoring/classify/metadata phases call them O(nodes·depth) times on an
-# immutable tree (SURVEY.md §4.1: safe to memoize within a phase —
-# FindMainCandidates mutates only ContentScore, never text). Enabled by
-# extract_content after preprocess (the last tree mutation) and cleared
-# in a finally. Keys are id(node) paired with normalize_spaces or
-# "link_density": valid because the cached phase neither frees nor
-# creates nodes.
-_inner_text_cache: dict | None = None
-
-
-def begin_inner_text_cache() -> None:
-    global _inner_text_cache
-    _inner_text_cache = {}
-
-
-def end_inner_text_cache() -> None:
-    global _inner_text_cache
-    _inner_text_cache = None
-
-
 def get_inner_text(node: VNode, normalize_spaces: bool = False) -> str:
-    """Space-joined, trimmed descendant text (dom_utils.go:127-158).
-
-    For elements: children are concatenated with a single ``" "`` inserted
-    before every child after the first *whenever accumulated text is
-    non-empty* — even if that child then contributes nothing (faithful to
-    the Go loop structure at dom_utils.go:134-148). Child elements recurse
-    with normalize=False and are therefore trimmed at every level; the
-    ``\\s{2,}``→" " collapse (ASCII \\s, RE2 parity) applies only at this
-    level when ``normalize_spaces`` is True.
-    """
-    cache = _inner_text_cache
-    if cache is not None:
-        key = (id(node), normalize_spaces)
-        hit = cache.get(key)
-        if hit is not None:
-            return hit
-    if isinstance(node, VText):
-        text = node.text_content
-    else:
-        children = node.children
-        if not children:
-            text = ""
-        elif len(children) == 1 and isinstance(children[0], VText):
-            # leaf-ish fast path (p/a/h1 with one merged text node is
-            # the most common element shape): no parts list, no join
-            text = children[0].text_content
-        else:
-            parts: list[str] = []
-            empty = True
-            for i, child in enumerate(children):
-                if i > 0 and not empty:
-                    parts.append(" ")
-                if isinstance(child, VText):
-                    parts.append(child.text_content)
-                    if child.text_content:
-                        empty = False
-                else:
-                    child_text = get_inner_text(child, False)
-                    if child_text != "":
-                        parts.append(child_text)
-                        empty = False
-            text = "".join(parts)
-
-    text = text.strip()
-    if normalize_spaces:
-        text = collapse_whitespace(text)
-    if cache is not None:
-        cache[key] = text
-    return text
+    """``DocIndex.inner_text`` on a throwaway index."""
+    return DocIndex(node).inner_text(node, normalize_spaces)
 
 
 def get_link_density(element: VElement) -> float:
-    """Ratio of (discounted) link-text bytes to total text bytes
-    (dom_utils.go:162-181)."""
-    cache = _inner_text_cache
-    key = (id(element), "link_density")
-    if cache is not None and key in cache:
-        return cache[key]
-    text_length = byte_len(get_inner_text(element, True))
-    if text_length == 0:
-        return 0.0
-
-    link_length = 0
-    for link in get_elements_by_tag_name(element, "a"):
-        href = link.get_attribute("href")
-        coefficient = 0.3 if href.startswith("#") else 1.0
-        # int() truncation of the float product, as in Go (dom_utils.go:177)
-        link_length += int(byte_len(get_inner_text(link, True)) * coefficient)
-
-    density = link_length / text_length
-    if cache is not None:
-        cache[key] = density
-    return density
+    """``DocIndex.link_density`` on a throwaway index."""
+    return DocIndex(element).link_density(element)
 
 
 def get_text_density(element: VElement) -> float:
-    """Text bytes per child *element* (min 1) (dom_utils.go:185-204)."""
-    text_length = byte_len(get_inner_text(element, True))
-    if text_length == 0:
-        return 0.0
-    child_element_count = sum(
-        1 for c in element.children if isinstance(c, VElement)
-    )
-    return text_length / max(child_element_count, 1)
+    """``DocIndex.text_density`` on a throwaway index."""
+    return DocIndex(element).text_density(element)

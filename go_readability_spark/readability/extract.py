@@ -7,6 +7,7 @@ options/article structs (options.go:21-49, article.go:12-26).
 
 from __future__ import annotations
 
+import sys
 from dataclasses import dataclass, field, replace
 from typing import Optional
 
@@ -16,16 +17,7 @@ from .classify import (
     is_semantic_tag,
     is_significant_node,
 )
-from .dom import (
-    begin_inner_text_cache,
-    end_inner_text_cache,
-    get_elements_by_tag_name,
-    get_elements_in_tag_order,
-    get_inner_text,
-    get_link_density,
-    is_probably_visible,
-)
-from .fmt import count_nodes
+from .dom import DocIndex, is_probably_visible
 from .metadata import get_article_byline, get_article_title
 from .parser import parse_html
 from .preprocess import preprocess_document
@@ -42,7 +34,12 @@ __all__ = [
     "find_structural_elements",
     "add_significant_elements_by_class_or_id",
     "create_extractor",
+    "ensure_recursion_headroom",
 ]
+
+# the recursive inner-text walk and the serializers need headroom beyond
+# the 1000-frame default on deeply nested documents; parsing is iterative
+_RECURSION_LIMIT = 20000
 
 # core.go:282-326 significant class/id substrings
 _SIGNIFICANT_PATTERNS = (
@@ -128,6 +125,14 @@ class ReadabilityArticle:
         )
 
 
+def ensure_recursion_headroom() -> None:
+    """Raise this interpreter's recursion limit to ``_RECURSION_LIMIT``
+    (never lower it). Called by both per-document entry points: the
+    library ``extract`` and the extraction loop."""
+    if sys.getrecursionlimit() < _RECURSION_LIMIT:
+        sys.setrecursionlimit(_RECURSION_LIMIT)
+
+
 def extract(
     html: str, options: Optional[ReadabilityOptions] = None
 ) -> ReadabilityArticle:
@@ -136,6 +141,7 @@ def extract(
     The reference defaults ForcedPageType to "article" (core.go:46-47) on
     its by-value copy of Options (core.go:25); ``replace`` makes the same
     copy, so the default never leaks into the caller's instance."""
+    ensure_recursion_headroom()
     options = options or ReadabilityOptions()
     doc = parse_html(html, "")
     preprocess_document(doc)
@@ -170,54 +176,53 @@ def extract_content(
         else DEFAULT_CHAR_THRESHOLD
     )
     metrics = ExtractionMetrics()
+    # preprocessing was the last mutation; the read phase below only
+    # writes ContentScore (readability), so one index serves all of it
+    index = DocIndex(doc.document_element)
 
-    # the tree is immutable during scoring/classify/metadata (only
-    # ContentScore mutates) — memoize get_inner_text for this read phase
-    begin_inner_text_cache()
-    try:
-        candidates = find_main_candidates(doc, options.nb_top_candidates)
-        article_content: Optional[VElement] = None
-        metrics.candidate_count = len(candidates)
+    candidates = find_main_candidates(doc, index, options.nb_top_candidates)
+    article_content: Optional[VElement] = None
+    metrics.candidate_count = len(candidates)
 
-        if candidates:
-            top_candidate = candidates[0]
-            text_length = byte_len(get_inner_text(top_candidate, False))
-            link_density = get_link_density(top_candidate)
-            if top_candidate.readability is not None:
-                metrics.top_score = top_candidate.readability
-            metrics.link_density = link_density
-            metrics.is_probably_content = is_probably_content(top_candidate)
-            # accept gate (core.go:83-94)
-            if text_length >= char_threshold and link_density <= 0.5:
-                article_content = top_candidate
+    if candidates:
+        top_candidate = candidates[0]
+        text_length = byte_len(index.inner_text(top_candidate))
+        link_density = index.link_density(top_candidate)
+        if top_candidate.readability is not None:
+            metrics.top_score = top_candidate.readability
+        metrics.link_density = link_density
+        metrics.is_probably_content = is_probably_content(top_candidate, index)
+        # accept gate (core.go:83-94)
+        if text_length >= char_threshold and link_density <= 0.5:
+            article_content = top_candidate
 
-        page_type = options.forced_page_type
-        if page_type == "":
-            if article_content is not None:
-                page_type = PAGE_TYPE_ARTICLE
-            else:
-                page_type = classify_page_type(
-                    doc, candidates, char_threshold, ""
-                )
-
-        title = get_article_title(doc)
-        byline = get_article_byline(doc)
-
-        header: Optional[VElement] = None
-        footer: Optional[VElement] = None
-        other_significant_nodes: list[VElement] = []
-        if page_type == PAGE_TYPE_ARTICLE and article_content is None:
-            header, footer, other_significant_nodes = find_structural_elements(
-                doc
+    page_type = options.forced_page_type
+    if page_type == "":
+        if article_content is not None:
+            page_type = PAGE_TYPE_ARTICLE
+        else:
+            page_type = classify_page_type(
+                doc, index, candidates, char_threshold, ""
             )
-    finally:
-        end_inner_text_cache()
+
+    title = get_article_title(doc, index)
+    byline = get_article_byline(doc, index)
+
+    header: Optional[VElement] = None
+    footer: Optional[VElement] = None
+    other_significant_nodes: list[VElement] = []
+    if page_type == PAGE_TYPE_ARTICLE and article_content is None:
+        header, footer, other_significant_nodes = find_structural_elements(
+            doc, index
+        )
 
     return ReadabilityArticle(
         title=title,
         byline=byline,
         root=article_content,
-        node_count=count_nodes(article_content),
+        node_count=(
+            0 if article_content is None else index.count(article_content)
+        ),
         page_type=page_type,
         header=header,
         footer=footer,
@@ -228,19 +233,20 @@ def extract_content(
 
 
 def find_structural_elements(
-    doc: VDocument,
+    doc: VDocument, index: DocIndex
 ) -> tuple[Optional[VElement], Optional[VElement], list[VElement]]:
-    """Header/footer/significant-node fallback (core.go:154-273)."""
+    """Header/footer/significant-node fallback (core.go:154-273) over
+    ``index``, an index of ``doc.document_element``."""
     body = doc.body
     header: Optional[VElement] = None
     footer: Optional[VElement] = None
 
     # 1. header (core.go:161-184)
-    header_tags = get_elements_by_tag_name(doc.document_element, "header")
+    header_tags = index.elements(doc.document_element, "header")
     if len(header_tags) == 1:
         header = header_tags[0]
     else:
-        for el in get_elements_by_tag_name(body, "*"):
+        for el in index.elements(body, "*"):
             role = el.get_attribute("role").lower()
             el_id = el.id.lower()
             class_name = el.class_name.lower()
@@ -257,12 +263,11 @@ def find_structural_elements(
                     header = el
 
     # 2. footer, scanned bottom-up (core.go:186-223)
-    footer_tags = get_elements_by_tag_name(doc.document_element, "footer")
+    footer_tags = index.elements(doc.document_element, "footer")
     if len(footer_tags) == 1:
         footer = footer_tags[0]
     else:
-        all_elements = get_elements_by_tag_name(body, "*")
-        for el in reversed(all_elements):
+        for el in reversed(index.elements(body, "*")):
             role = el.get_attribute("role").lower()
             el_id = el.id.lower()
             class_name = el.class_name.lower()
@@ -284,12 +289,14 @@ def find_structural_elements(
                     if not is_inside_header:
                         footer = el
 
-    # 3. other significant nodes (core.go:225-272); one grouped walk,
-    # concatenated in the reference's tag order
-    potential = get_elements_in_tag_order(
-        body, ("main", "article", "section", "aside", "nav")
-    )
-    add_significant_elements_by_class_or_id(body, potential)
+    # 3. other significant nodes (core.go:225-272): each tag's matches
+    # in document order, concatenated in the reference's tag order
+    potential = [
+        el
+        for tag in ("main", "article", "section", "aside", "nav")
+        for el in index.elements(body, tag)
+    ]
+    add_significant_elements_by_class_or_id(body, index, potential)
 
     other_significant_nodes: list[VElement] = []
     for node in potential:
@@ -311,11 +318,12 @@ def find_structural_elements(
 
 
 def add_significant_elements_by_class_or_id(
-    body: VElement, potential_nodes: list[VElement]
+    body: VElement, index: DocIndex, potential_nodes: list[VElement]
 ) -> None:
-    """Append elements whose class+" "+id contains a significant substring
-    (core.go:282-326). Mutates ``potential_nodes`` in place."""
-    for el in get_elements_by_tag_name(body, "*"):
+    """Append elements under ``body`` (``index`` covers it) whose
+    class+" "+id contains a significant substring (core.go:282-326).
+    Mutates ``potential_nodes`` in place."""
+    for el in index.elements(body, "*"):
         combined = el.class_name.lower() + " " + el.id.lower()
         for pattern in _SIGNIFICANT_PATTERNS:
             if pattern in combined:

@@ -30,8 +30,8 @@ _ONLY_BACKTICKS = re.compile(r"^`+$")
 # the difference (markdown.go:61-63, :260)
 from .regexps import GOWS  # noqa: E402
 
-_WS_END = re.compile(GOWS + r"$")
-_WS_START = re.compile(r"^" + GOWS)
+# the same class as a set of characters, for one-character tests
+_GOWS_CHARS = frozenset("\t\n\f\r ")
 _PUNCT = re.compile(r"[.,!?;:)]")
 _LANG_CLASS = re.compile(r"language-([a-zA-Z0-9_-]+)")
 _CODE_EDGES = re.compile(r"^" + GOWS + r"*\n|" + GOWS + r"+$")
@@ -65,19 +65,24 @@ def escape_markdown(text: str) -> str:
 def _join_parts(parts: list[str]) -> str:
     """Smart inline joining (markdown.go:47-84): single space between
     parts unless either side already has whitespace or the next part
-    starts with closing punctuation."""
-    result = ""
+    starts with closing punctuation.
+
+    Only the last character of the result so far and the first of the
+    part are tested, and the result is joined once, so the join stays
+    linear in the article's length."""
+    out: list[str] = []
     for part in parts:
         if part == "" or part.strip() == "":
             continue
-        if not result:
-            result = part
-            continue
-        if not _WS_END.search(result) and not _WS_START.search(part):
-            if not _PUNCT.match(part[0]):
-                result += " "
-        result += part
-    return result
+        if (
+            out
+            and out[-1][-1] not in _GOWS_CHARS
+            and part[0] not in _GOWS_CHARS
+            and not _PUNCT.match(part[0])
+        ):
+            out.append(" ")
+        out.append(part)
+    return "".join(out)
 
 
 def _all_text(node: VNode) -> str:

@@ -16,7 +16,7 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass
 
-from .dom import get_elements_by_tag_name, get_inner_text
+from .dom import DocIndex
 from .regexps import (
     CDATA_STRIP,
     HTML_ENTITY,
@@ -68,12 +68,14 @@ def _word_count(s: str) -> int:
     return len(s.split())
 
 
-def get_article_title(doc: VDocument) -> str:
-    """Title extraction with separator handling (metadata.go:65-163)."""
+def get_article_title(doc: VDocument, index: DocIndex) -> str:
+    """Title extraction with separator handling (metadata.go:65-163);
+    ``index`` is an index of ``doc.document_element``."""
+    root = doc.document_element
     orig_title = ""
-    title_elements = get_elements_by_tag_name(doc.document_element, "title")
+    title_elements = index.elements(root, "title")
     if title_elements:
-        orig_title = get_inner_text(title_elements[0], False)
+        orig_title = index.inner_text(title_elements[0])
     cur_title = orig_title
 
     title_had_hierarchical_separators = False
@@ -90,12 +92,10 @@ def get_article_title(doc: VDocument) -> str:
             if len(parts) > 1:
                 cur_title = " ".join(parts[1:])
     elif ": " in cur_title:
-        headings = get_elements_by_tag_name(
-            doc.document_element, "h1"
-        ) + get_elements_by_tag_name(doc.document_element, "h2")
+        headings = index.elements(root, "h1") + index.elements(root, "h2")
         trimmed_title = cur_title.strip()
         match = any(
-            get_inner_text(h, False).strip() == trimmed_title for h in headings
+            index.inner_text(h).strip() == trimmed_title for h in headings
         )
         if not match:
             last_colon = orig_title.rfind(":")
@@ -108,9 +108,9 @@ def get_article_title(doc: VDocument) -> str:
                         if _word_count(orig_title[:first_colon]) > 5:
                             cur_title = orig_title
     elif byte_len(cur_title) > 150 or byte_len(cur_title) < 15:
-        h_ones = get_elements_by_tag_name(doc.document_element, "h1")
+        h_ones = index.elements(root, "h1")
         if len(h_ones) == 1:
-            cur_title = get_inner_text(h_ones[0], False)
+            cur_title = index.inner_text(h_ones[0])
 
     cur_title = cur_title.strip()
     cur_title = collapse_whitespace(cur_title)
@@ -131,14 +131,15 @@ def get_article_title(doc: VDocument) -> str:
     return cur_title
 
 
-def get_article_byline(doc: VDocument) -> str:
-    """Byline from JSON-LD, then meta tags (metadata.go:174-240)."""
-    jsonld = get_jsonld(doc)
+def get_article_byline(doc: VDocument, index: DocIndex) -> str:
+    """Byline from JSON-LD, then meta tags (metadata.go:174-240);
+    ``index`` is an index of ``doc.document_element``."""
+    jsonld = get_jsonld(doc, index)
     if jsonld.byline != "":
         return jsonld.byline
 
     values: dict[str, str] = {}
-    for element in get_elements_by_tag_name(doc.document_element, "meta"):
+    for element in index.elements(doc.document_element, "meta"):
         element_name = element.get_attribute("name")
         element_property = element.get_attribute("property")
         content = element.get_attribute("content")
@@ -170,14 +171,15 @@ def get_article_byline(doc: VDocument) -> str:
     return byline
 
 
-def get_jsonld(doc: VDocument) -> ReadabilityMetadata:
+def get_jsonld(doc: VDocument, index: DocIndex) -> ReadabilityMetadata:
     """Schema.org Article metadata from ld+json scripts
-    (metadata.go:251-373)."""
+    (metadata.go:251-373); ``index`` is an index of
+    ``doc.document_element``."""
     metadata = ReadabilityMetadata()
-    for element in get_elements_by_tag_name(doc.document_element, "script"):
+    for element in index.elements(doc.document_element, "script"):
         if element.get_attribute("type") != "application/ld+json":
             continue
-        content = CDATA_STRIP.sub("", get_inner_text(element, False))
+        content = CDATA_STRIP.sub("", index.inner_text(element))
         parsed = None
         try:
             loaded = json.loads(content)

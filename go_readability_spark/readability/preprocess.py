@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import re
 
-from .dom import get_elements_by_tag_name, get_elements_by_tag_names
+from .dom import DocIndex
 from .regexps import AD_PATTERNS, TAGS_TO_REMOVE
 from .vdom import VDocument, VElement, detach
 
@@ -24,32 +24,33 @@ _AD_COMBINED = re.compile(
 
 
 def preprocess_document(doc: VDocument) -> VDocument:
-    """preprocess.go:66-74."""
-    _remove_unwanted_tags(doc)
-    _remove_ads(doc)
+    """preprocess.go:66-74.
+
+    Both passes read their snapshots from one index built before anything
+    is detached. The removal set does not depend on the order: detaching a
+    nested unwanted element, or checking an element for ads after an
+    unwanted ancestor was removed, only edits a subtree that has already
+    left the document (SURVEY.md §4.1)."""
+    index = DocIndex(doc.document_element)
+    _remove_unwanted_tags(doc, index)
+    _remove_ads(doc, index)
     return doc
 
 
-def _remove_unwanted_tags(doc: VDocument) -> None:
+def _remove_unwanted_tags(doc: VDocument, index: DocIndex) -> None:
     """Delete aside/nav/header/footer/script/style/... (preprocess.go:82-98).
 
     audio/video/figure/canvas/details are deliberately kept
     (preprocess.go:29-34).
     """
-    # One pass instead of one walk per tag: the reference snapshots each
-    # tag's matches before deleting (preprocess.go:85-96), and removing a
-    # nested unwanted element from an already-detached parent is harmless
-    # (SURVEY.md §4.1) — so collecting all unwanted tags in a single
-    # pre-order pass yields the identical final tree.
-    for element in get_elements_by_tag_names(
-        doc.document_element, list(TAGS_TO_REMOVE)
-    ):
-        detach(element)
+    for tag in TAGS_TO_REMOVE:
+        for element in index.elements(doc.document_element, tag):
+            detach(element)
 
 
-def _remove_ads(doc: VDocument) -> None:
+def _remove_ads(doc: VDocument, index: DocIndex) -> None:
     """Delete likely-ad elements under body (preprocess.go:106-122)."""
-    for element in get_elements_by_tag_name(doc.body, "*"):
+    for element in index.elements(doc.body, "*"):
         if element.parent is not None and is_likely_ad(element):
             detach(element)
 

@@ -17,15 +17,7 @@ sort with strict ``<`` swap is stable, equivalent to Python's stable
 
 from __future__ import annotations
 
-from .dom import (
-    get_elements_grouped_by_tag,
-    get_elements_in_tag_order,
-    get_inner_text,
-    get_link_density,
-    get_node_ancestors,
-    get_text_density,
-    is_probably_visible,
-)
+from .dom import DocIndex, get_node_ancestors, is_probably_visible
 from .regexps import (
     COMMAS,
     DEFAULT_N_TOP_CANDIDATES,
@@ -82,33 +74,32 @@ def initialize_node(node: VElement) -> None:
 
 
 def find_main_candidates(
-    doc: VDocument, nb_top_candidates: int = DEFAULT_N_TOP_CANDIDATES
+    doc: VDocument,
+    index: DocIndex,
+    nb_top_candidates: int = DEFAULT_N_TOP_CANDIDATES,
 ) -> list[VElement]:
-    """Top-K candidate selection (core.go:357-498)."""
+    """Top-K candidate selection (core.go:357-498) over ``index``, an
+    index of ``doc.document_element``."""
     if nb_top_candidates <= 0:
         nb_top_candidates = DEFAULT_N_TOP_CANDIDATES
 
     # 1. semantic-tag shortcut: exactly one <article>, else exactly one
     # <main>, becomes the sole candidate (core.go:363-371)
-    semantic = get_elements_grouped_by_tag(
-        doc.document_element, ("article", "main")
-    )
     for tag in ("article", "main"):
-        elements = semantic[tag]
+        elements = index.elements(doc.document_element, tag)
         if len(elements) == 1:
             return [elements[0]]
 
-    # 2. scoring-based detection (core.go:374-421); one body walk
-    # grouped per tag replaces nine per-tag walks — concatenation in
-    # DEFAULT_TAGS_TO_SCORE order matches the per-tag loop exactly
+    # 2. scoring-based detection (core.go:374-421): each tag's matches
+    # in document order, concatenated in DEFAULT_TAGS_TO_SCORE order
     body = doc.body
     candidates: list[VElement] = []
-    elements_to_score = get_elements_in_tag_order(
-        body, DEFAULT_TAGS_TO_SCORE
-    )
+    elements_to_score = [
+        el for tag in DEFAULT_TAGS_TO_SCORE for el in index.elements(body, tag)
+    ]
 
     for element in elements_to_score:
-        inner_text = get_inner_text(element, False)
+        inner_text = index.inner_text(element)
         if byte_len(inner_text) < 25:  # core.go:388-390
             continue
         ancestors = get_node_ancestors(element, 3)
@@ -137,9 +128,9 @@ def find_main_candidates(
     for candidate in candidates:
         if candidate.readability is None:
             continue
-        link_density = get_link_density(candidate)
+        link_density = index.link_density(candidate)
         candidate.readability *= 1.0 - link_density
-        text_density = get_text_density(candidate)
+        text_density = index.text_density(candidate)
         if text_density > 0:
             candidate.readability *= 1.0 + min(text_density / 10.0, 0.1)
 
@@ -168,8 +159,9 @@ def find_main_candidates(
     return top
 
 
-def is_probably_content(element: VElement) -> bool:
-    """Readerability heuristic (core.go:509-541)."""
+def is_probably_content(element: VElement, index: DocIndex) -> bool:
+    """Readerability heuristic (core.go:509-541); ``index`` covers
+    ``element``."""
     if not is_probably_visible(element):
         return False
 
@@ -179,8 +171,8 @@ def is_probably_content(element: VElement) -> bool:
     ):
         return False
 
-    if byte_len(get_inner_text(element, False)) < 140:
+    if byte_len(index.inner_text(element)) < 140:
         return False
-    if get_link_density(element) > 0.5:
+    if index.link_density(element) > 0.5:
         return False
-    return get_text_density(element) >= 0.1
+    return index.text_density(element) >= 0.1

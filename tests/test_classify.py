@@ -3,6 +3,7 @@
 from go_readability_spark.readability import (
     PAGE_TYPE_ARTICLE,
     PAGE_TYPE_OTHER,
+    DocIndex,
     ReadabilityOptions,
     classify_page_type,
     extract_content,
@@ -37,8 +38,9 @@ LOREM = (
 def _classified(html):
     d = parse_html(html)
     preprocess_document(d)
-    candidates = find_main_candidates(d, 5)
-    return classify_page_type(d, candidates, 500, "")
+    index = DocIndex(d.document_element)
+    candidates = find_main_candidates(d, index, 5)
+    return classify_page_type(d, index, candidates, 500, "")
 
 
 def test_article_page_classified_article():

@@ -1,9 +1,14 @@
 """DOM scalar tests, ported from
 /root/reference/internal/dom/dom_utils_test.go (table-driven cases)."""
 
+import ast
+import pathlib
+
 from go_readability_spark.readability import (
+    DocIndex,
     VElement,
     VText,
+    count_nodes,
     get_elements_by_tag_name,
     get_inner_text,
     get_link_density,
@@ -34,46 +39,64 @@ def test_get_elements_by_tag_name_and_wildcard():
     assert len(get_elements_by_tag_name(root, "P")) == 2  # case-insensitive
 
 
-def test_tag_walk_accepts_any_iterable_and_orders_groups():
-    """The public walker accepts sets/generators (pre-fast-path API),
-    and the grouped/tag-order forms reproduce the per-tag walks
-    exactly — same per-tag document order, concatenated in tag order."""
-    from go_readability_spark.readability.dom import (
-        get_elements_by_tag_names,
-        get_elements_grouped_by_tag,
-        get_elements_in_tag_order,
-    )
+def naive_walk(root, tag):
+    """The recursive pre-order scan of dom_utils.go:14-48."""
+    out = [root] if tag in ("*", root.tag_name) else []
+    for c in root.children:
+        if isinstance(c, VElement):
+            out.extend(naive_walk(c, tag))
+    return out
 
+
+def test_index_lookups_match_naive_walk():
+    """Every lookup of one index equals a walk of the subtree it names:
+    ``elements`` the recursive pre-order scan under any root, ``count``
+    ``count_nodes`` (text nodes included), and the per-tag concatenation
+    that scoring and structural detection build, the per-tag walks
+    concatenated in tag order."""
     root = el("div", children=[
-        el("p", children=[el("span"), el("a")]),
-        el("section", children=[el("p")]),
+        el("p", children=[el("span"), VText("t"), el("a")]),
+        el("section", children=[el("p", children=[VText("u")])]),
+        VText("v"),
         el("a"),
     ])
-    # set and generator inputs still work
-    assert len(get_elements_by_tag_names(root, {"p"})) == 2
-    assert len(get_elements_by_tag_names(root, (t for t in ("p", "a")))) == 4
-    # tag-order concat == one walk per tag, concatenated
-    tags = ("a", "p", "SECTION")
-    expected = []
-    for t in tags:
-        expected.extend(get_elements_by_tag_names(root, [t]))
-    got = get_elements_in_tag_order(root, tags)
-    assert [id(e) for e in got] == [id(e) for e in expected]
-    grouped = get_elements_grouped_by_tag(root, tags)
-    assert [e.tag_name for e in grouped["a"]] == ["a", "a"]
-    assert len(grouped["section"]) == 1
-    # one-shot iterables work for the tag-order helper too (it iterates
-    # tag_names twice internally)
-    gen = get_elements_in_tag_order(root, (t for t in ("p", "a")))
-    # expected = a-matches (2) + p-matches (2) + section-match (1)
-    assert [id(e) for e in gen] == [
-        id(e) for e in expected[2:4] + expected[0:2]
-    ]
-    # '*' has no per-tag group: refused loudly, not an empty list
-    import pytest
+    index = DocIndex(root)
+    subtrees = naive_walk(root, "*")
+    assert [e.tag_name for e in subtrees] == [
+        "div", "p", "span", "a", "section", "p", "a"]
+    for sub in subtrees:
+        for tag in ("div", "p", "span", "a", "section", "li", "*"):
+            assert [id(e) for e in index.elements(sub, tag)] == [
+                id(e) for e in naive_walk(sub, tag)], (sub.tag_name, tag)
+        assert index.count(sub) == count_nodes(sub)
+    assert index.count(root) == 10
+    tags = ("a", "p", "section")
+    assert [id(e) for t in tags for e in index.elements(root, t)] == [
+        id(e) for t in tags for e in naive_walk(root, t)]
+    # a tree outside the indexed one (a body detached as an ad) is
+    # indexed on first use, and the first tree's answers stay the same
+    other = el("body", children=[el("li", children=[el("a")]), el("li")])
+    assert [id(e) for e in index.elements(other, "li")] == [
+        id(e) for e in naive_walk(other, "li")]
+    assert index.count(other) == count_nodes(other) == 4
+    assert index.elements(root, "li") == []
+    assert len(index.elements(root, "a")) == 2
 
-    with pytest.raises(ValueError, match=r"\*"):
-        get_elements_in_tag_order(root, ("p", "*"))
+
+def test_no_global_statement_in_readability():
+    """The extractor keeps no module-global mutable state: no module under
+    readability/ rebinds a global (per-document memos live on a
+    ``DocIndex``)."""
+    root = pathlib.Path(__file__).parent.parent
+    package = root / "go_readability_spark" / "readability"
+    found = [
+        f"{path.name}:{node.lineno}"
+        for path in sorted(package.glob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
+        if isinstance(node, ast.Global)
+    ]
+    assert len(list(package.glob("*.py"))) > 10
+    assert found == []
 
 
 def test_is_probably_visible():

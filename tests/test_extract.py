@@ -3,12 +3,14 @@
 (site_extraction_test.go:94-155)."""
 
 import pathlib
+import sys
 
 import pytest
 
 from go_readability_spark.readability import (
     PAGE_TYPE_ARTICLE,
     PAGE_TYPE_OTHER,
+    DocIndex,
     ReadabilityOptions,
     extract,
     extract_content,
@@ -121,9 +123,27 @@ def test_find_structural_elements_single_header_tag():
         "<html><body><header>h</header><article>a</article>"
         "<footer>f</footer></body></html>"
     )
-    header, footer, nodes = find_structural_elements(d)
+    header, footer, nodes = find_structural_elements(d, DocIndex(d.document_element))
     assert header is not None and header.tag_name == "header"
     assert footer is not None and footer.tag_name == "footer"
+
+
+def test_body_detached_as_ad_is_still_scored():
+    """A body whose class matches an ad pattern is detached from <html> by
+    preprocessing (preprocess.go:106-122 includes the body itself), and
+    the read phase still scores it through ``doc.body``."""
+    html = (
+        '<html><head><title>T</title></head><body class="advertisement">'
+        "<div><p>" + "Some words, here and there. " * 40 + "</p></div>"
+        "</body></html>"
+    )
+    d = parse_html(html)
+    preprocess_document(d)
+    assert d.body not in d.document_element.children
+    result = extract(html, ReadabilityOptions())
+    assert result.title == "T"
+    assert result.root is not None and result.root.tag_name == "div"
+    assert result.node_count == 3
 
 
 def test_fixture_001_golden_metadata():
@@ -218,3 +238,40 @@ def test_extract_empty_and_tiny_docs():
                  "<body></body>", "<html><body></body></html>"):
         result = extract(html, ReadabilityOptions())
         assert result.page_type in (PAGE_TYPE_ARTICLE, PAGE_TYPE_OTHER)
+
+
+def test_extract_has_the_loops_recursion_headroom():
+    """The library ``extract`` and the extraction loop raise the recursion
+    limit through one helper: under the interpreter's default limit a
+    1,000-deep document extracts, and gives the loop's row."""
+    from go_readability_spark.operators.extract import extract_batch_rows
+    from go_readability_spark.spans import KIND_TEXT, element_to_spans
+
+    html = "<div>text, more " * 1000
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(1000)
+    try:
+        article = extract(html, ReadabilityOptions())
+        got = {
+            "spans_out": element_to_spans(article.root),
+            "meta": {
+                "title": article.title,
+                "byline": article.byline,
+                "page_type": article.page_type,
+                "node_count": article.node_count,
+            },
+        }
+        row = extract_batch_rows(
+            ["deep"],
+            [[{"kind": KIND_TEXT, "text": html, "media_ref": "", "offset": 0}]],
+            [len(html)],
+            ReadabilityOptions(forced_page_type=PAGE_TYPE_ARTICLE),
+        )[0]
+    finally:
+        sys.setrecursionlimit(limit)
+    assert row["error"] is None
+    assert article.node_count > 2000
+    assert got == {"spans_out": row["spans_out"], "meta": row["meta"]}
+    for name in ("candidate_count", "top_score", "link_density",
+                 "is_probably_content"):
+        assert getattr(article.metrics, name) == row["metrics"][name], name

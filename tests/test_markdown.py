@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from go_readability_spark.readability.markdown import (
@@ -227,6 +229,16 @@ class TestJoinParts:
         assert _join_parts(["Hello\u00a0", "world"]) == "Hello\u00a0 world"
         assert _join_parts(["Hello", "\u00a0world"]) == "Hello \u00a0world"
 
+    def test_only_the_edge_characters_count(self):
+        """A part joins on the last character of the result so far and
+        its own first character: a trailing newline or tab suppresses
+        the space, \\v (not Go whitespace) does not, and whitespace
+        inside a part does not matter."""
+        assert _join_parts(["Hello\n", "world"]) == "Hello\nworld"
+        assert _join_parts(["a b\t", "c d"]) == "a b\tc d"
+        assert _join_parts(["Hello\v", "world"]) == "Hello\v world"
+        assert _join_parts(["a \nb", "c", "\fd"]) == "a \nb c\fd"
+
     def test_inline_code_delimiters(self):
         assert md("<p>has <code>a`b</code> ticks</p>") == "has ``a`b`` ticks"
         assert md("<p><code>`</code></p>") == "`` ` ``"
@@ -239,3 +251,26 @@ def test_markdown_lang_fence():
 
 def test_none_element():
     assert to_markdown(None) == ""
+
+
+def test_to_markdown_is_linear_in_article_length():
+    """to_markdown scales linearly: time(4n) / time(n) <= 6, min of 3, at
+    an n that takes well over 50 ms. Linear code gives about 4; joining
+    each part by rescanning the whole growing result gave about 16."""
+    para = (
+        '<p><strong>Lead sentence, here.</strong> Some body text with a '
+        '<a href="/ref">link</a> and <em>emphasis</em>.</p>'
+    )
+
+    def best_of_3(n):
+        body = parse_html(f"<html><body><article>{para * n}</article></body></html>").body
+        times = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            to_markdown(body)
+            times.append(time.perf_counter() - t0)
+        return min(times)
+
+    small, large = best_of_3(1500), best_of_3(6000)
+    assert small >= 0.02, small  # the sizes still measure the joiner
+    assert large / small <= 6, (small, large)

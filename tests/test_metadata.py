@@ -1,6 +1,7 @@
 """Metadata tests ported from /root/reference/metadata_test.go."""
 
 from go_readability_spark.readability import (
+    DocIndex,
     get_article_byline,
     get_article_title,
     get_jsonld,
@@ -19,26 +20,26 @@ def doc(html):
 
 def test_title_plain():
     d = doc("<html><head><title>Simple Title Here Now</title></head><body></body></html>")
-    assert get_article_title(d) == "Simple Title Here Now"
+    assert get_article_title(d, DocIndex(d.document_element)) == "Simple Title Here Now"
 
 
 def test_title_separator_keeps_first_part():
     d = doc("<html><head><title>Article Title Goes Here | Site Name</title></head></html>")
     # last separator part removed; "Site Name" workaround prevents restore
-    assert get_article_title(d) == "Article Title Goes Here"
+    assert get_article_title(d, DocIndex(d.document_element)) == "Article Title Goes Here"
 
 
 def test_title_separator_short_first_part():
     # removing the last part leaves <3 words -> join parts[1:]
     d = doc("<html><head><title>Short | The Real Article Title Here</title></head></html>")
-    assert get_article_title(d) == "The Real Article Title Here"
+    assert get_article_title(d, DocIndex(d.document_element)) == "The Real Article Title Here"
 
 
 def test_title_colon_fallback():
     d = doc("<html><head><title>Site: The Real Article Title Here</title></head></html>")
-    assert get_article_title(d) == " The Real Article Title Here".strip() or True
+    assert get_article_title(d, DocIndex(d.document_element)) == " The Real Article Title Here".strip() or True
     # exact reference behavior: substring after last colon (not trimmed until end)
-    assert get_article_title(d) == "The Real Article Title Here"
+    assert get_article_title(d, DocIndex(d.document_element)) == "The Real Article Title Here"
 
 
 def test_title_colon_with_matching_heading():
@@ -48,7 +49,7 @@ def test_title_colon_with_matching_heading():
     )
     # heading matches the full title -> keep it, then ≤4-word restore rule
     # restores the original anyway (no hierarchical separators)
-    assert get_article_title(d) == "Prefix: Exact Heading"
+    assert get_article_title(d, DocIndex(d.document_element)) == "Prefix: Exact Heading"
 
 
 def test_title_h1_fallback_for_short_title():
@@ -56,14 +57,14 @@ def test_title_h1_fallback_for_short_title():
         "<html><head><title>Tiny</title></head>"
         "<body><h1>The Single Heading Of This Document</h1></body></html>"
     )
-    assert get_article_title(d) == "The Single Heading Of This Document"
+    assert get_article_title(d, DocIndex(d.document_element)) == "The Single Heading Of This Document"
 
 
 def test_title_separator_first_part_too_short():
     # removing last part leaves 2 words -> parts[1:] joined (5 words,
     # so the ≤4-word restore rule does NOT trigger)
     d = doc("<html><head><title>Two Words - And More Stuff Not Site</title></head></html>")
-    assert get_article_title(d) == "And More Stuff Not Site"
+    assert get_article_title(d, DocIndex(d.document_element)) == "And More Stuff Not Site"
 
 
 def test_title_four_word_restore():
@@ -71,7 +72,7 @@ def test_title_four_word_restore():
     # Title" (3 words, ≤4) and no hierarchical separators -> original
     # title restored (metadata.go:150-160)
     d = doc("<html><head><title>Long Article Title - Blog</title></head></html>")
-    assert get_article_title(d) == "Long Article Title - Blog"
+    assert get_article_title(d, DocIndex(d.document_element)) == "Long Article Title - Blog"
 
 
 def test_title_byte_length_bounds():
@@ -80,7 +81,7 @@ def test_title_byte_length_bounds():
         "<html><head><title>12345678901234</title></head>"
         "<body><h1>Heading Used Instead Of Title</h1></body></html>"
     )
-    assert get_article_title(d) == "Heading Used Instead Of Title"
+    assert get_article_title(d, DocIndex(d.document_element)) == "Heading Used Instead Of Title"
 
 
 # --- GetArticleByline (metadata_test.go:127) ---
@@ -90,7 +91,7 @@ def test_byline_from_meta_author():
         '<html><head><meta name="author" content="John Doe"></head>'
         "<body></body></html>"
     )
-    assert get_article_byline(d) == "John Doe"
+    assert get_article_byline(d, DocIndex(d.document_element)) == "John Doe"
 
 
 def test_byline_priority_dc_creator_over_author():
@@ -100,7 +101,7 @@ def test_byline_priority_dc_creator_over_author():
         '<meta name="dc.creator" content="DC Creator">'
         "</head><body></body></html>"
     )
-    assert get_article_byline(d) == "DC Creator"
+    assert get_article_byline(d, DocIndex(d.document_element)) == "DC Creator"
 
 
 def test_byline_article_author_not_url():
@@ -109,7 +110,7 @@ def test_byline_article_author_not_url():
         '<meta property="article:author" content="Jane Smith">'
         "</head><body></body></html>"
     )
-    assert get_article_byline(d) == "Jane Smith"
+    assert get_article_byline(d, DocIndex(d.document_element)) == "Jane Smith"
 
 
 def test_byline_article_author_url_ignored():
@@ -119,7 +120,7 @@ def test_byline_article_author_url_ignored():
         '<meta name="author" content="Real Name">'
         "</head><body></body></html>"
     )
-    assert get_article_byline(d) == "Real Name"
+    assert get_article_byline(d, DocIndex(d.document_element)) == "Real Name"
 
 
 def test_byline_entities_unescaped():
@@ -129,7 +130,7 @@ def test_byline_entities_unescaped():
         "</head><body></body></html>"
     )
     # tokenizer decodes &amp;#39; -> &#39; then byline unescape -> '
-    assert get_article_byline(d) == "O'Brien & Sons"
+    assert get_article_byline(d, DocIndex(d.document_element)) == "O'Brien & Sons"
 
 
 def test_byline_from_jsonld():
@@ -140,7 +141,7 @@ def test_byline_from_jsonld():
         ' "datePublished": "2024-01-01"}'
         "</script></head><body></body></html>"
     )
-    assert get_article_byline(d) == "LD Author"
+    assert get_article_byline(d, DocIndex(d.document_element)) == "LD Author"
 
 
 # --- GetJSONLD (metadata_test.go:302) ---
@@ -154,7 +155,7 @@ def test_jsonld_full_object():
         ' "author": [{"name": "A One"}, {"name": "B Two"}]}'
         "</script></head><body></body></html>"
     )
-    md = get_jsonld(d)
+    md = get_jsonld(d, DocIndex(d.document_element))
     assert md.title == "The Name"
     assert md.byline == "A One, B Two"
     assert md.excerpt == "Desc here"
@@ -168,7 +169,7 @@ def test_jsonld_requires_schema_org_context():
         '{"@context": "https://example.com", "@type": "Article", "name": "X"}'
         "</script></head><body></body></html>"
     )
-    assert get_jsonld(d).title == ""
+    assert get_jsonld(d, DocIndex(d.document_element)).title == ""
 
 
 def test_jsonld_graph_walk():
@@ -179,7 +180,7 @@ def test_jsonld_graph_walk():
         '{"@type": "Article", "name": "Graph Article", "author": {"name": "G"}}'
         "]}</script></head><body></body></html>"
     )
-    md = get_jsonld(d)
+    md = get_jsonld(d, DocIndex(d.document_element))
     assert md.title == "Graph Article"
     assert md.byline == "G"
 
@@ -190,7 +191,7 @@ def test_jsonld_non_article_type_skipped():
         '{"@context": "https://schema.org", "@type": "WebSite", "name": "X"}'
         "</script></head><body></body></html>"
     )
-    assert get_jsonld(d).title == ""
+    assert get_jsonld(d, DocIndex(d.document_element)).title == ""
 
 
 # --- UnescapeHTMLEntities (metadata_test.go:248) ---
@@ -249,4 +250,4 @@ def test_jsonld_array_with_non_object_element_rejected():
         "<body></body></html>",
         "",
     )
-    assert get_article_byline(doc) == ""
+    assert get_article_byline(doc, DocIndex(doc.document_element)) == ""

@@ -163,10 +163,9 @@ class TestCodecProperties:
         assert [s["order"] for s in out] == list(range(len(out)))
 
 
-class TestWalkerEquivalence:
-    """The specialized tag walker (single/star/multi paths, text nodes
-    on the stack) and the grouped walk must agree with a naive
-    recursive reference on arbitrary trees."""
+class TestIndexEquivalence:
+    """One ``DocIndex`` must answer every lookup exactly as a naive
+    recursive walk of the subtree it names, on arbitrary trees."""
 
     tags = st.sampled_from(["div", "p", "a", "span", "section", "li"])
 
@@ -174,11 +173,11 @@ class TestWalkerEquivalence:
     def trees(draw, depth=3):  # noqa: N805 — hypothesis composite style
         from go_readability_spark.readability import VElement, VText
 
-        el = VElement(draw(TestWalkerEquivalence.tags))
+        el = VElement(draw(TestIndexEquivalence.tags))
         for _ in range(draw(st.integers(0, 3))):
             if depth > 0 and draw(st.booleans()):
                 el.append_child(
-                    draw(TestWalkerEquivalence.trees(depth=depth - 1))
+                    draw(TestIndexEquivalence.trees(depth=depth - 1))
                 )
             else:
                 el.append_child(VText(draw(st.text(max_size=5))))
@@ -187,27 +186,25 @@ class TestWalkerEquivalence:
     @given(trees(), st.lists(tags, min_size=1, max_size=4))
     @settings(max_examples=60, deadline=None)
     def test_matches_naive_recursive_walk(self, root, tag_list):
-        from go_readability_spark.readability import VElement
-        from go_readability_spark.readability.dom import (
-            get_elements_by_tag_names,
-            get_elements_in_tag_order,
-        )
+        from go_readability_spark.readability import DocIndex, VElement
+        from go_readability_spark.readability.fmt import count_nodes
 
-        def naive(el, tagset):
-            out = [el] if ("*" in tagset or el.tag_name in tagset) else []
+        def naive(el, tag):
+            out = [el] if tag in ("*", el.tag_name) else []
             for c in el.children:
                 if isinstance(c, VElement):
-                    out.extend(naive(c, tagset))
+                    out.extend(naive(c, tag))
             return out
 
-        for tags in (tag_list, ["*"], tag_list + ["*"]):
-            got = get_elements_by_tag_names(root, tags)
-            assert [id(e) for e in got] == [
-                id(e) for e in naive(root, set(tags))
-            ]
-        # tag-order concat == naive per-tag concat
-        want = []
-        for t in tag_list:
-            want.extend(naive(root, {t}))
-        got = get_elements_in_tag_order(root, tag_list)
-        assert [id(e) for e in got] == [id(e) for e in want]
+        index = DocIndex(root)
+        for sub in naive(root, "*"):
+            for tag in set(tag_list) | {"*"}:
+                assert [id(e) for e in index.elements(sub, tag)] == [
+                    id(e) for e in naive(sub, tag)
+                ]
+            assert index.count(sub) == count_nodes(sub)
+            # the tag-order concatenation scoring builds == the naive
+            # per-tag concatenation
+            got = [e for t in tag_list for e in index.elements(sub, t)]
+            want = [e for t in tag_list for e in naive(sub, t)]
+            assert [id(e) for e in got] == [id(e) for e in want]

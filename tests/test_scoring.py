@@ -1,6 +1,7 @@
 """Scoring tests ported from /root/reference/core_test.go:10-413."""
 
 from go_readability_spark.readability import (
+    DocIndex,
     VDocument,
     VElement,
     VText,
@@ -83,7 +84,7 @@ def test_single_article_tag_shortcut():
     article = el("article")
     article.append_child(VText("This is an article with enough text to be considered."))
     body.append_child(article)
-    candidates = find_main_candidates(doc, 5)
+    candidates = find_main_candidates(doc, DocIndex(html), 5)
     assert len(candidates) == 1
     assert candidates[0].tag_name == "article"
 
@@ -93,7 +94,7 @@ def test_single_main_tag_shortcut():
     main = el("main")
     main.append_child(VText("This is a main section with enough text to be considered."))
     body.append_child(main)
-    candidates = find_main_candidates(doc, 5)
+    candidates = find_main_candidates(doc, DocIndex(html), 5)
     assert len(candidates) == 1
     assert candidates[0].tag_name == "main"
 
@@ -107,7 +108,7 @@ def test_two_articles_no_shortcut():
         p.append_child(VText("This is a paragraph with enough text to be considered here."))
         a.append_child(p)
         body.append_child(a)
-    candidates = find_main_candidates(doc, 5)
+    candidates = find_main_candidates(doc, DocIndex(html), 5)
     # shortcut not taken: scoring path returns several candidates
     # (articles + scored ancestors), not a single semantic element
     assert len(candidates) > 1
@@ -129,7 +130,7 @@ def test_multiple_candidates_class_ranking():
     sidebar_div.append_child(p2)
     body.append_child(sidebar_div)
 
-    candidates = find_main_candidates(doc, 2)
+    candidates = find_main_candidates(doc, DocIndex(html), 2)
     assert len(candidates) == 2
     assert candidates[0].class_name == "content"
 
@@ -139,7 +140,7 @@ def test_no_candidates_returns_body():
     div = el("div")
     div.append_child(VText("Short text."))
     body.append_child(div)
-    candidates = find_main_candidates(doc, 5)
+    candidates = find_main_candidates(doc, DocIndex(html), 5)
     assert len(candidates) == 1
     assert candidates[0].tag_name == "body"
 
@@ -154,7 +155,7 @@ def test_limit_by_nb_top_candidates():
         ))
         div.append_child(p)
         body.append_child(div)
-    assert len(find_main_candidates(doc, 3)) == 3
+    assert len(find_main_candidates(doc, DocIndex(html), 3)) == 3
 
 
 def test_25_byte_threshold_is_bytes():
@@ -165,7 +166,7 @@ def test_25_byte_threshold_is_bytes():
     p.append_child(VText("あいうえおかきくけこ"))  # 10 chars = 30 bytes
     div.append_child(p)
     body.append_child(div)
-    candidates = find_main_candidates(doc, 5)
+    candidates = find_main_candidates(doc, DocIndex(html), 5)
     # div got scored (via ancestor distribution), so body fallback NOT used
     assert candidates[0].tag_name == "div"
 
@@ -186,7 +187,7 @@ def test_multiscript_commas_counted():
     weak.append_child(p2)
     body.append_child(weak)
 
-    candidates = find_main_candidates(doc, 2)
+    candidates = find_main_candidates(doc, DocIndex(html), 2)
     assert candidates[0].class_name == "a"  # 5 ideographic commas win
 
 
@@ -203,25 +204,25 @@ LONG = (
 def test_is_probably_content_good():
     div = el("div", {"class": "content"})
     div.append_child(VText(LONG))
-    assert is_probably_content(div)
+    assert is_probably_content(div, DocIndex(div))
 
 
 def test_is_probably_content_invisible():
     div = el("div", {"style": "display: none;"})
     div.append_child(VText(LONG))
-    assert not is_probably_content(div)
+    assert not is_probably_content(div, DocIndex(div))
 
 
 def test_is_probably_content_unlikely_class():
     div = el("div", {"class": "sidebar"})
     div.append_child(VText(LONG))
-    assert not is_probably_content(div)
+    assert not is_probably_content(div, DocIndex(div))
 
 
 def test_is_probably_content_short_text():
     div = el("div", {"class": "content"})
     div.append_child(VText("This is a short text."))
-    assert not is_probably_content(div)
+    assert not is_probably_content(div, DocIndex(div))
 
 
 def test_is_probably_content_high_link_density():
@@ -233,4 +234,4 @@ def test_is_probably_content_high_link_density():
         a = el("a")
         a.append_child(VText("Link text that is quite long to increase the link density."))
         div.append_child(a)
-    assert not is_probably_content(div)
+    assert not is_probably_content(div, DocIndex(div))
