@@ -36,7 +36,6 @@ from ..readability.extract import (
     ensure_recursion_headroom,
     extract_content,
 )
-from ..readability.fmt import count_nodes
 from ..readability.parser import parse_html
 from ..readability.preprocess import preprocess_document
 from ..schemas import EXTRACTED_AND_RENDERED_SCHEMA, EXTRACTED_SCHEMA
@@ -90,15 +89,11 @@ def extract_batch_rows(
         else:
             try:
                 doc = parse_html(spans_to_html(spans), "")
-                nodes_before = count_nodes(doc.document_element)
-                preprocess_document(doc)
-                nodes_after = count_nodes(doc.document_element)
+                nodes, pruned = preprocess_document(doc)
                 article = extract_content(doc, options)
                 m = article.metrics
-                m.pruned_nodes = max(0, nodes_before - nodes_after)
-                m.prune_ratio = (
-                    m.pruned_nodes / nodes_before if nodes_before > 0 else 0.0
-                )
+                m.pruned_nodes = pruned
+                m.prune_ratio = pruned / nodes
                 # built in full before update: a failing render leaves the
                 # error-row defaults untouched
                 row.update(

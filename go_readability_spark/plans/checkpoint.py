@@ -12,6 +12,12 @@ partition and resume idempotently. Mechanics (SURVEY.md §4.2):
   write job (``DataFrame.observe``), so no part is read back. The lineage
   hash is order-insensitive (XOR of xxhash64(doc_id)) so reruns verify they
   processed the same input slice;
+- the manifest is a parquet dataset of one file per finished part,
+  ``part=<N>.parquet``, written by the driver with pyarrow (no Spark job)
+  and published by renaming a fsynced dot-named temp file onto that name.
+  Parquet readers skip names that start with ``.`` or ``_``, so a
+  half-written record is never read, and each part owning its file needs
+  no lock. Marking a part again replaces its record;
 - resume skips the parts the manifest marks done. The manifest is tiny
   (one row per partition, ≤ tens of thousands at 10^12 docs), so it is
   collected once to the driver;
@@ -27,7 +33,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
@@ -103,6 +108,18 @@ def mark_partition_done(
     spark: SparkSession, manifest_dir: str, part: int, stats: dict,
     n_parts: int = 0,
 ) -> None:
+    """Publish ``part``'s manifest record as ``manifest_dir/part=<N>.parquet``.
+
+    The row is written on the driver with pyarrow to a dot-named temp
+    file, fsynced and renamed onto the final name, so the record appears
+    whole or not at all. ``spark`` is unused; it stays first because
+    callers and wrappers pass this signature by position."""
+    # imported here: every Python worker imports this module through
+    # ``plans``, and only the driver writes records
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     row = {
         "part": int(part),
         "n_parts": int(n_parts),
@@ -114,9 +131,15 @@ def mark_partition_done(
         "lineage_hash": int(stats.get("lineage_hash") or 0),
         "finished_at": time.time(),
     }
-    spark.createDataFrame([row], MANIFEST_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(manifest_dir)
+    table = pa.Table.from_pylist([row], schema=to_arrow_schema(MANIFEST_SCHEMA))
+    name = f"part={int(part)}.parquet"
+    os.makedirs(manifest_dir, exist_ok=True)
+    tmp = os.path.join(manifest_dir, f".{name}.{os.getpid()}.tmp")
+    with open(tmp, "wb") as f:
+        pq.write_table(table, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, os.path.join(manifest_dir, name))
 
 
 def run_checkpointed(
@@ -143,8 +166,8 @@ def run_checkpointed(
     the scheduler interleaves their stages, so at 10⁴ parts the pipeline
     is not serialized through one driver loop. Safe because (a) each part
     writes under its own output root, so the Hadoop committer's
-    ``_temporary`` staging dirs never collide, and (b) manifest appends
-    are tiny and serialized by a driver-side lock. Every part job runs
+    ``_temporary`` staging dirs never collide, and (b) each part's
+    manifest record is its own file. Every part job runs
     under the caller's local properties, so a job group (or description,
     scheduler pool, job tag) set on the calling thread covers them. One
     failure rule at every ``concurrency``, 1 included: a failed part does
@@ -235,7 +258,6 @@ def run_checkpointed(
             ).parquet(staging)
             staged = True
 
-        manifest_lock = threading.Lock()
         # Pool threads do not inherit the caller's local properties (job
         # group, description, scheduler pool, job tags): each part sets a
         # fresh clone of them. A clone, not the caller's object: every SQL
@@ -254,10 +276,9 @@ def run_checkpointed(
             )
             part_dir = os.path.join(out_dir, f"part={int(part)}")
             extracted.write.mode("overwrite").parquet(part_dir)
-            with manifest_lock:
-                mark_partition_done(
-                    spark, manifest_dir, part, stats.get, n_parts=n_parts
-                )
+            mark_partition_done(
+                spark, manifest_dir, part, stats.get, n_parts=n_parts
+            )
 
         with ThreadPoolExecutor(max_workers=max(concurrency, 1)) as pool:
             futures = {part: pool.submit(process_part, part) for part in pending_parts}

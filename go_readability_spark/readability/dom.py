@@ -109,7 +109,7 @@ class DocIndex:
             n += 1
         self._size = n
 
-    def _span(self, root: VElement) -> tuple[int, int]:
+    def span(self, root: VElement) -> tuple[int, int]:
         """``(pos, end)`` of ``root``; the tree of a root outside the
         indexed ones is indexed first."""
         k = self._order.get(root)
@@ -122,7 +122,7 @@ class DocIndex:
         """Elements named ``tag`` (lowercase, or ``"*"``) in the subtree of
         ``root``, ``root`` included, in document order: the pre-order
         tag scan of dom_utils.go:14-48."""
-        pos, end = self._span(root)
+        pos, end = self.span(root)
         entry = self._tags.get(tag)
         if entry is None:
             return []
@@ -133,7 +133,7 @@ class DocIndex:
     def count(self, root: VElement) -> int:
         """Element and text nodes in the subtree of ``root``, ``root``
         included (``count_nodes``, format.go:296-315)."""
-        pos, end = self._span(root)
+        pos, end = self.span(root)
         return end - pos
 
     def inner_text(self, node: VNode, normalize_spaces: bool = False) -> str:

@@ -84,8 +84,8 @@ class ExtractionMetrics:
 
     The reference has no equivalent: the numbers are its intermediate
     state. ``extract_content`` fills the scoring stats; the pruning stats
-    (node counts around ``preprocess_document``) are filled by the
-    extraction loop (operators/extract.py), and stay 0 otherwise."""
+    (from the node counts ``preprocess_document`` returns) are filled by
+    the extraction loop (operators/extract.py), and stay 0 otherwise."""
 
     candidate_count: int = 0
     pruned_nodes: int = 0

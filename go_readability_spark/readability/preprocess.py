@@ -23,36 +23,55 @@ _AD_COMBINED = re.compile(
 )
 
 
-def preprocess_document(doc: VDocument) -> VDocument:
+def preprocess_document(doc: VDocument) -> tuple[int, int]:
     """preprocess.go:66-74.
 
     Both passes read their snapshots from one index built before anything
     is detached. The removal set does not depend on the order: detaching a
     nested unwanted element, or checking an element for ads after an
     unwanted ancestor was removed, only edits a subtree that has already
-    left the document (SURVEY.md §4.1)."""
-    index = DocIndex(doc.document_element)
-    _remove_unwanted_tags(doc, index)
-    _remove_ads(doc, index)
-    return doc
+    left the document (SURVEY.md §4.1).
+
+    Returns ``(nodes, pruned)``: the element and text nodes of the tree
+    before preprocessing (``count_nodes``), and how many of them left it.
+    A detached subtree is one ``(pos, end)`` span of the index, and a
+    nested match lies inside its ancestor's span, so ``pruned`` is the
+    length of the union of the detached elements' spans."""
+    root = doc.document_element
+    index = DocIndex(root)
+    detached = _remove_unwanted_tags(doc, index) + _remove_ads(doc, index)
+    pruned = reach = 0
+    for pos, end in sorted(index.span(element) for element in detached):
+        if pos >= reach:
+            pruned += end - pos
+            reach = end
+    return index.count(root), pruned
 
 
-def _remove_unwanted_tags(doc: VDocument, index: DocIndex) -> None:
-    """Delete aside/nav/header/footer/script/style/... (preprocess.go:82-98).
+def _remove_unwanted_tags(doc: VDocument, index: DocIndex) -> list[VElement]:
+    """Delete aside/nav/header/footer/script/style/... (preprocess.go:82-98)
+    and return them.
 
     audio/video/figure/canvas/details are deliberately kept
     (preprocess.go:29-34).
     """
+    detached = []
     for tag in TAGS_TO_REMOVE:
         for element in index.elements(doc.document_element, tag):
             detach(element)
+            detached.append(element)
+    return detached
 
 
-def _remove_ads(doc: VDocument, index: DocIndex) -> None:
-    """Delete likely-ad elements under body (preprocess.go:106-122)."""
+def _remove_ads(doc: VDocument, index: DocIndex) -> list[VElement]:
+    """Delete likely-ad elements under body (preprocess.go:106-122) and
+    return them."""
+    detached = []
     for element in index.elements(doc.body, "*"):
         if element.parent is not None and is_likely_ad(element):
             detach(element)
+            detached.append(element)
+    return detached
 
 
 def is_likely_ad(element: VElement) -> bool:

@@ -1,6 +1,7 @@
 """Preprocess tests ported from /root/reference/preprocess_test.go."""
 
 from go_readability_spark.readability import (
+    count_nodes,
     get_elements_by_tag_name,
     is_likely_ad,
     parse_html,
@@ -97,6 +98,10 @@ def test_nested_removal_is_safe():
     (preprocess.go:88-96 semantics)."""
     html = "<html><body><nav><form><button>x</button></form></nav><p>k</p></body></html>"
     d = parse_html(html)
-    preprocess_document(d)
+    before = count_nodes(d.document_element)
+    nodes, pruned = preprocess_document(d)
     assert get_elements_by_tag_name(d.body, "nav") == []
     assert len(get_elements_by_tag_name(d.body, "p")) == 1
+    # the nested form and button are inside the nav's subtree: counted once
+    assert (nodes, pruned) == (before, before - count_nodes(d.document_element))
+    assert pruned == 4

@@ -163,6 +163,42 @@ class TestCodecProperties:
         assert [s["order"] for s in out] == list(range(len(out)))
 
 
+class TestPruneCounts:
+    """``preprocess_document``'s counts equal two ``count_nodes`` walks
+    around it, on soups that nest unwanted tags and ads."""
+
+    soup = st.lists(
+        st.one_of(
+            st.text(alphabet="ab ", max_size=5),
+            st.sampled_from(
+                [
+                    "<div>", "</div>", "<p>", "</p>", "<nav>", "</nav>",
+                    "<aside>", "</aside>", "<form>", "</form>", "<script>",
+                    "</script>", "<div class='ad-slot'>", "<span id='banner-x'>",
+                    "</span>", "<section data-ad=1>", "</section>", "<br>",
+                ]
+            ),
+        ),
+        max_size=30,
+    ).map(lambda parts: "<html><body>" + "".join(parts))
+
+    @_SETTINGS
+    @given(soup)
+    def test_counts_equal_walks_around_preprocessing(self, html):
+        from go_readability_spark.readability import (
+            count_nodes,
+            parse_html,
+            preprocess_document,
+        )
+
+        doc = parse_html(html)
+        before = count_nodes(doc.document_element)
+        nodes, pruned = preprocess_document(doc)
+        assert (nodes, pruned) == (
+            before, before - count_nodes(doc.document_element)
+        )
+
+
 class TestIndexEquivalence:
     """One ``DocIndex`` must answer every lookup exactly as a naive
     recursive walk of the subtree it names, on arbitrary trees."""

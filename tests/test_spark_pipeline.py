@@ -465,8 +465,11 @@ class TestCheckpointResume:
                         "spark.job.interruptOnCancel"):
                 sc.setLocalProperty(key, None)
         assert set(tracker.getJobIdsForGroup()) - ungrouped == set()
-        # each of the 4 parts runs at least its write and its manifest append
-        assert len(tracker.getJobIdsForGroup(group)) >= 8
+        # 1 manifest collect + 2 for the staging write + 2 per part for
+        # its output write (AQE runs each shuffle's map stage as a job of
+        # its own); the manifest records are written on the driver and
+        # start no job
+        assert len(tracker.getJobIdsForGroup(group)) == 11
 
         got = [r.asDict(recursive=True) for r in result.collect()]
         assert sorted(r["doc_id"] for r in got) == sorted(
@@ -513,6 +516,111 @@ class TestCheckpointResume:
         ).count() == 12
         assert marked == []
         assert not os.path.exists(out_dir + "__staging")
+
+
+class TestManifestRecords:
+    """Each finished part's manifest record is one parquet file written on
+    the driver, readable by Spark (``read_manifest``) and by pyarrow alone
+    (``pq.read_table``, the benchmark's reader)."""
+
+    STATS = {"n_docs": 3, "n_errors": 1, "total_bytes": 30,
+             "avg_prune_ratio": 0.25, "lineage_hash": -7}
+
+    def test_mark_starts_no_spark_job(self, spark, tmp_path):
+        from go_readability_spark.plans.checkpoint import mark_partition_done
+
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        sc.setJobGroup("mark-only", "one manifest record")
+        try:
+            mark_partition_done(spark, str(tmp_path / "man"), 0, self.STATS, 1)
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        assert tracker.getJobIdsForGroup("mark-only") == []
+        assert read_manifest(spark, str(tmp_path / "man")).count() == 1
+
+    def test_marking_a_part_again_replaces_its_record(self, spark, tmp_path):
+        import pyarrow.parquet as pq
+
+        from go_readability_spark.plans.checkpoint import mark_partition_done
+
+        man_dir = str(tmp_path / "man")
+        mark_partition_done(spark, man_dir, 3, self.STATS, 4)
+        mark_partition_done(spark, man_dir, 3, {**self.STATS, "n_docs": 5}, 4)
+        rows = pq.read_table(man_dir).to_pylist()
+        assert [(r["part"], r["n_docs"]) for r in rows] == [(3, 5)]
+        assert [(r["part"], r["n_docs"]) for r in
+                read_manifest(spark, man_dir).collect()] == [(3, 5)]
+        assert os.listdir(man_dir) == ["part=3.parquet"]
+
+    def test_leftover_temp_file_is_not_read(self, spark, tmp_path):
+        import pyarrow.parquet as pq
+
+        from go_readability_spark.plans.checkpoint import mark_partition_done
+
+        man_dir = tmp_path / "man"
+        man_dir.mkdir()
+        # what a kill between the temp write and the rename leaves behind
+        (man_dir / ".part=1.parquet.12345.tmp").write_bytes(b"PAR1 torn")
+        assert read_manifest(spark, str(man_dir)).count() == 0
+        mark_partition_done(spark, str(man_dir), 0, self.STATS, 2)
+        assert [r["part"] for r in read_manifest(spark, str(man_dir)).collect()] == [0]
+        assert pq.read_table(str(man_dir)).column("part").to_pylist() == [0]
+
+    def test_pyarrow_reads_one_row_per_part(self, spark, tmp_path):
+        import pyarrow.parquet as pq
+
+        from go_readability_spark.plans.checkpoint import MANIFEST_SCHEMA
+
+        man_dir = str(tmp_path / "man")
+        run_checkpointed(
+            spark, corpus_df(spark, 8, num_partitions=2), str(tmp_path / "out"),
+            man_dir, n_parts=3, num_partitions=2, concurrency=3,
+        )
+        table = pq.read_table(man_dir)
+        assert table.column_names == MANIFEST_SCHEMA.names
+        assert sorted(table.column("part").to_pylist()) == [0, 1, 2]
+        assert sum(table.column("n_docs").to_pylist()) == 8
+
+    def test_append_written_manifest_stays_readable(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A manifest directory holding a Spark-appended record (the
+        earlier format) plus driver-written ones reads as one manifest,
+        and a run skips every part it lists."""
+        import time
+
+        import pyarrow.parquet as pq
+
+        from go_readability_spark.plans import checkpoint as cp
+
+        man_dir = str(tmp_path / "man")
+        old = {"part": 0, "n_parts": 3, "status": "done", **self.STATS,
+               "finished_at": time.time()}
+        spark.createDataFrame([old], cp.MANIFEST_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(man_dir)
+        cp.mark_partition_done(spark, man_dir, 1, self.STATS, n_parts=3)
+        assert sorted(r["part"] for r in read_manifest(spark, man_dir).collect()) == [0, 1]
+        assert sorted(pq.read_table(man_dir).column("part").to_pylist()) == [0, 1]
+
+        marked: list[int] = []
+        orig_mark = cp.mark_partition_done
+
+        def spy_mark(spark_, manifest_dir, part, *args, **kwargs):
+            marked.append(part)
+            return orig_mark(spark_, manifest_dir, part, *args, **kwargs)
+
+        monkeypatch.setattr(cp, "mark_partition_done", spy_mark)
+        cp.run_checkpointed(
+            spark, corpus_df(spark, 6, num_partitions=2), str(tmp_path / "out"),
+            man_dir, n_parts=3, num_partitions=2,
+        )
+        assert marked == [2]
+        assert sorted(r["part"] for r in read_manifest(spark, man_dir).collect()) == [0, 1, 2]
+        assert sorted(pq.read_table(man_dir).column("part").to_pylist()) == [0, 1, 2]
 
 
 class TestDriverDocsSource:
