@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, functions as F
 from ..readability.extract import (
     ExtractionMetrics,
     ReadabilityOptions,
-    ensure_recursion_headroom,
     extract_content,
 )
 from ..readability.parser import parse_html
@@ -64,7 +63,6 @@ def extract_batch_rows(
     metadata_json) from the SAME parsed article, so a pipeline wanting
     extraction + renderings pays the parse+score once; error rows carry
     empty renderings."""
-    ensure_recursion_headroom()
     out: list[dict] = []
     for doc_id, spans, doc_bytes in zip(doc_ids, spans_lists, doc_bytes_list):
         t0 = time.perf_counter()

@@ -31,6 +31,7 @@ Iceberg calls are the same shape.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import time
@@ -184,6 +185,14 @@ def run_checkpointed(
     run and its rollup.
     """
     from ..operators.extract import extract_documents
+
+    # a process killed between a record's write and its rename leaves
+    # the temp file behind; this function is the manifest's only writer,
+    # so none is in flight when a run starts
+    for tmp in glob.glob(
+        os.path.join(glob.escape(manifest_dir), ".part=*.parquet.*.tmp")
+    ):
+        os.remove(tmp)
 
     manifest = read_manifest(spark, manifest_dir).select(
         "part", "n_parts", "status"

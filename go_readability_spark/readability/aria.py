@@ -25,11 +25,12 @@ byte slicing like Go (aria.go:220-223, :230), SURVEY.md §1.2(1).
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 from typing import Optional
 
-from .dom import get_inner_text, is_probably_visible
-from .vdom import VDocument, VElement, VText
+from .dom import DocIndex, is_probably_visible
+from .vdom import VDocument, VElement, VText, fold
 
 __all__ = [
     "AriaNode",
@@ -156,6 +157,11 @@ def _byte_truncate(text: str) -> str:
 
 def get_accessible_name(element: VElement) -> str:
     """aria.go:185-236."""
+    return _accessible_name(element, DocIndex(element))
+
+
+def _accessible_name(element: VElement, index: DocIndex) -> str:
+    """``get_accessible_name``, reading text from ``index``."""
     aria_label = element.get_attribute("aria-label")
     if aria_label != "":
         return aria_label
@@ -167,11 +173,11 @@ def get_accessible_name(element: VElement) -> str:
     if title != "":
         return title
     if element.tag_name in _NAME_FROM_CONTENT:
-        text = get_inner_text(element, True)
+        text = index.inner_text(element, True)
         if text != "":
             return _byte_truncate(text)
     if element.tag_name in ("p", "div"):
-        text = get_inner_text(element, True)
+        text = index.inner_text(element, True)
         if text != "" and len(text.encode("utf-8")) < 100:
             return text
     return ""
@@ -197,12 +203,34 @@ def _parse_float(s: str) -> Optional[float]:
 
 
 def build_aria_node(element: VElement) -> AriaNode:
-    """aria.go:319-440."""
+    """aria.go:319-440. One ``DocIndex`` serves the names of the whole
+    tree, so nested elements do not each re-walk their subtree."""
+    index = DocIndex(element)
+    return fold(
+        element,
+        _visible_child_elements,
+        lambda el, child_nodes: _aria_node(el, child_nodes, index),
+    )
+
+
+def _visible_child_elements(element: VElement) -> list[VElement]:
+    return [
+        child
+        for child in element.children
+        if isinstance(child, VElement) and is_probably_visible(child)
+    ]
+
+
+def _aria_node(
+    element: VElement, child_nodes: Sequence[AriaNode], index: DocIndex
+) -> AriaNode:
+    """The node of ``element``, given the nodes of its visible child
+    elements."""
     node_type = get_aria_node_type(element)
     node = AriaNode(
         type=node_type,
         role=get_aria_role(element),
-        name=get_accessible_name(element),
+        name=_accessible_name(element, index),
         original_element=element,
     )
 
@@ -253,12 +281,7 @@ def build_aria_node(element: VElement) -> AriaNode:
     elif element.get_attribute("value") != "":
         node.value_text = element.get_attribute("value")
 
-    for child in element.children:
-        if not isinstance(child, VElement):
-            continue
-        if not is_probably_visible(child):
-            continue
-        child_node = build_aria_node(child)
+    for child_node in child_nodes:
         if (
             child_node.name != ""
             or child_node.type != "generic"
@@ -276,16 +299,23 @@ def _is_insignificant(node: AriaNode) -> bool:
 
 def count_aria_nodes(node: Optional[AriaNode]) -> int:
     """aria.go:463-475."""
-    if node is None:
-        return 0
-    return 1 + sum(count_aria_nodes(c) for c in node.children)
+    count = 0
+    stack = [node] if node is not None else []
+    while stack:
+        count += 1
+        stack.extend(stack.pop().children)
+    return count
 
 
 def compress_aria_tree(node: Optional[AriaNode]) -> Optional[AriaNode]:
     """aria.go:486-770."""
     if node is None:
         return None
+    return fold(node, lambda n: n.children, _compress)
 
+
+def _compress(node: AriaNode, compressed: Sequence[AriaNode]) -> AriaNode:
+    """The compression of ``node``, given its children's."""
     if not node.children:
         if node.type == "text" and node.name.strip() == "":
             return AriaNode(
@@ -294,12 +324,12 @@ def compress_aria_tree(node: Optional[AriaNode]) -> Optional[AriaNode]:
             )
         return node
 
-    processed: list[AriaNode] = []
-    for child in node.children:
-        compressed = compress_aria_tree(child)
-        if compressed is not None and not _is_insignificant(compressed):
-            if compressed.type != "text" or compressed.name.strip() != "":
-                processed.append(compressed)
+    processed = [
+        c
+        for c in compressed
+        if not _is_insignificant(c)
+        and (c.type != "text" or c.name.strip() != "")
+    ]
 
     # text node with one significant child (aria.go:517-537)
     if node.type == "text" and len(processed) == 1:
@@ -461,33 +491,35 @@ def _format_float(v: float) -> str:
     return s
 
 
-def _node_to_string(node: Optional[AriaNode], indent: int, out: list[str]) -> None:
-    """aria.go:871-957."""
-    if node is None:
-        return
-    pad = "  " * indent
-    line = f"{pad}{node.type}"
-    if node.name != "":
-        line += f": {node.name}"
-    out.append(line + "\n")
-    if node.level > 0:
-        out.append(f"{pad}  level: {node.level}\n")
-    for attr in ("checked", "selected", "expanded", "disabled", "required"):
-        val = getattr(node, attr)
-        if val is not None:
-            out.append(f"{pad}  {attr}: {'true' if val else 'false'}\n")
-    if node.value_min is not None or node.value_max is not None or node.value_text:
-        out.append(f"{pad}  value:\n")
-        if node.value_min is not None:
-            out.append(f"{pad}    min: {_format_float(node.value_min)}\n")
-        if node.value_max is not None:
-            out.append(f"{pad}    max: {_format_float(node.value_max)}\n")
-        if node.value_text:
-            out.append(f"{pad}    text: {node.value_text}\n")
-    if node.children:
-        out.append(f"{pad}  children:\n")
-        for child in node.children:
-            _node_to_string(child, indent + 2, out)
+def _node_to_string(root: AriaNode, out: list[str]) -> None:
+    """aria.go:871-957, pre-order with an explicit stack."""
+    stack = [(root, 0)]
+    while stack:
+        node, indent = stack.pop()
+        pad = "  " * indent
+        line = f"{pad}{node.type}"
+        if node.name != "":
+            line += f": {node.name}"
+        out.append(line + "\n")
+        if node.level > 0:
+            out.append(f"{pad}  level: {node.level}\n")
+        for attr in ("checked", "selected", "expanded", "disabled", "required"):
+            val = getattr(node, attr)
+            if val is not None:
+                out.append(f"{pad}  {attr}: {'true' if val else 'false'}\n")
+        if node.value_min is not None or node.value_max is not None or node.value_text:
+            out.append(f"{pad}  value:\n")
+            if node.value_min is not None:
+                out.append(f"{pad}    min: {_format_float(node.value_min)}\n")
+            if node.value_max is not None:
+                out.append(f"{pad}    max: {_format_float(node.value_max)}\n")
+            if node.value_text:
+                out.append(f"{pad}    text: {node.value_text}\n")
+        if node.children:
+            out.append(f"{pad}  children:\n")
+            stack.extend(
+                (child, indent + 2) for child in reversed(node.children)
+            )
 
 
 def aria_tree_to_string(tree: Optional[AriaTree]) -> str:
@@ -495,5 +527,5 @@ def aria_tree_to_string(tree: Optional[AriaTree]) -> str:
     if tree is None or tree.root is None:
         return ""
     out: list[str] = []
-    _node_to_string(tree.root, 0, out)
+    _node_to_string(tree.root, out)
     return "".join(out)

@@ -143,9 +143,10 @@ class DocIndex:
         inserted before every child after the first *whenever accumulated
         text is non-empty* — even if that child then contributes nothing
         (faithful to the Go loop structure at dom_utils.go:134-148). Child
-        elements recurse with normalize=False and are therefore trimmed at
-        every level; the ``\\s{2,}``→" " collapse (ASCII \\s, RE2 parity)
-        applies only at this level when ``normalize_spaces`` is True.
+        elements take their own inner text with normalize=False and are
+        therefore trimmed at every level; the ``\\s{2,}``→" " collapse
+        (ASCII \\s, RE2 parity) applies only at this level when
+        ``normalize_spaces`` is True.
         """
         if normalize_spaces:
             text = self._normalized.get(node)
@@ -154,13 +155,20 @@ class DocIndex:
                     self.inner_text(node)
                 )
             return text
-        text = self._text.get(node)
+        memo = self._text
+        text = memo.get(node)
         if text is not None:
             return text
         if isinstance(node, VText):
-            text = node.text_content
-        else:
-            children = node.children
+            text = memo[node] = node.text_content.strip()
+            return text
+        # post-order over the element descendants not memoized yet: an
+        # element is joined once all its child elements are. A child of
+        # the leaf shapes below is joined in place, off the stack.
+        stack = [node]
+        while stack:
+            element = stack[-1]
+            children = element.children
             if not children:
                 text = ""
             elif len(children) == 1 and isinstance(children[0], VText):
@@ -170,6 +178,7 @@ class DocIndex:
             else:
                 parts: list[str] = []
                 empty = True
+                pending = False
                 for i, child in enumerate(children):
                     if i > 0 and not empty:
                         parts.append(" ")
@@ -177,14 +186,29 @@ class DocIndex:
                         parts.append(child.text_content)
                         if child.text_content:
                             empty = False
-                    else:
-                        child_text = self.inner_text(child)
-                        if child_text != "":
-                            parts.append(child_text)
-                            empty = False
+                        continue
+                    child_text = memo.get(child)
+                    if child_text is None:
+                        kids = child.children
+                        if not kids:
+                            child_text = memo[child] = ""
+                        elif len(kids) == 1 and isinstance(kids[0], VText):
+                            child_text = kids[0].text_content.strip()
+                            memo[child] = child_text
+                        else:
+                            stack.append(child)
+                            pending = True
+                            continue
+                    if child_text != "":
+                        parts.append(child_text)
+                        empty = False
+                if pending:
+                    # joined again once the pushed children are
+                    continue
                 text = "".join(parts)
-        text = self._text[node] = text.strip()
-        return text
+            stack.pop()
+            memo[element] = text.strip()
+        return memo[node]
 
     def link_density(self, element: VElement) -> float:
         """Ratio of (discounted) link-text bytes to total text bytes

@@ -7,7 +7,6 @@ options/article structs (options.go:21-49, article.go:12-26).
 
 from __future__ import annotations
 
-import sys
 from dataclasses import dataclass, field, replace
 from typing import Optional
 
@@ -34,12 +33,7 @@ __all__ = [
     "find_structural_elements",
     "add_significant_elements_by_class_or_id",
     "create_extractor",
-    "ensure_recursion_headroom",
 ]
-
-# the recursive inner-text walk and the serializers need headroom beyond
-# the 1000-frame default on deeply nested documents; parsing is iterative
-_RECURSION_LIMIT = 20000
 
 # core.go:282-326 significant class/id substrings
 _SIGNIFICANT_PATTERNS = (
@@ -125,14 +119,6 @@ class ReadabilityArticle:
         )
 
 
-def ensure_recursion_headroom() -> None:
-    """Raise this interpreter's recursion limit to ``_RECURSION_LIMIT``
-    (never lower it). Called by both per-document entry points: the
-    library ``extract`` and the extraction loop."""
-    if sys.getrecursionlimit() < _RECURSION_LIMIT:
-        sys.setrecursionlimit(_RECURSION_LIMIT)
-
-
 def extract(
     html: str, options: Optional[ReadabilityOptions] = None
 ) -> ReadabilityArticle:
@@ -141,7 +127,6 @@ def extract(
     The reference defaults ForcedPageType to "article" (core.go:46-47) on
     its by-value copy of Options (core.go:25); ``replace`` makes the same
     copy, so the default never leaks into the caller's instance."""
-    ensure_recursion_headroom()
     options = options or ReadabilityOptions()
     doc = parse_html(html, "")
     preprocess_document(doc)

@@ -5,8 +5,10 @@ Ports /root/reference/format.go:76-315.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from .regexps import BLOCK_ELEMENTS, SELF_CLOSING_TAGS
-from .vdom import VElement, VText
+from .vdom import VElement, VNode, VText, child_nodes, fold
 
 __all__ = [
     "to_html",
@@ -39,43 +41,48 @@ def to_html(element: VElement | None) -> str:
     """
     if element is None:
         return ""
-    tag_name = element.tag_name
+    return fold(element, child_nodes, _html)
 
+
+def _html(node: VNode, children: Sequence[str]) -> str:
+    if isinstance(node, VText):
+        return escape_html(node.text_content)
+    if not isinstance(node, VElement):
+        return ""
+    tag_name = node.tag_name
     if tag_name == "span":
-        parts = []
-        for child in element.children:
-            if isinstance(child, VText):
-                parts.append(escape_html(child.text_content))
-            elif isinstance(child, VElement):
-                parts.append(to_html(child))
-        return "".join(parts)
+        return "".join(children)
 
     attrs = " ".join(
         f'{key}="{escape_html(value)}"'
-        for key, value in element.attributes.items()
+        for key, value in node.attributes.items()
         if key != "class"
     )
 
-    if tag_name in SELF_CLOSING_TAGS and not element.children:
+    if tag_name in SELF_CLOSING_TAGS and not node.children:
         if attrs:
             return f"<{tag_name} {attrs}/>"
         return f"<{tag_name}/>"
 
-    parts = [f"<{tag_name} {attrs}>" if attrs else f"<{tag_name}>"]
-    for child in element.children:
-        if isinstance(child, VText):
-            parts.append(escape_html(child.text_content))
-        elif isinstance(child, VElement):
-            parts.append(to_html(child))
-    parts.append(f"</{tag_name}>")
-    return "".join(parts)
+    start = f"<{tag_name} {attrs}>" if attrs else f"<{tag_name}>"
+    return f"{start}{''.join(children)}</{tag_name}>"
 
 
 def stringify(element: VElement | None) -> str:
     """Readable plain text with block-level newlines (format.go:169-236)."""
     if element is None:
         return ""
-    tag_name = element.tag_name
+    return fold(element, child_nodes, _stringify)
+
+
+def _stringify(node: VNode, children: Sequence[str]) -> str:
+    # a text node's trimmed text ends in neither a space nor a newline,
+    # so the rule below gives it its separating space
+    if isinstance(node, VText):
+        return node.text_content.strip()
+    if not isinstance(node, VElement):
+        return ""
+    tag_name = node.tag_name
     if tag_name == "br":
         return "\n"
     if tag_name == "hr":
@@ -85,22 +92,14 @@ def stringify(element: VElement | None) -> str:
     parts: list[str] = []
     if is_block:
         parts.append("\n")
-
-    for child in element.children:
-        if isinstance(child, VText):
-            trimmed = child.text_content.strip()
-            if trimmed != "":
-                parts.append(trimmed)
-                parts.append(" ")
-        elif isinstance(child, VElement):
-            child_result = stringify(child)
-            parts.append(child_result)
-            if (
-                len(child_result) > 0
-                and not child_result.endswith(" ")
-                and not child_result.endswith("\n")
-            ):
-                parts.append(" ")
+    for child_result in children:
+        parts.append(child_result)
+        if (
+            len(child_result) > 0
+            and not child_result.endswith(" ")
+            and not child_result.endswith("\n")
+        ):
+            parts.append(" ")
 
     result = "".join(parts)
     if result.endswith(" "):
@@ -126,15 +125,13 @@ def extract_text_content(element: VElement | None) -> str:
     if element is None:
         return ""
     parts: list[str] = []
-
-    def walk(el: VElement) -> None:
-        for child in el.children:
-            if isinstance(child, VText):
-                parts.append(child.text_content)
-            elif isinstance(child, VElement):
-                walk(child)
-
-    walk(element)
+    stack: list[VNode] = [element]
+    while stack:
+        node = stack.pop()
+        if isinstance(node, VText):
+            parts.append(node.text_content)
+        elif isinstance(node, VElement):
+            stack.extend(reversed(node.children))
     return "".join(parts)
 
 

@@ -15,9 +15,12 @@ says not to copy).
 from __future__ import annotations
 
 import re
+from collections.abc import Sequence
+from itertools import islice
 from typing import Optional
 
-from .vdom import VElement, VNode, VText
+from .fmt import extract_text_content
+from .vdom import VElement, VNode, VText, fold
 
 __all__ = ["to_markdown", "escape_markdown"]
 
@@ -46,6 +49,8 @@ _IGNORED_TAGS = frozenset(
     "embed applet link meta title svg".split()
 )
 _HEADING_LEVEL = {f"h{i}": i for i in range(1, 7)}
+# tags whose conversion reads no child conversion
+_LEAF_TAGS = frozenset(("pre", "img", "hr", "br")) | _IGNORED_TAGS
 
 
 def escape_markdown(text: str) -> str:
@@ -85,21 +90,46 @@ def _join_parts(parts: list[str]) -> str:
     return "".join(out)
 
 
-def _all_text(node: VNode) -> str:
-    """Raw recursive text (markdown.go:89-109)."""
-    if isinstance(node, VText):
-        return node.text_content
-    if isinstance(node, VElement):
-        return "".join(_all_text(c) for c in node.children)
-    return ""
+def _children(item: tuple) -> list[tuple]:
+    """The (node, parent_tag, depth) items whose conversions ``_convert``
+    reads for ``item``: each tag converts each child it uses once."""
+    node, _, depth = item
+    if not isinstance(node, VElement):
+        return []
+    tag = node.tag_name
+    if tag in _LEAF_TAGS:
+        return []
+    if tag in ("ul", "ol"):
+        return [
+            (child, tag, depth + 1)
+            for child in node.children
+            if isinstance(child, VElement) and child.tag_name == "li"
+        ]
+    if tag == "li":
+        return [
+            (child, tag, depth + 1 if _is_list(child) else depth)
+            for child in node.children
+        ]
+    if tag == "table":
+        return [
+            (cell, cell.tag_name, depth + 1)
+            for row in _table_rows(node)
+            for cell in row
+        ]
+    child_depth = depth + 1 if tag == "blockquote" else depth
+    return [(child, tag, child_depth) for child in node.children]
 
 
-def _convert(
-    node: VNode, parent_tag: str, depth: int, is_first_child: bool
-) -> str:
-    """markdown.go:120-525."""
+def _is_list(node: VNode) -> bool:
+    return isinstance(node, VElement) and node.tag_name in ("ul", "ol")
+
+
+def _convert(item: tuple, results: Sequence[str]) -> str:
+    """markdown.go:120-525: the conversion of ``item`` from the
+    conversions of ``_children(item)``."""
+    node, parent_tag, depth = item
     if isinstance(node, VText):
-        if parent_tag in ("pre", "code"):
+        if parent_tag == "code":
             return node.text_content
         text = _SPACE_RUN.sub(" ", node.text_content)
         if text == "":
@@ -109,44 +139,6 @@ def _convert(
         return ""
 
     tag = node.tag_name
-    child_depth = depth + 1 if tag in ("ul", "ol", "blockquote") else depth
-    children_results = [
-        _convert(child, tag, child_depth, i == 0)
-        for i, child in enumerate(node.children)
-    ]
-    children_md = _join_parts(children_results)
-    trimmed = children_md.strip()
-
-    if tag in _HEADING_LEVEL:
-        return f"{'#' * _HEADING_LEVEL[tag]} {trimmed}\n\n"
-
-    if tag == "p":
-        return f"{trimmed}\n\n" if trimmed else ""
-
-    if tag in ("strong", "b"):
-        return f"**{children_md}**"
-    if tag in ("em", "i"):
-        return f"*{children_md}*"
-
-    if tag == "code":
-        if parent_tag == "pre":
-            return children_md
-        content = children_md
-        longest = max(
-            (len(m) for m in _BACKTICK_RUN.findall(content)), default=0
-        )
-        delimiter = "`" * (longest + 1)
-        if _ONLY_BACKTICKS.match(content) and len(content) >= len(delimiter):
-            delimiter = "`" * (len(content) + 1)
-        needs_padding = (
-            content.startswith("`")
-            or content.endswith("`")
-            or bool(_ONLY_BACKTICKS.match(content))
-            or content.strip() == ""
-        )
-        final = f" {content} " if needs_padding else content
-        return f"{delimiter}{final}{delimiter}"
-
     if tag == "pre":
         code_child: Optional[VElement] = next(
             (
@@ -156,7 +148,9 @@ def _convert(
             ),
             None,
         )
-        raw = _all_text(code_child if code_child is not None else node)
+        raw = extract_text_content(
+            code_child if code_child is not None else node
+        )
         lang = ""
         if code_child is not None:
             m = _LANG_CLASS.search(code_child.attributes.get("class", ""))
@@ -166,23 +160,8 @@ def _convert(
         fence = "````" if lang in ("markdown", "md") else "```"
         return f"{fence}{lang}\n{cleaned}\n{fence}"
 
-    if tag == "blockquote":
-        content = children_md.strip()
-        if not content:
-            return ""
-        quoted = [
-            ">" if line.strip() == "" else f"> {line}"
-            for line in content.split("\n")
-        ]
-        return "\n".join(quoted) + "\n\n"
-
     if tag in ("ul", "ol"):
-        items = []
-        for child in node.children:
-            if isinstance(child, VElement) and child.tag_name == "li":
-                md = _convert(child, tag, depth + 1, False)
-                if md.strip():
-                    items.append(md)
+        items = [md for md in results if md.strip()]
         if not items:
             return ""
         list_content = "\n".join(items)
@@ -198,13 +177,12 @@ def _convert(
         marker = "1." if parent_tag == "ol" else "-"
         main_parts: list[str] = []
         nested_parts: list[str] = []
-        for child in node.children:
-            if isinstance(child, VElement) and child.tag_name in ("ul", "ol"):
-                nested = _convert(child, tag, depth + 1, False)
-                if nested:
-                    nested_parts.append(_TRAILING_NL.sub("", nested))
+        for child, md in zip(node.children, results):
+            if _is_list(child):
+                if md:
+                    nested_parts.append(_TRAILING_NL.sub("", md))
             else:
-                main_parts.append(_convert(child, tag, depth, False))
+                main_parts.append(md)
         main = _join_parts(main_parts).strip()
         result = f"{marker} {main}"
         if nested_parts:
@@ -212,18 +190,6 @@ def _convert(
                 result += "\n"
             result += "\n".join(nested_parts)
         return result
-
-    if tag == "a":
-        href = node.attributes.get("href", "")
-        link_content = children_md.replace("\n", " ").strip()
-        if len(node.children) == 1:
-            only = node.children[0]
-            if isinstance(only, VElement) and only.tag_name == "img":
-                alt = only.attributes.get("alt", "")
-                src = only.attributes.get("src", "")
-                display = alt if alt.strip() else src
-                return f"[{display}]({href})"
-        return f"[{link_content}]({href})"
 
     if tag == "img":
         alt = escape_markdown(node.attributes.get("alt", ""))
@@ -240,18 +206,74 @@ def _convert(
         return "  \n"
 
     if tag == "table":
-        return _convert_table(node, depth)
+        return _convert_table(node, [md.strip() for md in results])
 
     if tag in _IGNORED_TAGS:
         return ""
+
+    children_md = _join_parts(results)
+    trimmed = children_md.strip()
+
+    if tag in _HEADING_LEVEL:
+        return f"{'#' * _HEADING_LEVEL[tag]} {trimmed}\n\n"
+
+    if tag == "p":
+        return f"{trimmed}\n\n" if trimmed else ""
+
+    if tag in ("strong", "b"):
+        return f"**{children_md}**"
+    if tag in ("em", "i"):
+        return f"*{children_md}*"
+
+    if tag == "code":
+        content = children_md
+        longest = max(
+            (len(m) for m in _BACKTICK_RUN.findall(content)), default=0
+        )
+        delimiter = "`" * (longest + 1)
+        if _ONLY_BACKTICKS.match(content) and len(content) >= len(delimiter):
+            delimiter = "`" * (len(content) + 1)
+        needs_padding = (
+            content.startswith("`")
+            or content.endswith("`")
+            or bool(_ONLY_BACKTICKS.match(content))
+            or content.strip() == ""
+        )
+        final = f" {content} " if needs_padding else content
+        return f"{delimiter}{final}{delimiter}"
+
+    if tag == "blockquote":
+        content = children_md.strip()
+        if not content:
+            return ""
+        quoted = [
+            ">" if line.strip() == "" else f"> {line}"
+            for line in content.split("\n")
+        ]
+        return "\n".join(quoted) + "\n\n"
+
+    if tag == "a":
+        href = node.attributes.get("href", "")
+        link_content = children_md.replace("\n", " ").strip()
+        if len(node.children) == 1:
+            only = node.children[0]
+            if isinstance(only, VElement) and only.tag_name == "img":
+                alt = only.attributes.get("alt", "")
+                src = only.attributes.get("src", "")
+                display = alt if alt.strip() else src
+                return f"[{display}]({href})"
+        return f"[{link_content}]({href})"
 
     if tag in _BLOCK_TAGS:
         return f"{trimmed}\n\n" if trimmed else ""
     return children_md
 
 
-def _convert_table(node: VElement, depth: int) -> str:
-    """markdown.go:416-506."""
+def _table_rows(node: VElement) -> list[list[VElement]]:
+    """The cells a table renders, by row: first the header (the ``th`` of
+    the first ``thead`` row, or none), then the ``td``/``th`` of each
+    ``tbody`` row, or of each row right under the table
+    (markdown.go:416-506)."""
     thead = tbody = None
     for child in node.children:
         if isinstance(child, VElement):
@@ -260,33 +282,37 @@ def _convert_table(node: VElement, depth: int) -> str:
             elif child.tag_name == "tbody":
                 tbody = child
 
-    def cell(el: VElement) -> str:
-        return _convert(el, el.tag_name, depth + 1, False).strip()
-
-    header_row: list[str] = []
-    max_cols = 0
+    header: list[VElement] = []
     if thead is not None:
         for child in thead.children:
             if isinstance(child, VElement) and child.tag_name == "tr":
-                header_row = [
-                    cell(th)
+                header = [
+                    th
                     for th in child.children
                     if isinstance(th, VElement) and th.tag_name == "th"
                 ]
-                max_cols = max(max_cols, len(header_row))
                 break  # first tr only
 
-    body_rows: list[list[str]] = []
     container = tbody if tbody is not None else node
-    for child in container.children:
-        if isinstance(child, VElement) and child.tag_name == "tr":
-            row = [
-                cell(td)
-                for td in child.children
-                if isinstance(td, VElement) and td.tag_name in ("td", "th")
-            ]
-            body_rows.append(row)
-            max_cols = max(max_cols, len(row))
+    return [header] + [
+        [
+            td
+            for td in child.children
+            if isinstance(td, VElement) and td.tag_name in ("td", "th")
+        ]
+        for child in container.children
+        if isinstance(child, VElement) and child.tag_name == "tr"
+    ]
+
+
+def _convert_table(node: VElement, cells: list[str]) -> str:
+    """markdown.go:416-506, from the trimmed conversions of the cells
+    ``_table_rows`` lists, in its order."""
+    converted = iter(cells)
+    header_row, *body_rows = [
+        list(islice(converted, len(row))) for row in _table_rows(node)
+    ]
+    max_cols = max(map(len, (header_row, *body_rows)))
 
     out: list[str] = []
     separator = " | ".join(["---"] * max_cols)
@@ -309,5 +335,5 @@ def to_markdown(element: Optional[VElement]) -> str:
     """Main entry (markdown.go:536-551)."""
     if element is None:
         return ""
-    markdown = _convert(element, "", 0, True).strip()
+    markdown = fold((element, "", 0), _children, _convert).strip()
     return _MANY_NL.sub("\n\n", markdown)

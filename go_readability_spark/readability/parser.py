@@ -86,7 +86,9 @@ from __future__ import annotations
 import re
 from html import unescape
 
-from .vdom import VDocument, VElement, VText, detach, last_index
+from .vdom import (
+    VDocument, VElement, VText, child_nodes, detach, fold, last_index,
+)
 
 __all__ = [
     "parse_html",
@@ -1099,6 +1101,10 @@ def serialize_to_html(node) -> str:
     """Serialize a node with sorted attributes (parser.go:129-201)."""
     if node is None:
         return ""
+    return fold(node, child_nodes, _serialize)
+
+
+def _serialize(node, children) -> str:
     if isinstance(node, VText):
         return _escape_text(node.text_content)
     if not isinstance(node, VElement):
@@ -1111,8 +1117,7 @@ def serialize_to_html(node) -> str:
         parts.append("/>")
         return "".join(parts)
     parts.append(">")
-    for child in node.children:
-        parts.append(serialize_to_html(child))
+    parts.extend(children)
     parts.append(f"</{node.tag_name}>")
     return "".join(parts)
 

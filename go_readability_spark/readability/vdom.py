@@ -8,12 +8,16 @@ materialized as Spark rows.
 
 from __future__ import annotations
 
-from typing import Optional, Union
+from collections.abc import Callable, Sequence
+from typing import Optional, TypeVar, Union
 
 __all__ = [
-    "VText", "VElement", "VDocument", "VNode", "is_element", "is_text",
-    "detach", "last_index",
+    "VText", "VElement", "VDocument", "VNode", "detach", "last_index",
+    "child_nodes", "fold",
 ]
+
+T = TypeVar("T")
+R = TypeVar("R")
 
 
 class VText:
@@ -109,12 +113,39 @@ def detach(node: VNode) -> None:
             del parent.children[i]
 
 
-def is_element(node: object) -> bool:
-    return isinstance(node, VElement)
+def child_nodes(node: VNode) -> list[VNode]:
+    """An element's children; a text node has none."""
+    return node.children if isinstance(node, VElement) else []
 
 
-def is_text(node: object) -> bool:
-    return isinstance(node, VText)
+def fold(
+    root: T,
+    children: Callable[[T], Sequence[T]],
+    combine: Callable[[T, Sequence[R]], R],
+) -> R:
+    """Post-order fold of the tree under ``root``, with an explicit stack
+    instead of one Python frame per level: ``combine(item, results)``
+    gets the results of ``children(item)``, in order, and returns the
+    result of ``item``. Items need not be nodes, so a walker can carry
+    its per-level state (a parent tag, a depth) in them."""
+    # the open ancestors of the current item: (item, its children not
+    # yet taken, the results of those taken)
+    frames: list = []
+    item, pending, done = root, iter(children(root)), []
+    while True:
+        for kid in pending:
+            kids = children(kid)
+            if kids:
+                frames.append((item, pending, done))
+                item, pending, done = kid, iter(kids), []
+                break
+            done.append(combine(kid, ()))
+        else:
+            result = combine(item, done)
+            if not frames:
+                return result
+            item, pending, done = frames.pop()
+            done.append(result)
 
 
 def create_element(tag_name: str) -> VElement:

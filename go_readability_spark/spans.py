@@ -90,29 +90,33 @@ def element_to_spans(root: Optional[VElement]) -> list[dict]:
                 {"kind": KIND_TEXT, "text": text, "media_ref": "", "order": len(out)}
             )
 
-    def walk(el: VElement) -> None:
-        if el.tag_name == MEDIA_TAG:
+    # pre-order, with a None pushed after a block element's children:
+    # the flush on leaving it
+    stack: list = [root]
+    pop = stack.pop
+    extend = stack.extend
+    while stack:
+        node = pop()
+        if node is None:
             flush()
-            out.append(
-                {
-                    "kind": KIND_MEDIA,
-                    "text": el.get_attribute("alt"),
-                    "media_ref": el.get_attribute("ref"),
-                    "order": len(out),
-                }
-            )
-            return
-        is_block = el.tag_name in BLOCK_ELEMENTS
-        if is_block:
-            flush()
-        for child in el.children:
-            if isinstance(child, VText):
-                buf.append(child.text_content)
-            elif isinstance(child, VElement):
-                walk(child)
-        if is_block:
-            flush()
-
-    walk(root)
+        elif isinstance(node, VText):
+            buf.append(node.text_content)
+        elif isinstance(node, VElement):
+            tag = node.tag_name
+            if tag == MEDIA_TAG:
+                flush()
+                out.append(
+                    {
+                        "kind": KIND_MEDIA,
+                        "text": node.get_attribute("alt"),
+                        "media_ref": node.get_attribute("ref"),
+                        "order": len(out),
+                    }
+                )
+                continue
+            if tag in BLOCK_ELEMENTS:
+                flush()
+                stack.append(None)
+            extend(node.children[::-1])
     flush()
     return out

@@ -99,6 +99,24 @@ def test_no_global_statement_in_readability():
     assert found == []
 
 
+def test_no_setrecursionlimit_in_the_package():
+    """The library never changes the interpreter's recursion limit: its
+    tree walkers keep explicit stacks, so no call to
+    ``setrecursionlimit`` appears anywhere in the package."""
+    package = pathlib.Path(__file__).parent.parent / "go_readability_spark"
+    paths = sorted(package.rglob("*.py"))
+    found = [
+        f"{path.relative_to(package)}:{node.lineno}"
+        for path in paths
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", getattr(node.func, "id", None))
+        == "setrecursionlimit"
+    ]
+    assert len(paths) > 30
+    assert found == []
+
+
 def test_is_probably_visible():
     assert is_probably_visible(el("div"))
     assert not is_probably_visible(el("div", {"style": "display: none;"}))

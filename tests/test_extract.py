@@ -275,3 +275,49 @@ def test_extract_has_the_loops_recursion_headroom():
     for name in ("candidate_count", "top_score", "link_density",
                  "is_probably_content"):
         assert getattr(article.metrics, name) == row["metrics"][name], name
+
+
+def test_deep_nesting_under_the_default_recursion_limit():
+    """5,000 nested ``<div>`` levels extract, rendered or not, and
+    serialize, name and convert, under the interpreter's default limit of
+    1,000, which the library leaves as it found it."""
+    from go_readability_spark.operators.extract import extract_batch_rows
+    from go_readability_spark.readability import (
+        aria_tree_to_string,
+        build_aria_tree,
+        serialize_to_html,
+        to_markdown,
+    )
+    from go_readability_spark.spans import KIND_TEXT
+
+    depth = 5000
+    html = "<div>text, more " * depth
+    spans = [{"kind": KIND_TEXT, "text": html, "media_ref": "", "offset": 0}]
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(1000)
+    try:
+        plain, rendered = (
+            extract_batch_rows(["deep"], [spans], [len(html)], render=render)[0]
+            for render in (False, True)
+        )
+        assert sys.getrecursionlimit() == 1000
+        doc = parse_html(html, "")
+        serialized = serialize_to_html(doc.body)
+        aria = aria_tree_to_string(build_aria_tree(doc))
+        markdown = to_markdown(doc.body)
+        assert sys.getrecursionlimit() == 1000
+    finally:
+        sys.setrecursionlimit(limit)
+    for row in (plain, rendered):
+        assert row["error"] is None
+        assert row["meta"]["node_count"] == 2 * depth + 1
+        assert row["spans_out"] == [
+            {"kind": KIND_TEXT, "text": "text, more ", "media_ref": "",
+             "order": i}
+            for i in range(depth)
+        ]
+    assert rendered["markdown"] == " ".join(["text, more"] * depth)
+    assert rendered["html"].count("<div>") == depth
+    assert serialized == f"<body>{html}{'</div>' * depth}</body>"
+    assert aria.startswith("text: text, more") and aria.count("\n") == 1
+    assert markdown == " ".join(["text, more"] * depth)

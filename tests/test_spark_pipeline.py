@@ -569,6 +569,20 @@ class TestManifestRecords:
         assert [r["part"] for r in read_manifest(spark, str(man_dir)).collect()] == [0]
         assert pq.read_table(str(man_dir)).column("part").to_pylist() == [0]
 
+    def test_next_run_sweeps_a_leftover_temp_file(self, spark, tmp_path):
+        """A run killed while marking part 1 left its temp file; the next
+        run removes it, and the records it publishes stay."""
+        from go_readability_spark.plans.checkpoint import mark_partition_done
+
+        man_dir = tmp_path / "man"
+        mark_partition_done(spark, str(man_dir), 0, self.STATS, 2)
+        (man_dir / ".part=1.parquet.12345.tmp").write_bytes(b"PAR1 torn")
+        run_checkpointed(
+            spark, corpus_df(spark, 4, num_partitions=2), str(tmp_path / "out"),
+            str(man_dir), n_parts=2, num_partitions=2,
+        )
+        assert sorted(os.listdir(man_dir)) == ["part=0.parquet", "part=1.parquet"]
+
     def test_pyarrow_reads_one_row_per_part(self, spark, tmp_path):
         import pyarrow.parquet as pq
 
